@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Session factory + table access for the graft engine.
   *
@@ -12,6 +14,27 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * ones we would ship on a real cluster (AQE on, skew-join handling on);
   * `shufflePartitions` is sized by the caller (32 for local[32] testing,
   * thousands on a 1000-executor cluster).
+  *
+  * TABLE SCHEMA CACHE. A bare `spark.read.parquet(path)` infers the
+  * schema with a one-task Spark job that reads a footer — once per input
+  * table per query, re-reading a footer every earlier query already
+  * read. [[tableSchema]] infers each table's schema once per JVM and
+  * [[rawTable]] reads with it (`spark.read.schema(..)`), so a repeated
+  * read resolves without a job. An entry is keyed on:
+  *  - the qualified table path;
+  *  - the table's file status (length and modification time), or the
+  *    statuses of its immediate children when the table is a directory —
+  *    a file rewritten in place, or a child added or removed, re-infers;
+  *  - the session's schema-affecting settings: every
+  *    `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` entry of the
+  *    runtime conf, plus `spark.sql.caseSensitive` — a session reading
+  *    with, say, a different `nanosAsLong` re-infers, while a clone with
+  *    the same conf (`Streams.noEvictionDrainSession`) shares the entry.
+  * The key holds no session, so the cache keeps nothing session-scoped
+  * alive; it is bounded (LRU). There is no knob to turn it off: a hit
+  * returns by construction the schema that inference would return for
+  * the same bytes under the same settings, and a path whose status
+  * cannot be read takes the uncached read (and its error) unchanged.
   */
 object GraftSession {
 
@@ -116,7 +139,66 @@ object GraftSession {
     * streaming frames too).
     */
   def rawTable(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    spark.read.schema(tableSchema(spark, sfDir, name))
+      .parquet(tablePath(sfDir, name))
+
+  /** The on-disk schema of a table, as [[rawTable]] reads it — inferred
+    * on the first call for a given file state and conf, then served from
+    * the table schema cache (see the object scaladoc).
+    */
+  def tableSchema(spark: SparkSession, sfDir: String,
+                  name: String): StructType = {
+    val path = tablePath(sfDir, name)
+    def infer(): StructType = spark.read.parquet(path).schema
+    SchemaCache.key(spark, path) match {
+      case Some(k) => SchemaCache.getOrInfer(k, infer())
+      case None => infer()
+    }
+  }
+
+  private def tablePath(sfDir: String, name: String): String =
+    s"$sfDir/$name.parquet"
+
+  /** JVM-wide, bounded LRU map from (path, file state, parquet conf) to
+    * the schema inferred for it. Inference runs outside the lock: two
+    * concurrent misses on one key both infer and store the same schema.
+    */
+  private object SchemaCache {
+    final case class Key(path: String, files: Seq[(String, Long, Long)],
+                         conf: Seq[(String, String)])
+
+    private val MaxEntries = 256
+    private val entries =
+      new java.util.LinkedHashMap[Key, StructType](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[Key, StructType]): Boolean =
+          size() > MaxEntries
+      }
+
+    def key(spark: SparkSession, path: String): Option[Key] =
+      try {
+        val p = new Path(path)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val st = fs.getFileStatus(p)
+        val files = if (st.isDirectory) fs.listStatus(p).toSeq else Seq(st)
+        def stamp(f: FileStatus) =
+          (f.getPath.getName, f.getLen, f.getModificationTime)
+        val conf = spark.conf.getAll.toSeq.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") ||
+            k.startsWith("spark.sql.legacy.parquet.")
+        }.sorted :+ ("spark.sql.caseSensitive" ->
+          spark.conf.get("spark.sql.caseSensitive", "false"))
+        Some(Key(fs.makeQualified(p).toString,
+          files.map(stamp).sorted, conf))
+      } catch { case _: java.io.IOException => None }
+
+    def getOrInfer(k: Key, infer: => StructType): StructType =
+      Option(entries.synchronized(entries.get(k))).getOrElse {
+        val s = infer
+        entries.synchronized(entries.put(k, s))
+        s
+      }
+  }
 
   /** Lenient event-time ingest: producers encode the `ts` column
     * differently across dataset versions — Long nanoseconds (legacy

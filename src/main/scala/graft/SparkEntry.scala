@@ -117,7 +117,7 @@ object SparkEntry {
   private def eventsStream(s: SparkSession, dir: String): DataFrame =
     GraftSession.normalizeEventTime(
       graft.streaming.Streams.fileSource(s, dir,
-        GraftSession.rawTable(s, dir, "events").schema,
+        GraftSession.tableSchema(s, dir, "events"),
         globFilter = Some("events.parquet")))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

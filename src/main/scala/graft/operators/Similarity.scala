@@ -551,12 +551,11 @@ object Similarity {
     // band table off the un-exploded input, and a misjudged broadcast
     // materializes the whole index as one hash relation (the NearDup
     // symdelete OOM, same shape); sort-merge spills instead. The exact
-    // cosine is computed ON THE JOIN OUTPUT STREAM (the same ndot per
-    // in-bucket collision the join-back form paid after its distinct),
-    // the threshold filters in-stream, and only the surviving
-    // (a, b, sim) rows reach the cross-band DISTINCT — sim is a
-    // deterministic function of (a, b), so distinct-then-score and
-    // score-then-distinct emit the identical row set.
+    // cosine is computed ON THE JOIN OUTPUT STREAM — one ndot per
+    // BAND-LEVEL collision, so up to bands× per distinct pair that
+    // collides in several bands (see the scaladoc) — the threshold
+    // filters in-stream, and only the surviving (a, b, sim) rows reach
+    // the cross-band dedup on (a, b) below.
     banded.select(col("band"), col("v"), col("id").as("a"),
         col("vec").as("av"), col("nrm").as("anrm"))
       .hint("merge")
