@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 /** Concurrency leg (builder tooling): run the full query registry as N
@@ -31,10 +30,7 @@ object Concurrent {
     val Array(sfDir, outDir) = args.take(2)
     val streams = sys.env.getOrElse("SPARK_GRAFT_STREAMS", "2").toInt
     require(streams >= 2, "a 1-stream run is just Verify — use that")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 

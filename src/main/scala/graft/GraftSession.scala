@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
   * declares a logical plan (DataFrame/Dataset transformations) and Catalyst
   * picks the physical strategy. Config defaults here are the scale-oriented
   * ones we would ship on a real cluster (AQE on, skew-join handling on);
-  * `shufflePartitions` is sized by the caller (32 for local[32] testing,
-  * thousands on a 1000-executor cluster).
+  * `shufflePartitions` is sized by the caller ([[local]] matches the
+  * local core count; thousands on a 1000-executor cluster).
   *
   * TABLE SCHEMA CACHE. A bare `spark.read.parquet(path)` infers the
   * schema with a one-task Spark job that reads a footer — once per input
@@ -38,12 +38,20 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
   */
 object GraftSession {
 
-  /** Build a local session for tests/benchmarks. */
-  def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession =
+  /** Build a local session for the mains and tests. `cores` defaults to
+    * env `SPARK_GRAFT_CPUS`, else the host's available processors, and
+    * the shuffle partitions to `cores`.
+    */
+  def local(cores: Int = defaultCores): SparkSession = local(cores, cores)
+
+  def local(cores: Int, shufflePartitions: Int): SparkSession =
     configure(
       SparkSession.builder().master(s"local[$cores]"),
       shufflePartitions
     ).getOrCreate()
+
+  private def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
 
   /** Apply engine defaults to any builder (local or cluster). */
   def configure(

@@ -55,9 +55,10 @@ object SparkEntry {
     * SHAPE, measured both ways this round (r18): an Association-style
     * basket rewrite (groupBy orderkey + collect_list + in-row pair
     * expansion, one exchange) was A/B'd against this self-join at
-    * sf0.1 AND at the 10× twin (graft.EdgeAB, interleaved arms, clean
-    * window). The basket arm won mildly at sf0.1 (0.75-0.83× on the
-    * pairs consumers) but lost 2.3-2.6× at 10×
+    * sf0.1 AND at the 10× twin (interleaved arms, clean window;
+    * OPTIMIZATION_r18.md §1, plans/r18/SCALE_FOCUS_sf1_*_arm.json).
+    * The basket arm won mildly at sf0.1 (0.75-0.83× on the pairs
+    * consumers) but lost 2.3-2.6× at 10×
     * (join 2.7-3.9 s vs basket 7.0-7.6 s): collect_list is an
     * ObjectHashAggregate (object buffers, no whole-stage codegen) and
     * the struct explode re-materializes every pair, while the
@@ -1821,7 +1822,7 @@ object SparkEntry {
     // q190 envelopes with a 64-point filter workload on EACH dimension
     // and count candidate files per probe — the metric that tells a
     // layout owner whether min/max skipping will actually prune at
-    // 100 TB. Probe coverage is a scan-stage sequence explode over
+    // 100 TB. Filter-probe coverage is a scan-stage sequence explode over
     // the (tiny) envelope table, never an inequality join; the file
     // total is a one-row broadcast
     // Kaplan–Meier survival per cohort: time from first to last

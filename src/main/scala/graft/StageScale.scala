@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stages an N× copy-shifted twin of a testdata directory (builder
@@ -169,8 +169,7 @@ object StageScale {
     require(args.length >= 3,
       "usage: StageScale <srcDir> <dstDir> <copies>")
     val (src, dst, copies) = (args(0), args(1), args(2).toInt)
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(dst).mkdirs()
     keyCols.toSeq.sortBy(_._1).foreach { case (t, keys) =>

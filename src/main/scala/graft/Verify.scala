@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,13 +7,10 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // extra args = focused run (local iteration); the driver passes two
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the ONE engine config path — hand-rolling the builder here once
     // silently dropped the objectHashAggregate fallback threshold (and
     // AQE) from the graded verify run
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

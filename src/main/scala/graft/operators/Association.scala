@@ -21,8 +21,8 @@ object Association {
     * extra full-table exchanges (the distinct, then both self-join
     * sides); at 100 TB those exchanges are the job. Measured identical
     * pair counts (124,225 at sf0.1) and same-or-better wall with 3
-    * fewer stages (Probe `assoc`). Shared by [[basketLift]] and
-    * [[itemCosine]].
+    * fewer stages (NOTES.md, round 13 q214 adjudication). Shared by
+    * [[basketLift]] and [[itemCosine]].
     *
     * NULL items never pair (collect_set drops nulls — matching the
     * previous a<b join semantics, where NULL compared false), and NULL

@@ -402,9 +402,10 @@ object Graph {
     // all three corners in ONE scan of the close join's output (r19):
     // the union-of-three-projections form re-EXECUTED the wedge-close
     // join per branch — only its input exchanges were shared, so the
-    // probe/merge ran 3x (TriDecomp at the 100x twin: one close pass
-    // 23 s, the union tail 76 s). explode emits the same corner
-    // multiset from a single pass, and the join runs once.
+    // probe/merge ran 3x (at the 100x twin: one close pass 23 s, the
+    // union tail 76 s; OPTIMIZATION_r19.md §4, plans/r19/TRIDECOMP_*.txt).
+    // explode emits the same corner multiset from a single pass, and
+    // the join runs once.
     val perNode = tri
       .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("n"))

@@ -373,10 +373,6 @@ object TextAnalysis {
       greatest(size(t), lit(1))
   }
 
-  def stopwordRatioOf(toks: Column, stops: Seq[String]): Column =
-    size(array_intersect_keep(toks, stops)).cast("double") /
-      greatest(size(toks), lit(1))
-
   /** Tokens of `t` that are in the literal set (keeps duplicates —
     * unlike array_intersect which dedups).
     */

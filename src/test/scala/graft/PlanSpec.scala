@@ -24,14 +24,8 @@ class PlanSpec extends SparkTestBase {
     * frame's explain shows only `Scan ExistingRDD` there. Returns
     * (result-plan string, pinned-plan strings).
     */
-  private def planWithPins(body: => DataFrame): (String, Seq[String]) = {
-    operators.Components.PinPlanCapture.start()
-    try {
-      val df = body
-      (df.queryExecution.executedPlan.toString,
-       operators.Components.PinPlanCapture.stop())
-    } finally operators.Components.PinPlanCapture.stop()
-  }
+  private def planWithPins(body: => DataFrame): (String, Seq[String]) =
+    Plan.capturePins(body.queryExecution.executedPlan.toString)
 
   test("q7 dimension lookups run as broadcast hash joins (no shuffle)") {
     val p = plan("q7_broadcast_join")
