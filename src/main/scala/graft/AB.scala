@@ -19,8 +19,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *
   * Usage: runMain graft.AB <q1,q2,...> <k=v[,k=v..]> <k=v[,k=v..]>
   *        [reps] [sfDir]
-  * e.g. graft.AB q113_pagerank spark.graft.graph.pinRounds=true
-  *        spark.graft.graph.pinRounds=false
+  * e.g. graft.AB q113_pagerank spark.sql.adaptive.enabled=true
+  *        spark.sql.adaptive.enabled=false
   */
 object AB {
   type Arm = Seq[(String, String)]

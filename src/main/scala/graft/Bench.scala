@@ -163,8 +163,7 @@ object Bench {
     // warm — exactly rep 1 vs reps 2-3 before), so medians stay
     // comparable to prior rounds' baselines. The seed is FIXED (env
     // $SPARK_GRAFT_BENCH_SHUFFLE overrides the base seed) so runs are
-    // reproducible; $SPARK_GRAFT_BENCH_ORDER=alpha restores identical
-    // alphabetical passes as the A/B diagnostic.
+    // reproducible.
     val baseOrder = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.isEmpty || only(q._1))
     val defaultSeed = 13013L
@@ -181,20 +180,8 @@ object Bench {
         }
       case None => defaultSeed
     }
-    val alphaOrder =
-      sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("alpha")
-    // $SPARK_GRAFT_BENCH_REPMODE=query restores the r12-era QUERY-MAJOR
-    // protocol (all reps back-to-back per query inside one alphabetical
-    // pass) as a diagnostic — the r13 protocol boundary has TWO
-    // components (pass order, rep structure) and isolating the era
-    // offset needs both A/B legs. Diagnostic only: query-major medians
-    // land on maximally-warm back-to-back reps and understate
-    // steady-state (see NOTES round 14).
-    val queryMajor =
-      sys.env.get("SPARK_GRAFT_BENCH_REPMODE").contains("query")
     def passOrder(pass: Int): Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      if (alphaOrder || queryMajor) baseOrder
-      else new scala.util.Random(passSeed + pass).shuffle(baseOrder)
+      new scala.util.Random(passSeed + pass).shuffle(baseOrder)
     // WARM-UP PASS (unrecorded): every query once, alphabetical, before
     // any timed sample — per-query numbers must measure the PLAN, not
     // first-call compilation (the round-12 protocol warmed only q1_agg
@@ -316,16 +303,12 @@ object Bench {
     // runTimed pass label so extra passes align with their reps.
     val passCal =
       scala.collection.mutable.LinkedHashMap[String, Double]()
-    if (queryMajor)
-      baseOrder.foreach { case (n, fn) =>
-        for (pass <- 0 until reps) runTimed(s"$pass", n, fn) }
-    else
-      for (pass <- 0 until reps) {
-        passOrder(pass).foreach { case (n, fn) => runTimed(s"$pass", n, fn) }
-        passCal(s"$pass") = HostCal.hostcalParMs(spark)
-        System.err.println(s"[bench] pass $pass hostcal_par_ms=" +
-          s"${passCal(s"$pass")}")
-      }
+    for (pass <- 0 until reps) {
+      passOrder(pass).foreach { case (n, fn) => runTimed(s"$pass", n, fn) }
+      passCal(s"$pass") = HostCal.hostcalParMs(spark)
+      System.err.println(s"[bench] pass $pass hostcal_par_ms=" +
+        s"${passCal(s"$pass")}")
+    }
 
     // ADAPTIVE RE-MEASURE: when a query's spread across passes exceeds
     // its median, at least one sample was machine contention, not the
@@ -342,7 +325,7 @@ object Bench {
       val noisyQs = passOrder(reps + extra)
         .filter { case (n, _) => !failedSet(n) && noisy(n) }
       noisyQs.foreach { case (n, fn) => runTimed(s"extra$extra", n, fn) }
-      if (noisyQs.nonEmpty && !queryMajor) {
+      if (noisyQs.nonEmpty) {
         passCal(s"extra$extra") = HostCal.hostcalParMs(spark)
         System.err.println(s"[bench] pass extra$extra hostcal_par_ms=" +
           s"${passCal(s"extra$extra")}")
@@ -416,14 +399,11 @@ object Bench {
     // than the registry (r12's end-of-round snapshot committed a 1-query
     // smoke artifact that would have silently become a 1/290 baseline)
     val nRegistry = SparkEntry.queries.size
-    val orderDesc = if (queryMajor) "\"query-major(alpha)\""
-                    else if (alphaOrder) "\"alpha\""
-                    else s""""rep-shuffled(seed=$passSeed)""""
     val (gitSha, gitDirty) = gitInfo()
     val passCalJson = passCal
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"plain":$plain,"spread":$spread,"reps_s":$repsRaw,"reps":$reps,"failed":$failed,"hostcal_ms":$hostcal,"hostcal_ms_start":$hostcalStart,"hostcal_ms_end":$hostcalEnd,"hostcal_par_ms":$hostcalPar,"hostcal_par_ms_start":$hostcalParStart,"hostcal_par_ms_end":$hostcalParEnd,"hostcal_par_ms_passes":$passCalJson,"preflight_par_ms":$preflightPar,"preflight_contended":$preflightContended,"git_sha":"$gitSha","git_dirty":$gitDirty,"n_registry":$nRegistry,"order":$orderDesc,"sf":"$sfDir"$rowsJson}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"plain":$plain,"spread":$spread,"reps_s":$repsRaw,"reps":$reps,"failed":$failed,"hostcal_ms":$hostcal,"hostcal_ms_start":$hostcalStart,"hostcal_ms_end":$hostcalEnd,"hostcal_par_ms":$hostcalPar,"hostcal_par_ms_start":$hostcalParStart,"hostcal_par_ms_end":$hostcalParEnd,"hostcal_par_ms_passes":$passCalJson,"preflight_par_ms":$preflightPar,"preflight_contended":$preflightContended,"git_sha":"$gitSha","git_dirty":$gitDirty,"n_registry":$nRegistry,"order":"rep-shuffled(seed=$passSeed)","sf":"$sfDir"$rowsJson}"""
     // DURABLE ARTIFACT: the harness records a bounded TAIL of stdout
     // (~2000 chars), and with 270+ queries the full one-line JSON
     // outgrows that window by >10x — rounds 3-9 recorded `parsed: null`

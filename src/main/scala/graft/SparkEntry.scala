@@ -3355,7 +3355,7 @@ object SparkEntry {
     // Personalized PageRank: random walk with restart to a seed set —
     // seed-relative relevance (crawl-frontier expansion), not global
     // authority; restart mass returns to seeds only, sink mass leaves
-    // (pseudo-PPR, oracle-unrollable); pageRank's pinned-round shape
+    // (pseudo-PPR, oracle-unrollable); pageRank's round shape
     "q208_personalized_pagerank" -> ((s, dir) => {
       val edges = adjacentLineEdges(s, dir)
         .where(col("src") =!= col("dst"))
@@ -3749,7 +3749,7 @@ object SparkEntry {
     // part-sequence graph — separates "links to quality" (hub) from
     // "is linked by quality" (auth); the seed-list-vs-admission split
     // PageRank alone can't express. One-row normalizer broadcasts;
-    // pinned rounds (pageRank protocol)
+    // lazy rounds over pinned bases (pageRank protocol)
     "q188_hits" -> ((s, dir) => {
       val edges = adjacentLineEdges(s, dir)
         .where(col("src") =!= col("dst"))

@@ -12,46 +12,40 @@ import org.apache.spark.storage.StorageLevel
   * iterative-graph family. The reference has no graph analog — this is
   * training-pipeline surface, like NearDup/Similarity.
   *
-  * The iterative protocol mirrors `Components.scala`: eager
-  * `localCheckpoint` per round keeps the plan O(1) instead of a
-  * k-rounds-deep lineage (the reference's analog is its
-  * materialize-between-parts protocol, runAll.py:37-44).
+  * ROUND PROTOCOL (r19). The fixed-iteration recurrences (pageRank /
+  * weighted / personalized, HITS, label propagation) reference each
+  * round's table ONCE (or twice, behind a shared exchange) in the next
+  * round, and the iteration count is a small API constant — so the
+  * rounds compose into ONE lazy plan whose single action executes the
+  * whole recurrence: no per-round eager checkpoint write, no per-round
+  * job submission, no per-round AQE session. Lineage stays
+  * O(iterations) by the fixed-count contract, and recovery rides
+  * Spark's shuffle files (stage retry recomputes only the lost stage).
+  * What pins: the multiply-scanned BASE tables (edge set / node
+  * universe / restart vector) — pinned ONCE via [[Components.pin]]
+  * (`reliable = true` for durable checkpoints), so the returned plan
+  * references LogicalRDDs whose blocks the ContextCleaner releases when
+  * the result frame dies (a bare persist would leak a CacheManager
+  * entry for the session lifetime — the r14 class). The reference's
+  * only materialization is likewise its hand-off between parts
+  * (runAll.py:37-44).
+  *
+  * Measured (r19, sf0.1 local[32]): the r18 per-round pin protocol paid
+  * ~0.5-0.9 s of pure job/checkpoint machinery per round, and the lazy
+  * rounds won or tied on every graph query at both scales with
+  * identical outputs (OPTIMIZATION_r19.md §1). Convergence-probed loops
+  * (Components, kCorePeel's per-round reuse, bfsDistances' multi-
+  * referenced frontier levels) KEEP per-round pins: their rounds are
+  * re-read many times, which is what the eager checkpoint is for.
   */
 object Graph {
 
-  /** Round protocol selector (r19). The fixed-iteration recurrences
-    * (pageRank / weighted / personalized, HITS, label propagation)
-    * reference each round's table ONCE (or twice, behind a shared
-    * exchange) in the next round, and the iteration count is a small
-    * API constant — so the rounds compose into ONE lazy plan whose
-    * single action executes the whole recurrence: no per-round eager
-    * checkpoint write, no per-round job submission, no per-round AQE
-    * session. Lineage stays O(iterations) by the fixed-count contract,
-    * and recovery rides Spark's shuffle files (stage retry recomputes
-    * only the lost stage) instead of NON-reliable localCheckpoint
-    * blocks, which an executor loss destroys unrecoverably. What still
-    * pins: the multiply-scanned BASE tables (edge set / node universe /
-    * restart vector) — pinned ONCE, so the returned plan references
-    * LogicalRDDs whose blocks the ContextCleaner releases when the
-    * result frame dies (a bare persist would leak a CacheManager entry
-    * for the session lifetime — the r14 class).
-    *
-    * Measured (r19, sf0.1 local[32]): the per-round pin protocol paid
-    * ~0.5-0.9 s of pure job/checkpoint machinery per round; the r18
-    * driver leg ran the pinned-round family ~2x FASTER on 8 cores than
-    * 32 — scheduling overhead, not compute. Convergence-probed loops
-    * (Components, kCorePeel's per-round reuse, bfsDistances' multi-
-    * referenced frontier levels) KEEP per-round pins: their rounds are
-    * re-read many times, which is what the eager checkpoint is for.
-    *
-    * `spark.graft.graph.pinRounds=true` restores the r18 per-round
-    * eager-localCheckpoint protocol (A/B diagnostic; also the knob for
-    * a cluster that wants per-round durable checkpoints with
-    * `reliable = true` instead of bounded shuffle-replay recovery).
+  /** Lazy rounds between pins in [[pageRank]]'s `redistributeSinks`
+    * form, whose rounds each read the previous one twice: a stretch of
+    * k lazy rounds plans 2^k copies of its first round. 3 keeps every
+    * registered sinks query (3 iterations) one lazy plan.
     */
-  private def lazyRounds(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("spark.graft.graph.pinRounds",
-      "false") != "true"
+  private val SinkPinEvery = 3
 
   /** Simplified PageRank with a FIXED iteration count:
     *
@@ -67,25 +61,24 @@ object Graph {
     * where `dm_k = Σ_{sinks s} pr_k(s)`, so Σ pr = 1 exactly. The sink
     * mass is a one-row aggregate CROSS-JOINED (broadcast) into the
     * round's plan — never a graph-sized collect; the sink id set is
-    * derived once (nodes anti-join out-degree) and persisted.
+    * derived once (nodes anti-join out-degree) and pinned, and every
+    * third round is pinned (see [[SinkPinEvery]]).
     * Multi-edges collapse (simple graph); the node universe is every
     * id appearing as src or dst.
     *
     * Scale design:
     *  - The edge table is joined with out-degrees ONCE, pre-partitioned
-    *    on src, and persisted — every round's contribution join reuses
+    *    on src, and pinned — every round's contribution join reuses
     *    that partitioning; only the (small) rank table moves per round.
     *  - Each round is exactly two shuffles (rank join + dst aggregation)
     *    over O(|E|) rows, map-side-combined; no collect of anything
     *    graph-sized. The one driver-side scalar is N (a count — same
     *    contract as Similarity's centroid collect).
-    *  - Rounds compose into ONE lazy plan (see [[lazyRounds]]): the
-    *    fixed iteration count bounds lineage, the single action runs
-    *    the whole recurrence with no per-round checkpoint write or job,
-    *    and recovery rides the shuffle files. Base tables (nodes,
-    *    linked, sinks) are pinned once. `spark.graft.graph.pinRounds=
-    *    true` restores the r18 eager-checkpoint-per-round protocol
-    *    (with `reliable = true` for durable per-round checkpoints).
+    *  - Rounds compose into ONE lazy plan (the [[Graph]] round
+    *    protocol): the fixed iteration count bounds lineage, the single
+    *    action runs the whole recurrence with no per-round checkpoint
+    *    write or job, and recovery rides the shuffle files. Base tables
+    *    (nodes, linked, sinks) are pinned once.
     *
     * Returns (id, pr) with Σ pr ≤ 1 (equality iff no sinks or
     * `redistributeSinks`).
@@ -95,11 +88,10 @@ object Graph {
                reliable: Boolean = false,
                redistributeSinks: Boolean = false): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val lzy = lazyRounds(edges)
     // persisted: nodes, outdeg and linked all derive from the distinct
     // — uncached, each would re-pay the dedup shuffle. e itself is only
     // scanned at CONSTRUCTION (building nodes/linked/sinks), so a
-    // construction-scoped persist is the right lifetime in both modes.
+    // construction-scoped persist is the right lifetime.
     val e = edges
       .select(col(srcCol).cast("long").as("src"),
               col(dstCol).cast("long").as("dst"))
@@ -109,77 +101,67 @@ object Graph {
     // node universe in ONE scan of the pinned edge set via explode
     // (q222's fusion, r18) — the two-scan union read the cached edges
     // twice per materialization; same distinct id set either way.
-    // Lazy mode pins it ONCE (every round's base join + the init rank
-    // table read it from the returned plan, after e is unpersisted)
-    val nodes0 = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-    val nodes = if (lzy) Components.pin(nodes0, reliable)
-                else nodes0.persist(StorageLevel.MEMORY_AND_DISK)
+    // Pinned ONCE: every round's base join + the init rank table read
+    // it from the returned plan, after e is unpersisted
+    val nodes = Components.pin(
+      e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
+      reliable)
     val n = nodes.count().toDouble // driver scalar, O(1) bytes
     // outdeg attached by a count-over-window on the SAME src exchange
-    // that the persisted frame needs anyway (r18): the groupBy+join
+    // that the pinned frame needs anyway (r18): the groupBy+join
     // form exchanged the edge set once for the aggregate and once for
     // the repartition (plus a broadcast build); the window form
     // exchanges it ONCE and counts within the partition — identical
-    // rows, and the persisted partitioning (hash(src)) is unchanged,
+    // rows, and the pinned partitioning (hash(src)) is unchanged,
     // so every round's contribution join still moves only the ranks
-    val linked0 = e.repartition(col("src"))
+    val linked = Components.pin(e.repartition(col("src"))
       .withColumn("outdeg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-    val linked = if (lzy) Components.pin(linked0, reliable)
-                 else linked0.persist(StorageLevel.MEMORY_AND_DISK)
+        org.apache.spark.sql.expressions.Window.partitionBy(col("src")))),
+      reliable)
     // sink ids (no out-edges) — only materialized when their mass is
     // redistributed; node-sized, one anti-join, reused every round
     val sinks =
-      if (redistributeSinks) {
-        val s0 = nodes.join(e.select(col("src").as("id")).distinct(),
-          Seq("id"), "left_anti")
-        Some(if (lzy) Components.pin(s0, reliable)
-             else s0.persist(StorageLevel.MEMORY_AND_DISK))
-      } else None
+      if (redistributeSinks)
+        Some(Components.pin(nodes.join(
+          e.select(col("src").as("id")).distinct(), Seq("id"), "left_anti"),
+          reliable))
+      else None
 
-    val init = nodes.select(col("id"), lit(1.0 / n).as("pr"))
-    var ranks = if (lzy) init else Components.pin(init, reliable)
-    for (_ <- 1 to iterations) {
+    var ranks = nodes.select(col("id"), lit(1.0 / n).as("pr"))
+    for (r <- 1 to iterations) {
       val contrib = linked
         .join(ranks.select(col("id").as("src"), col("pr")), "src")
         .select(col("dst").as("id"), (col("pr") / col("outdeg")).as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("inmass"))
       val base = nodes.join(contrib, Seq("id"), "left")
-      val stepped = sinks match {
+      ranks = sinks match {
         case None =>
           base.select(col("id"),
             (lit((1 - damping) / n) +
              lit(damping) * coalesce(col("inmass"), lit(0.0))).as("pr"))
         case Some(sk) =>
           // dangling mass this round: one-row aggregate over the rank
-          // table, broadcast into every task. In lazy mode this is the
-          // recurrence's one DOUBLE reference to the previous round —
-          // both branches contain the identical subtree, so its
-          // exchanges collapse via ReuseExchange/AQE stage reuse and
-          // only the node-sized post-shuffle tail evaluates twice
+          // table, broadcast into every task. This is the recurrence's
+          // one DOUBLE reference to the previous round — both branches
+          // contain the identical subtree, so its exchanges collapse
+          // via ReuseExchange/AQE stage reuse and only the node-sized
+          // post-shuffle tail evaluates twice. The logical plan still
+          // doubles per round (2^iterations copies of round 1), so
+          // every SinkPinEvery-th round is pinned: the plan stays
+          // O(iterations) and short recurrences stay one lazy plan
           val dm = ranks.join(sk, "id")
             .agg(coalesce(sum(col("pr")), lit(0.0)).as("_dm"))
-          base.crossJoin(broadcast(dm))
+          val stepped = base.crossJoin(broadcast(dm))
             .select(col("id"),
               (lit((1 - damping) / n) + lit(damping) *
                (coalesce(col("inmass"), lit(0.0)) +
                 col("_dm") / lit(n))).as("pr"))
-      }
-      if (lzy) ranks = stepped
-      else {
-        val next = Components.pin(stepped, reliable)
-        // release the superseded round's blocks NOW (Components rule)
-        Components.releasePin(ranks, reliable)
-        ranks = next
+          if (r % SinkPinEvery == 0 && r < iterations)
+            Components.pin(stepped, reliable)
+          else stepped
       }
     }
     e.unpersist(false)
-    if (!lzy) {
-      nodes.unpersist(false)
-      linked.unpersist(false)
-      sinks.foreach(_.unpersist(false))
-    }
     ranks
   }
 
@@ -191,9 +173,10 @@ object Graph {
     * the weights encode.
     *
     * Same scale shape and lifecycle as [[pageRank]]: fixed rounds
-    * (oracle-unrollable), two O(|E|) shuffles per round, rounds
-    * pinned via [[Components.pin]] with eager release, nothing
-    * collected but the node count. Weights must be positive integers
+    * (oracle-unrollable), two O(|E|) shuffles per round, base tables
+    * (nodes, linked) pinned once via [[Components.pin]] and the rounds
+    * composed into one lazy plan, nothing collected but the node
+    * count. Weights must be positive integers
     * (support counts); wout sums exactly, the ratio casts to double
     * once per edge.
     */
@@ -202,7 +185,6 @@ object Graph {
                        damping: Double = 0.85,
                        reliable: Boolean = false): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val lzy = lazyRounds(edges)
     val e = edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
@@ -214,45 +196,31 @@ object Graph {
     // node universe in ONE scan of the pinned edge set via explode
     // (q222's fusion, r18) — the two-scan union read the cached edges
     // twice per materialization; same distinct id set either way
-    val nodes0 = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-    val nodes = if (lzy) Components.pin(nodes0, reliable)
-                else nodes0.persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = Components.pin(
+      e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
+      reliable)
     val n = nodes.count().toDouble // driver scalar, O(1) bytes
-    // wout via count-over-window on the one src exchange the persisted
+    // wout via count-over-window on the one src exchange the pinned
     // frame needs anyway — see [[pageRank]]'s linked build (r18)
-    val linked0 = e.repartition(col("src"))
+    val linked = Components.pin(e.repartition(col("src"))
       .withColumn("wout", sum(col("w")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
       .select(col("src"), col("dst"),
         (col("w").cast("double") / col("wout").cast("double"))
-          .as("share"))
-    val linked = if (lzy) Components.pin(linked0, reliable)
-                 else linked0.persist(StorageLevel.MEMORY_AND_DISK)
+          .as("share")), reliable)
 
-    val init = nodes.select(col("id"), lit(1.0 / n).as("pr"))
-    var ranks = if (lzy) init else Components.pin(init, reliable)
+    var ranks = nodes.select(col("id"), lit(1.0 / n).as("pr"))
     for (_ <- 1 to iterations) {
       val contrib = linked
         .join(ranks.select(col("id").as("src"), col("pr")), "src")
         .select(col("dst").as("id"), (col("pr") * col("share")).as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("inmass"))
-      val stepped = nodes.join(contrib, Seq("id"), "left")
+      ranks = nodes.join(contrib, Seq("id"), "left")
         .select(col("id"),
           (lit((1 - damping) / n) +
             lit(damping) * coalesce(col("inmass"), lit(0.0))).as("pr"))
-      if (lzy) ranks = stepped
-      else {
-        val next = Components.pin(stepped, reliable)
-        Components.releasePin(ranks, reliable)
-        ranks = next
-      }
     }
     e.unpersist(false)
-    if (!lzy) {
-      nodes.unpersist(false)
-      linked.unpersist(false)
-    }
     ranks
   }
 
@@ -268,9 +236,10 @@ object Graph {
     *
     * SCALE SHAPE: a round is one degree aggregation (map-side combined)
     * plus two semi-joins of the edge table against the surviving-node
-    * table — all hash-distributed, nothing collected; eager checkpoint
-    * per round via Components' pin/releasePin keeps the plan O(1)
-    * (`reliable = true` for executor-loss recovery).
+    * table — all hash-distributed, nothing collected; an eager
+    * checkpoint per inner round via Components' pin/releasePin keeps
+    * the plan O(1) (`reliable = true` for executor-loss recovery); the
+    * final round stays lazy.
     *
     * Returns (id, deg): survivors after `rounds` peels with their
     * degree in the REMAINING graph.
@@ -297,7 +266,7 @@ object Graph {
         .join(keep.select(col("id").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("id").as("v")), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
-      if (r == rounds && lazyRounds(edges)) {
+      if (r == rounds) {
         // FINAL round (r19): consumed exactly once, by the closing
         // degrees scan — its eager pin bought no reuse, only a
         // checkpoint write + job. The two keep copies in the semi-joins
@@ -314,31 +283,6 @@ object Graph {
     degrees(cur)
   }
 
-  /** Synchronous label propagation (community detection) with a FIXED
-    * iteration count — the deterministic LPA variant: every node starts
-    * labeled with its own id; each round every node simultaneously
-    * adopts the most frequent label among its neighbors (the graph is
-    * treated as undirected), ties broken by SMALLEST label. Synchronous
-    * update + deterministic tie-break make the result engine-exact, so
-    * the oracle can unroll the same rounds in SQL (the async
-    * "random order" folklore variant is not reproducible across
-    * engines and is deliberately not implemented).
-    *
-    * Scale design (the [[pageRank]] protocol):
-    *  - the undirected simple edge list is materialized once
-    *    (union + distinct) and persisted; every node in the universe
-    *    has ≥ 1 neighbor by construction, so no isolated-node branch.
-    *  - each round = one rank-table join + one (node, label) count agg
-    *    + one per-node argmax agg — all map-side combined, O(|E|) rows
-    *    shuffled, nothing collected. The argmax is
-    *    `max(struct(cnt, -label))` — an AGGREGATE, not a window, so
-    *    the per-node reduction happens map-side too.
-    *  - eager checkpoint per round via Components' `pin`/`releasePin`
-    *    (O(1) plan; `reliable = true` for executor-loss recovery).
-    *
-    * Returns (id, label); nodes sharing a label after k rounds are one
-    * community. Labels are a subset of node ids.
-    */
   /** Per-node triangle counts (undirected, simple graph) — the local
     * clustering signal link-spam / bot-farm detection reads off a
     * crawl graph. Edges are canonicalized to unordered pairs; each
@@ -452,7 +396,6 @@ object Graph {
     // build — the union form EXECUTED the whole upstream subtree twice
     // before the distinct (r18); explode emits the two orientations
     // from one scan, same distinct set
-    val lzy = lazyRounds(edges)
     val e1 = (if (undirected)
                 e0.select(explode(array(
                     struct(col("s"), col("d")),
@@ -460,15 +403,14 @@ object Graph {
                   .select(col("_b.s").as("s"), col("_b.d").as("d"))
               else e0)
       .distinct()
-    // lazy mode pins the edge set ONCE (same single materialization a
+    // the edge set is pinned ONCE (same single materialization a
     // persist pays, minus the CacheManager entry) so the FINAL level
     // can stay lazy — it is consumed exactly once, by the output
     // union, and its eager pin bought only a checkpoint write + job.
     // Inner levels keep their pins: level h is re-read as the next
     // frontier AND by every later round's settled anti-join (the
     // delta-frontier design depends on those reads being cheap).
-    val e = if (lzy) Components.pin(e1, reliable)
-            else e1.persist(StorageLevel.MEMORY_AND_DISK)
+    val e = Components.pin(e1, reliable)
     // one pinned table PER LEVEL, never a re-materialized union: round
     // h checkpoints only the fresh frontier (which SHRINKS as the
     // search saturates), and the settled set is the lazy union of the
@@ -485,14 +427,38 @@ object Graph {
         .join(settled, Seq("id"), "left_anti")
         .select(col("id"), lit(h).as("dist"))
       val fresh =
-        if (h == maxHops && lzy) freshPlan // consumed once, by the union
+        if (h == maxHops) freshPlan // consumed once, by the union
         else Components.pin(freshPlan, reliable)
       levels = fresh :: levels
     }
-    if (!lzy) e.unpersist(false)
     levels.reduce(_.union(_))
   }
 
+  /** Synchronous label propagation (community detection) with a FIXED
+    * iteration count — the deterministic LPA variant: every node starts
+    * labeled with its own id; each round every node simultaneously
+    * adopts the most frequent label among its neighbors (the graph is
+    * treated as undirected), ties broken by SMALLEST label. Synchronous
+    * update + deterministic tie-break make the result engine-exact, so
+    * the oracle can unroll the same rounds in SQL (the async
+    * "random order" folklore variant is not reproducible across
+    * engines and is deliberately not implemented).
+    *
+    * Scale design (the [[pageRank]] protocol):
+    *  - the undirected simple edge list is built once (union +
+    *    distinct) and pinned via [[Components.pin]] (`reliable = true`
+    *    for a durable checkpoint); every node in the universe has ≥ 1
+    *    neighbor by construction, so no isolated-node branch.
+    *  - each round = one rank-table join + one (node, label) count agg
+    *    + one per-node argmax agg — all map-side combined, O(|E|) rows
+    *    shuffled, nothing collected. The argmax is
+    *    `max(struct(cnt, -label))` — an AGGREGATE, not a window, so
+    *    the per-node reduction happens map-side too.
+    *  - the rounds compose into one lazy plan, O(iterations) deep.
+    *
+    * Returns (id, label); nodes sharing a label after k rounds are one
+    * community. Labels are a subset of node ids.
+    */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iterations: Int,
                        reliable: Boolean = false): DataFrame = {
@@ -502,39 +468,28 @@ object Graph {
               col(dstCol).cast("long").as("v"))
       .where(col("u").isNotNull && col("v").isNotNull &&
              col("u") =!= col("v"))
-    val lzy = lazyRounds(edges)
     // one pass over the upstream edge build (was a two-scan union that
     // executed the unpersisted subtree twice — r18, see bfsDistances).
-    // und is scanned EVERY round — lazy mode pins it once (the rounds
-    // read it from the returned plan, long after construction)
-    val und0 = e.select(explode(array(
+    // und is scanned EVERY round — pinned once (the rounds read it from
+    // the returned plan, long after construction)
+    val und = Components.pin(e.select(explode(array(
         struct(col("u"), col("v")),
         struct(col("v").as("u"), col("u").as("v")))).as("_b"))
       .select(col("_b.u").as("u"), col("_b.v").as("v"))
-      .distinct()
-    val und = if (lzy) Components.pin(und0, reliable)
-              else und0.persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct(), reliable)
 
-    val init = und.select(col("u").as("id")).distinct()
+    var labels = und.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
-    var labels = if (lzy) init else Components.pin(init, reliable)
     for (_ <- 1 to iterations) {
       val counts = und
         .join(labels.select(col("id").as("v"), col("label")), "v")
         .groupBy(col("u"), col("label"))
         .agg(count(lit(1)).as("cnt"))
-      val stepped = counts
+      labels = counts
         .groupBy(col("u"))
         .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("m"))
         .select(col("u").as("id"), (-col("m.neg")).as("label"))
-      if (lzy) labels = stepped
-      else {
-        val next = Components.pin(stepped, reliable)
-        Components.releasePin(labels, reliable)
-        labels = next
-      }
     }
-    if (!lzy) und.unpersist(false)
     labels
   }
 
@@ -558,84 +513,62 @@ object Graph {
     * identical. The final normalizer is a ONE-ROW aggregate broadcast
     * — never a graph-sized collect.
     *
-    * SCALE SHAPE (the [[pageRank]] protocol): the distinct edge list is
-    * persisted once; each half-step is ONE score-table join + ONE
-    * map-side-combined aggregation over O(|E|) rows (zero-score nodes
-    * are simply absent from intermediates — they contribute nothing —
-    * and are 0-filled once at the end). Checkpointing is per ROUND,
-    * not per half-step (r18): the auth half-step feeds only the same
-    * round's hub pin, so it rides unpinned inside that pin's job —
-    * lineage stays O(1) at two joins deep, and every round saves one
-    * full checkpoint write + job of the node-sized auth table (the
-    * final round's auth table IS output, so that one is pinned).
-    * `reliable = true` for executor-loss recovery. Returns
+    * SCALE SHAPE (the [[pageRank]] protocol): the distinct edge list
+    * and the node universe are pinned once via [[Components.pin]]
+    * (`reliable = true` for durable checkpoints); each half-step is ONE
+    * score-table join + ONE map-side-combined aggregation over O(|E|)
+    * rows (zero-score nodes are simply absent from intermediates —
+    * they contribute nothing — and are 0-filled once at the end). The
+    * rounds compose into one lazy plan, two joins deep per round; the
+    * final auth table's exchanges are shared with the final hub
+    * half-step (identical subtrees), and the node-sized result is
+    * pinned once before normalization. Returns
     * (id, hub, auth) over the full node universe — nodes with no
     * in-edges have auth 0, no out-edges hub 0.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int, reliable: Boolean = false): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val lzy = lazyRounds(edges)
-    // e is scanned TWICE PER ROUND (both half-steps) — lazy mode pins
-    // it once so the returned plan's rounds read checkpoint blocks,
-    // not a recomputed dedup per scan
-    val e0 = edges
+    // e is scanned TWICE PER ROUND (both half-steps) — pinned once so
+    // the returned plan's rounds read checkpoint blocks, not a
+    // recomputed dedup per scan
+    val e = Components.pin(edges
       .select(col(srcCol).cast("long").as("src"),
               col(dstCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-    val e = if (lzy) Components.pin(e0, reliable)
-            else e0.persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct(), reliable)
     // node universe in ONE scan of the pinned edge set via explode
     // (q222's fusion, r18) — the two-scan union read the cached edges
     // twice per materialization; same distinct id set either way
-    val nodes0 = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-    val nodes = if (lzy) Components.pin(nodes0, reliable)
-                else nodes0.persist(StorageLevel.MEMORY_AND_DISK)
-    val init = nodes.select(col("id"), lit(1.0).as("hub"))
-    var hubs = if (lzy) init else Components.pin(init, reliable)
+    val nodes = Components.pin(
+      e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
+      reliable)
+    var hubs = nodes.select(col("id"), lit(1.0).as("hub"))
     var auths: DataFrame = null
-    for (i <- 1 to iterations) {
-      val a = e
+    for (_ <- 1 to iterations) {
+      auths = e
         .join(hubs.select(col("id").as("src"), col("hub")), "src")
         .groupBy(col("dst")).agg(sum(col("hub")).as("auth"))
         .select(col("dst").as("id"), col("auth"))
-      // old protocol: the last round's auth table is part of the
-      // output — pin it; earlier rounds' auth tables feed only hNext's
-      // pin job and are never re-read. Lazy protocol: the final auth
-      // rides the output plan (its exchanges are shared with the final
-      // hub half-step via ReuseExchange — identical subtrees)
-      val aUse =
-        if (!lzy && i == iterations) Components.pin(a, reliable) else a
-      val hStep = e
-        .join(aUse.select(col("id").as("dst"), col("auth")), "dst")
+      hubs = e
+        .join(auths.select(col("id").as("dst"), col("auth")), "dst")
         .groupBy(col("src")).agg(sum(col("auth")).as("hub"))
         .select(col("src").as("id"), col("hub"))
-      if (lzy) hubs = hStep
-      else {
-        val hNext = Components.pin(hStep, reliable)
-        // safe to release only AFTER hNext (and aUse, last round) are
-        // materialized — both pins are eager
-        Components.releasePin(hubs, reliable)
-        hubs = hNext
-      }
-      if (i == iterations) auths = aUse
     }
-    val joined = nodes
+    // joined is read twice (the normalizers and the output), and hubs
+    // holds the final auths too: a lazy output would plan the whole
+    // recurrence four times over. Pinned once, the rounds run as ONE
+    // lazy plan inside the pin's job and the output plan is O(1)
+    val joined = Components.pin(nodes
       .join(hubs, Seq("id"), "left")
       .join(auths, Seq("id"), "left")
       .select(col("id"), coalesce(col("hub"), lit(0.0)).as("hub"),
-        coalesce(col("auth"), lit(0.0)).as("auth"))
+        coalesce(col("auth"), lit(0.0)).as("auth")), reliable)
     val tots = joined.agg(sum(col("hub")).as("_th"),
       sum(col("auth")).as("_ta"))
     val out = joined.crossJoin(broadcast(tots))
       .select(col("id"), (col("hub") / col("_th")).as("hub"),
         (col("auth") / col("_ta")).as("auth"))
-    if (!lzy) {
-      e.unpersist(false)
-      nodes.unpersist(false)
-    }
     out
   }
 
@@ -650,10 +583,11 @@ object Graph {
     * seeds). Sink mass leaves the system (pseudo-PPR), keeping the
     * recurrence oracle-unrollable.
     *
-    * SCALE SHAPE: identical to [[pageRank]] — pre-joined persisted
-    * edge+outdeg table, two shuffles per round, pinned rounds with
-    * eager release; the seed indicator is a broadcast semi/left join,
-    * never a collect. Returns (id, ppr) over the node universe.
+    * SCALE SHAPE: identical to [[pageRank]] — pre-joined edge+outdeg
+    * table and restart vector pinned once, two shuffles per round, the
+    * rounds composed into one lazy plan; the seed indicator is a
+    * broadcast semi/left join, never a collect. Returns (id, ppr) over
+    * the node universe.
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
                            dstCol: String, seeds: DataFrame,
@@ -661,7 +595,6 @@ object Graph {
                            damping: Double = 0.85,
                            reliable: Boolean = false): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val lzy = lazyRounds(edges)
     val e = edges
       .select(col(srcCol).cast("long").as("src"),
               col(dstCol).cast("long").as("dst"))
@@ -672,7 +605,7 @@ object Graph {
     // (q222's fusion, r18) — the two-scan union read the cached edges
     // twice per materialization; same distinct id set either way.
     // nodes feeds only the restart build, so a construction-scoped
-    // persist suffices in both modes (the rounds reference restart)
+    // persist suffices (the rounds reference restart)
     val nodes = e.select(explode(array(col("src"), col("dst"))).as("id"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -683,46 +616,32 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nSeeds = s.count().toDouble // driver scalar, O(1) bytes
     require(nSeeds > 0, "no seed is a graph node")
-    val restart0 = nodes
+    // restart is read EVERY round (the base left-join) + as the init
+    // rank vector — pinned once
+    val restart = Components.pin(nodes
       .join(s.select(col("id"), lit(1.0 / nSeeds).as("_s")),
         Seq("id"), "left")
-      .select(col("id"), coalesce(col("_s"), lit(0.0)).as("s"))
-    // restart is read EVERY round (the base left-join) + as the init
-    // rank vector — lazy mode pins it once
-    val restart = if (lzy) Components.pin(restart0, reliable)
-                  else restart0.persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("id"), coalesce(col("_s"), lit(0.0)).as("s")), reliable)
     // outdeg via count-over-window on the one src exchange the
-    // persisted frame needs anyway — see [[pageRank]]'s linked build
-    val linked0 = e.repartition(col("src"))
+    // pinned frame needs anyway — see [[pageRank]]'s linked build
+    val linked = Components.pin(e.repartition(col("src"))
       .withColumn("outdeg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-    val linked = if (lzy) Components.pin(linked0, reliable)
-                 else linked0.persist(StorageLevel.MEMORY_AND_DISK)
-    val init = restart.select(col("id"), col("s").as("ppr"))
-    var ranks = if (lzy) init else Components.pin(init, reliable)
+        org.apache.spark.sql.expressions.Window.partitionBy(col("src")))),
+      reliable)
+    var ranks = restart.select(col("id"), col("s").as("ppr"))
     for (_ <- 1 to iterations) {
       val contrib = linked
         .join(ranks.select(col("id").as("src"), col("ppr")), "src")
         .select(col("dst").as("id"), (col("ppr") / col("outdeg")).as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("inmass"))
-      val stepped = restart.join(contrib, Seq("id"), "left")
+      ranks = restart.join(contrib, Seq("id"), "left")
         .select(col("id"),
           (lit(1 - damping) * col("s") + lit(damping) *
            coalesce(col("inmass"), lit(0.0))).as("ppr"))
-      if (lzy) ranks = stepped
-      else {
-        val next = Components.pin(stepped, reliable)
-        Components.releasePin(ranks, reliable)
-        ranks = next
-      }
     }
     e.unpersist(false)
     nodes.unpersist(false)
     s.unpersist(false)
-    if (!lzy) {
-      linked.unpersist(false)
-      restart.unpersist(false)
-    }
     ranks
   }
 

@@ -23,8 +23,8 @@ class ToolsSpec extends SparkTestBase {
     assert(fin.contains("isFinalPlan=true"), fin)
   }
 
-  test("AB over the graph round protocol: arms identical, hostcal stamped") {
-    val key = "spark.graft.graph.pinRounds"
+  test("AB over AQE on/off: arms identical, hostcal stamped") {
+    val key = "spark.sql.adaptive.enabled"
     val before = spark.conf.getOption(key)
     val report = AB.run(spark, Seq("q113_pagerank"), Seq(key -> "true"),
       Seq(key -> "false"), reps = 1)(SparkEntry.queries(_)(spark, sf))

@@ -71,19 +71,26 @@ class GraphSpec extends SparkTestBase {
     val nodes = edges.flatMap { case (s, d) => Seq(s, d) }.distinct
     val n = nodes.size.toDouble
     val outdeg = edges.groupBy(_._1).map { case (s, es) => s -> es.size }
-    val iters = 3
-    var pr = nodes.map(_ -> 1.0 / n).toMap
-    for (_ <- 1 to iters) {
-      val inmass = edges.groupBy(_._2).map { case (d, es) =>
-        d -> es.map { case (s, _) => pr(s) / outdeg(s) }.sum
+    // the stochastic form at 10 rounds also crosses several of its
+    // periodic round pins
+    for ((sinks, iters) <- Seq((false, 3), (true, 10))) {
+      var pr = nodes.map(_ -> 1.0 / n).toMap
+      for (_ <- 1 to iters) {
+        val inmass = edges.groupBy(_._2).map { case (d, es) =>
+          d -> es.map { case (s, _) => pr(s) / outdeg(s) }.sum
+        }
+        val dm = if (sinks) nodes.filterNot(outdeg.contains).map(pr).sum
+                 else 0.0
+        pr = nodes.map(v => v ->
+          (0.15 / n + 0.85 * (inmass.getOrElse(v, 0.0) + dm / n))).toMap
       }
-      pr = nodes.map(v =>
-        v -> (0.15 / n + 0.85 * inmass.getOrElse(v, 0.0))).toMap
+      val got = Graph.pageRank(raw.toDF("src", "dst"), "src", "dst", iters,
+          redistributeSinks = sinks)
+        .as[(Long, Double)].collect().toMap
+      assert(got.keySet == pr.keySet)
+      pr.foreach { case (v, x) =>
+        assert(math.abs(got(v) - x) < 1e-9, s"sinks=$sinks node $v") }
     }
-    val got = ranks(raw, iters)
-    assert(got.keySet == pr.keySet)
-    pr.foreach { case (v, x) =>
-      assert(math.abs(got(v) - x) < 1e-9, s"node $v") }
   }
 
   test("pageRankWeighted: rank splits by weight share, not edge count") {
@@ -189,36 +196,44 @@ class GraphSpec extends SparkTestBase {
     assert(d == Map(1L -> 0, 2L -> 1)) // 3 only reachable backwards
   }
 
-  test("pageRank round-protocol plan contract: lazy O(iterations) over " +
-       "pinned bases by default, O(1) with pinRounds=true") {
+  test("round-protocol plan contract: O(iterations) plans over pinned " +
+       "bases") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    // default (r19 lazy rounds): ONE lazy plan, depth LINEAR in the
-    // fixed iteration count — bounded by the API contract — whose only
-    // leaves are the pinned base LogicalRDDs (nodes/linked), so no
-    // unpinned upstream subtree is ever re-executed per round and no
-    // per-round checkpoint job runs
-    val pr10 = Graph.pageRank(edges, "src", "dst", 10)
-    val plan = pr10.queryExecution.optimizedPlan
-    val lines = plan.toString.linesIterator.size
-    assert(lines > 10, s"expected a lazy multi-round plan:\n$plan")
-    assert(lines < 12 * 10 + 20, // ~linear budget: <12 lines/round
-      s"plan grew superlinearly in rounds ($lines lines)")
-    assert(plan.collectLeaves().forall(
-      _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
-      "every leaf must be a pinned base table (LogicalRDD)")
-    val pr = pr10.as[(Long, Double)].collect().toMap
+    // ONE lazy plan per operator, depth at most LINEAR in the fixed
+    // iteration count — bounded by the API contract — whose only leaves
+    // are pinned LogicalRDDs (base tables, or rounds the operator pins
+    // because they are read twice), so no unpinned upstream subtree is
+    // ever re-executed per round
+    val iters = 10
+    val sink = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L))
+      .toDF("src", "dst")
+    val ops: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> Graph.pageRank(edges, "src", "dst", iters),
+      "pageRank redistributeSinks" -> Graph.pageRank(sink, "src", "dst",
+        iters, redistributeSinks = true),
+      "pageRankWeighted" -> Graph.pageRankWeighted(
+        sink.withColumn("w", org.apache.spark.sql.functions.lit(2L)),
+        "src", "dst", "w", iters),
+      "personalizedPageRank" -> Graph.personalizedPageRank(sink, "src",
+        "dst", Seq(1L).toDF("id"), "id", iters),
+      "hits" -> Graph.hits(sink, "src", "dst", iters),
+      "labelPropagation" -> Graph.labelPropagation(sink, "src", "dst",
+        iters))
+    ops.foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      val lines = plan.toString.linesIterator.size
+      assert(lines < 12 * iters + 20, // ~linear budget: <12 lines/round
+        s"$name: plan grew superlinearly in rounds ($lines lines)")
+      assert(plan.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
+        s"$name: every leaf must be a pinned table (LogicalRDD)")
+    }
+    val pr10 = ops.head._2
+    val lines = pr10.queryExecution.optimizedPlan.toString.linesIterator.size
+    assert(lines > iters, s"expected a lazy multi-round plan ($lines lines)")
     // symmetric cycle stays uniform at 1/3 forever
-    pr.values.foreach(v => assert(math.abs(v - 1.0 / 3) < 1e-12))
-    // pinRounds=true restores the r18 O(1)-plan eager protocol, and
-    // both protocols compute the identical table
-    spark.conf.set("spark.graft.graph.pinRounds", "true")
-    try {
-      val prPinned = Graph.pageRank(edges, "src", "dst", 10)
-      val pinnedPlan = prPinned.queryExecution.optimizedPlan.toString
-      assert(pinnedPlan.linesIterator.size < 10,
-        s"pinned-mode plan too deep:\n$pinnedPlan")
-      assert(prPinned.as[(Long, Double)].collect().toMap == pr)
-    } finally spark.conf.unset("spark.graft.graph.pinRounds")
+    pr10.as[(Long, Double)].collect().toMap.values
+      .foreach(v => assert(math.abs(v - 1.0 / 3) < 1e-12))
   }
 
   test("hits matches the hand-computed L1-normalized recurrence") {
