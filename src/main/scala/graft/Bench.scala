@@ -192,31 +192,12 @@ object Bench {
     // query-major protocol whose median also landed on warm reps.
     // $SPARK_GRAFT_BENCH_WARMPASS=0 skips it (fast local iteration).
     // PRE-FLIGHT CONTENTION CHECK (VERDICT r15 #7): the r15 driver leg
-    // self-declared CONTENDED only after burning a full 416 s run; the
-    // ritual knowledge ("hostcal_par_ms_start > 250 -> just re-run") is
-    // now tooling. One parallel hostcal sample BEFORE any warm-up
-    // (HostCal self-warms with an unrecorded leg, so a cold JVM does
-    // not read as contention); above the threshold the run warns and
-    // stamps `preflight_contended` into the artifact — or dies in ~5 s
-    // when $SPARK_GRAFT_BENCH_PREFLIGHT=abort (the builder-ritual
-    // setting; the driver's unattended leg must still produce a
-    // payload, so warn-and-stamp is the default).
-    val preflightMax = sys.env.get("SPARK_GRAFT_BENCH_MAXPAR")
-      .flatMap(s => scala.util.Try(s.trim.toDouble).toOption)
-      .getOrElse(250.0)
-    val preflightPar = HostCal.hostcalParMs(spark)
-    val preflightContended = preflightPar > preflightMax
-    System.err.println(f"[bench] preflight hostcal_par_ms=$preflightPar " +
-      f"(threshold $preflightMax%.0f)" +
-      (if (preflightContended) " CONTENDED" else ""))
-    if (preflightContended &&
-        sys.env.get("SPARK_GRAFT_BENCH_PREFLIGHT").contains("abort")) {
-      System.err.println("[bench] PREFLIGHT-ABORT: host is contended " +
-        s"($preflightPar ms > $preflightMax); re-run when idle or unset " +
-        "SPARK_GRAFT_BENCH_PREFLIGHT")
-      spark.stop()
-      sys.exit(4)
-    }
+    // self-declared CONTENDED only after burning a full 416 s run. One
+    // parallel hostcal sample BEFORE any warm-up (HostCal self-warms
+    // with an unrecorded leg, so a cold JVM does not read as
+    // contention); HostCal.preflight holds the warn/abort contract.
+    val preflightPar = HostCal.preflight(spark, "bench")
+    val preflightContended = preflightPar > HostCal.preflightMaxMs
 
     def runOnce(name: String): Unit =
       try SparkEntry.queries(name)(spark, sfDir)

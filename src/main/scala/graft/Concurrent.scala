@@ -36,25 +36,9 @@ object Concurrent {
 
     // PRE-FLIGHT (VERDICT r16 #3): the r16 concurrency walls ran in a
     // contended window and were informational-only. Same contract as
-    // Bench: one parallel hostcal before any work, stamped into the
-    // payload; SPARK_GRAFT_BENCH_PREFLIGHT=abort exits 4 fast so the
-    // retry wrapper (scripts/bench_retry.py) can drive this leg too.
-    val preflightMax = sys.env.get("SPARK_GRAFT_BENCH_MAXPAR")
-      .flatMap(s => scala.util.Try(s.trim.toDouble).toOption)
-      .getOrElse(250.0)
-    val preflightPar = HostCal.hostcalParMs(spark)
-    val preflightContended = preflightPar > preflightMax
-    System.err.println(f"[concurrent] preflight hostcal_par_ms=" +
-      f"$preflightPar (threshold $preflightMax%.0f)" +
-      (if (preflightContended) " CONTENDED" else ""))
-    if (preflightContended &&
-        sys.env.get("SPARK_GRAFT_BENCH_PREFLIGHT").contains("abort")) {
-      System.err.println("[concurrent] PREFLIGHT-ABORT: host is " +
-        s"contended ($preflightPar ms > $preflightMax); re-run when " +
-        "idle or unset SPARK_GRAFT_BENCH_PREFLIGHT")
-      spark.stop()
-      sys.exit(4)
-    }
+    // Bench (HostCal.preflight), stamped into the payload.
+    val preflightPar = HostCal.preflight(spark, "concurrent")
+    val preflightContended = preflightPar > HostCal.preflightMaxMs
 
     val names = SparkEntry.queries.keys.toVector.sorted
     val assign = names.zipWithIndex

@@ -72,4 +72,40 @@ object HostCal {
     val times = (1 to 3).map(_ => leg())
     math.round(times.min * 10.0) / 10.0
   }
+
+  /** The preflight contention threshold in ms: env
+    * `SPARK_GRAFT_BENCH_MAXPAR`, default 250.
+    */
+  def preflightMaxMs: Double = sys.env.get("SPARK_GRAFT_BENCH_MAXPAR")
+    .flatMap(s => scala.util.Try(s.trim.toDouble).toOption)
+    .getOrElse(250.0)
+
+  /** Host-contention preflight for the timed mains (Bench, Concurrent):
+    * one [[hostcalParMs]] sample before any work, reported on stderr
+    * under `[tag]`, and returned so the caller stamps it into its
+    * artifact (`preflight_par_ms`, and `preflight_contended` = above
+    * [[preflightMaxMs]]). Above the threshold the run warns — or, with
+    * env `SPARK_GRAFT_BENCH_PREFLIGHT=abort`, stops the session and
+    * exits 4 in a few seconds, so a retry wrapper
+    * (scripts/bench_retry.py) can re-run it when the host is idle.
+    * Warn-and-stamp is the default because an unattended run must still
+    * produce a payload.
+    */
+  def preflight(spark: org.apache.spark.sql.SparkSession,
+                tag: String): Double = {
+    val max = preflightMaxMs
+    val par = hostcalParMs(spark)
+    val contended = par > max
+    System.err.println(f"[$tag] preflight hostcal_par_ms=$par " +
+      f"(threshold $max%.0f)" + (if (contended) " CONTENDED" else ""))
+    if (contended &&
+        sys.env.get("SPARK_GRAFT_BENCH_PREFLIGHT").contains("abort")) {
+      System.err.println(s"[$tag] PREFLIGHT-ABORT: host is contended " +
+        s"($par ms > $max); re-run when idle or unset " +
+        "SPARK_GRAFT_BENCH_PREFLIGHT")
+      spark.stop()
+      sys.exit(4)
+    }
+    par
+  }
 }

@@ -464,7 +464,6 @@ object SparkEntry {
     // marker counting via the native graft_count_in kernel — the HOF
     // filter() form runs one interpreted lambda per token per profile).
     "q19_langid" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "documents")
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
         .select(col("doc_id"),
@@ -1937,8 +1936,9 @@ object SparkEntry {
     // exactly once) — q199 proves shape 1; this carries shape 2's
     // oracle row. Price bands of two order samples: overlap ⇔ totals
     // within 10000 cents
-    "q232_overlap_rule_join" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
+    "q232_overlap_rule_join" -> ((s0, dir) => {
+      val s = GraftSession.withConf(s0,
+        graft.plans.RangeJoinRewrite.BinSizeKey -> "20000")
       val o = t(s, dir, "orders").select(col("o_orderkey"),
         (col("o_totalprice").cast("decimal(18,2)") * 100)
           .cast("long").as("cents"))
@@ -1950,17 +1950,11 @@ object SparkEntry {
         .select(col("o_orderkey").as("b_id"),
           (col("cents") - 5000L).as("b_lo"),
           (col("cents") + 5000L).as("b_hi"))
-      val out = try {
-        s.conf.set(graft.plans.RangeJoinRewrite.BinSizeKey, "20000")
-        val j = a.join(b,
-            col("a_lo") <= col("b_hi") && col("b_lo") <= col("a_hi") &&
-              col("a_id") =!= col("b_id"))
-          .select(col("a_id"), col("b_id"))
-        val path = scratch(s, "q232")
-        j.write.mode("overwrite").parquet(path)
-        s.read.parquet(path)
-      } finally s.conf.unset(graft.plans.RangeJoinRewrite.BinSizeKey)
-      out.orderBy(col("a_id"), col("b_id"))
+      a.join(b,
+          col("a_lo") <= col("b_hi") && col("b_lo") <= col("a_hi") &&
+            col("a_id") =!= col("b_id"))
+        .select(col("a_id"), col("b_id"))
+        .orderBy(col("a_id"), col("b_id"))
     }),
 
     // Rank-Biased Overlap (Webber et al. 2010) between the revenue
@@ -2114,7 +2108,6 @@ object SparkEntry {
     // adjacent-row LCP sum in sorted order IS the bytes a prefix-
     // encoded layout saves — a template-ness score per source
     "q240_prefix_compression" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       TextAnalysis.prefixCompressionStats(t(s, dir, "documents"),
           "source", "text")
         .orderBy(col("source"))
@@ -2279,7 +2272,6 @@ object SparkEntry {
     // no window frame is buffered, unlike q14's union-LOCF form.
     // AsOfJoinExecSpec pins plan shape + randomized parity
     "q250_asof_exec" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       val e = t(s, dir, "events").select(col("event_id"), col("user_id"),
         eventEpochSeconds("ts").as("t"), col("value"), col("event_type"))
       val purchases = e.where(col("event_type") === "purchase")
@@ -2466,7 +2458,6 @@ object SparkEntry {
     // per-true-language share. The eval row every classifier needs
     // before it gates a corpus
     "q257_lang_confusion" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       import org.apache.spark.sql.expressions.Window
       val pred = t(s, dir, "documents")
         .select(col("lang"),
@@ -2664,7 +2655,6 @@ object SparkEntry {
     // graft_char_entropy kernel, per-doc entropies quantized to
     // DECIMAL before averaging (order-independent)
     "q267_sql_surface" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "documents").createOrReplaceTempView("graft_docs_v")
       s.sql(
         """WITH e AS (
@@ -2765,7 +2755,6 @@ object SparkEntry {
     // union-LOCF parity is pinned in AsOfJoinExecSpec; the oracle
     // states the same argmin independently.
     "q272_asof_nearest_exec" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       val e = t(s, dir, "events").select(col("event_id"), col("user_id"),
         eventEpochSeconds("ts").as("t"), col("value"), col("event_type"))
       val purchases = e.where(col("event_type") === "purchase")
@@ -2788,7 +2777,6 @@ object SparkEntry {
     // graft_interval_union from SQL — same 1800s session merge as q30,
     // zero Column-API code in the query text
     "q273_sql_interval_union" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "events")
         .select(col("user_id"), eventEpochSeconds("ts").as("t"))
         .createOrReplaceTempView("graft_ev_q273")
@@ -2806,7 +2794,6 @@ object SparkEntry {
     // (price DESC, line id ASC) — the k-bounded map-side alternative
     // to the row_number window, now one SQL call
     "q274_sql_topk" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "lineitem").createOrReplaceTempView("graft_li_q274")
       s.sql(
         """SELECT l_returnflag, kv.id AS line_id,
@@ -2821,7 +2808,6 @@ object SparkEntry {
     // graft_reservoir from SQL: deterministic k-smallest-hash sample →
     // positional median per event type (q228's estimator, SQL-only)
     "q275_sql_reservoir" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "events").createOrReplaceTempView("graft_ev_q275")
       s.sql(
         """WITH r AS (
@@ -2843,7 +2829,6 @@ object SparkEntry {
     // bucket_id from SQL — q3's range-bucket assignment with the exact
     // long floor-div kernel in the query text
     "q276_sql_bucket_id" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "lineitem").createOrReplaceTempView("graft_li_q276")
       s.sql(
         """WITH w AS (
@@ -2865,7 +2850,6 @@ object SparkEntry {
     // unpacked to its four 16-bit bands (q23's banding) — the DuckDB
     // oracle rebuilds the signature bit-by-bit from the md5 definition
     "q277_sql_simhash" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "documents").createOrReplaceTempView("graft_docs_q277")
       s.sql(
         """WITH s AS (
@@ -2885,7 +2869,6 @@ object SparkEntry {
     // unrestricted Damerau-Levenshtein kernel in the join predicate;
     // DuckDB's damerau_levenshtein is the independent twin
     "q278_sql_damerau" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "customer").createOrReplaceTempView("graft_cust_q278")
       // r18: the nation-blocked all-pairs join grew candidate pairs
       // QUADRATICALLY (nation cardinality is fixed, so 10× customers =
@@ -2938,7 +2921,6 @@ object SparkEntry {
     // the native membership-count kernel in the query text (en-first
     // tie-break, same as the Column-API form)
     "q279_sql_langid" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "documents").createOrReplaceTempView("graft_docs_q279")
       s.sql(
         """WITH tk AS (
@@ -2969,7 +2951,6 @@ object SparkEntry {
     // 0) deliberately match DuckDB's jaro_winkler_similarity, so the
     // oracle is a true independent twin
     "q280_sql_jaro_winkler" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "customer").createOrReplaceTempView("graft_cust_q280")
       s.sql(
         """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
@@ -2985,7 +2966,6 @@ object SparkEntry {
     // bucket), re-aggregated by z-range; the DuckDB oracle rebuilds
     // the interleave bit-by-bit (x on even positions, y on odd)
     "q281_sql_zorder" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "events").createOrReplaceTempView("graft_ev_q281")
       s.sql(
         """WITH z AS (
@@ -3002,7 +2982,6 @@ object SparkEntry {
     // distinct-token ratio, NFC composition (decomposed input), accent
     // stripping (precomposed input) — each against its DuckDB twin
     "q282_sql_text_hygiene" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "documents").createOrReplaceTempView("graft_docs_q282")
       s.sql(
         """SELECT doc_id,
@@ -3020,7 +2999,6 @@ object SparkEntry {
     // max shingle multiplicity per doc (the repetition screen's
     // kernels); <3-token docs legitimately yield (0, 0)
     "q283_sql_shingles" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "documents").createOrReplaceTempView("graft_docs_q283")
       s.sql(
         """WITH sh AS (
@@ -3039,7 +3017,6 @@ object SparkEntry {
     // same 15-hex-char hash, a ROWS-window min, and the single-global-
     // min fallback for docs with fewer than w k-grams
     "q287_sql_winnow" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "documents").createOrReplaceTempView("graft_docs_q287")
       s.sql(
         """SELECT doc_id, fp
@@ -3056,7 +3033,6 @@ object SparkEntry {
     // (both compute q = clamp(round(x·127/maxAbs)) from the identical
     // float→double values, then an exact integer dot)
     "q288_sql_int8" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "embeddings").createOrReplaceTempView("graft_emb_q288")
       s.sql(
         """WITH q AS (
@@ -3072,7 +3048,6 @@ object SparkEntry {
     // on bounded id pairs; DuckDB's list_dot_product over DOUBLE[] is
     // the twin (float→double widening is exact, same sum order)
     "q284_sql_dot" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       t(s, dir, "embeddings").createOrReplaceTempView("graft_emb_q284")
       s.sql(
         """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -3557,10 +3532,13 @@ object SparkEntry {
     // OPTIMIZER RULE (plans/RangeJoinRewrite.scala): the query is the
     // natural inequality join — no manual bucketing — and the opt-in
     // rule rewrites it to the exploded-bucket equi-join (hash shuffle,
-    // no BNLJ/cartesian). Conf is scoped by materializing inside the
-    // closure; RangeJoinRewriteSpec pins the plan shape and parity
-    "q199_range_band_join" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
+    // no BNLJ/cartesian). The bin size is scoped to a session clone
+    // (GraftSession.withConf), so the frame stays lazy and no other
+    // query sharing the caller's session sees the setting;
+    // RangeJoinRewriteSpec pins the plan shape and parity
+    "q199_range_band_join" -> ((s0, dir) => {
+      val s = GraftSession.withConf(s0,
+        graft.plans.RangeJoinRewrite.BinSizeKey -> "10000")
       val o = t(s, dir, "orders").select(col("o_orderkey"),
         (col("o_totalprice").cast("decimal(18,2)") * 100)
           .cast("long").as("cents"))
@@ -3568,19 +3546,13 @@ object SparkEntry {
         .select(col("o_orderkey").as("band_id"),
           (col("cents") - 5000L).as("lo"),
           (col("cents") + 5000L).as("hi"))
-      val out = try {
-        s.conf.set(graft.plans.RangeJoinRewrite.BinSizeKey, "10000")
-        val joined = o.join(bands,
-            col("lo") <= col("cents") && col("cents") < col("hi") &&
-              col("o_orderkey") =!= col("band_id"))
-          .groupBy(col("band_id"))
-          .agg(count(lit(1)).as("n_in_band"),
-            min(col("o_orderkey")).as("first_pt"))
-        val path = scratch(s, "q199")
-        joined.write.mode("overwrite").parquet(path)
-        s.read.parquet(path)
-      } finally s.conf.unset(graft.plans.RangeJoinRewrite.BinSizeKey)
-      out.orderBy(col("band_id"))
+      o.join(bands,
+          col("lo") <= col("cents") && col("cents") < col("hi") &&
+            col("o_orderkey") =!= col("band_id"))
+        .groupBy(col("band_id"))
+        .agg(count(lit(1)).as("n_in_band"),
+          min(col("o_orderkey")).as("first_pt"))
+        .orderBy(col("band_id"))
     }),
 
     // Cross-table referential-integrity audit: orphan counts + row
@@ -4305,7 +4277,6 @@ object SparkEntry {
     // low-entropy damage injected on %13 ids ('aaaa…' suffix) must pull
     // those docs' entropy measurably down (log2, matches DuckDB entropy)
     "q121_char_entropy" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       val injected = t(s, dir, "documents").select(col("doc_id"),
         concat(coalesce(col("text"), lit("")),
           when(col("doc_id") % 13 === 0,
@@ -4357,7 +4328,6 @@ object SparkEntry {
     // must collapse to the composed form (n_composed counts the marks
     // absorbed); ASCII rows ride the zero-copy fast path
     "q117_normalize" -> ((s, dir) => {
-      graft.functions.GraftExtensions.installInto(s)
       import graft.operators.TextAnalysis._
       val injected = t(s, dir, "documents").select(col("doc_id"),
         concat(

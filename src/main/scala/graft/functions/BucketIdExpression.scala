@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.functions.call_function
 
 /** Native Catalyst expression for the range-bucket id:
@@ -51,19 +51,22 @@ case class BucketId(left: Expression, right: Expression)
 }
 
 object BucketId {
-  /** Column-API entry. Resolves through the session function registry —
-    * call `GraftExtensions.installInto(spark)` once per session (or build
-    * the session with the extensions class).
+  /** Column-API entry. Resolves through the session function registry,
+    * which the extensions class fills (see [[GraftExtensions]]).
     */
   def apply(pos: Column, width: Column): Column =
     call_function("bucket_id", pos, width)
 }
 
-/** SparkSessionExtensions installer: makes `bucket_id(pos, width)`
-  * available from SQL and the Column API. Use
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`; for an
-  * already-running session, `GraftExtensions.installInto(spark)`.
+/** SparkSessionExtensions installer: registers the engine's functions
+  * (`bucket_id(pos, width)` and the rest of `GraftExtensions.entries`)
+  * for SQL and the Column API, the [[graft.plans.RangeJoinRewrite]]
+  * optimizer rule and the [[graft.plans.AsOfJoinStrategy]] planner
+  * strategy. `GraftSession.configure` sets
+  * `spark.sql.extensions=graft.functions.GraftExtensions`, so every
+  * engine session and every `newSession()` clone of one carries them;
+  * any other session is built with
+  * `SparkSession.builder.withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -415,23 +418,4 @@ object GraftExtensions {
              .ExpressionEncoder[Seq[Float]](),
            c.take(1), "graft_gram")
        }))
-
-  /** Register the engine's functions on a live session. */
-  def installInto(spark: SparkSession): Unit = {
-    entries.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry
-        .registerFunction(ident, info, builder)
-    }
-    // optimizer rules for a LIVE session ride experimentalMethods
-    // (builder-time sessions get them via injectOptimizerRule); the
-    // append is idempotent so repeated self-registration is safe
-    val em = spark.experimental
-    if (!em.extraOptimizations.contains(graft.plans.RangeJoinRewrite))
-      em.extraOptimizations =
-        em.extraOptimizations :+ graft.plans.RangeJoinRewrite
-    // planner strategies likewise (AsOfJoinExec's whole-operator path)
-    if (!em.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      em.extraStrategies =
-        em.extraStrategies :+ graft.plans.AsOfJoinStrategy
-  }
 }

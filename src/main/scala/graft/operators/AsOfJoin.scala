@@ -134,8 +134,8 @@ object AsOfJoin {
     * its own columns and no window frame is buffered.
     *
     * Requires the strategy registered
-    * ([[graft.functions.GraftExtensions]] — builder `withExtensions`
-    * or `installInto` on a live session). Output: all left columns,
+    * ([[graft.functions.GraftExtensions]], which every engine session
+    * carries). Output: all left columns,
     * then the matched right timestamp as `asof_ts` and the right
     * payload columns (right keys are projected away — they equal the
     * left's wherever matched). Key/time columns resolve by name on

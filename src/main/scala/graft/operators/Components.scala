@@ -141,10 +141,11 @@ object Components {
     * with the ContextCleaner (`cleanCheckpoints`, class doc), so this
     * is a no-op for them.
     */
-  private[graft] def releasePin(df: DataFrame, reliable: Boolean): Unit =
+  private[graft] def releasePin(df: DataFrame, reliable: Boolean,
+                                blocking: Boolean = false): Unit =
     if (!reliable) df.queryExecution.analyzed.collectLeaves().foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+        lr.rdd.unpersist(blocking)
       case _ => ()
     }
 

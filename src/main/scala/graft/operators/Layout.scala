@@ -50,7 +50,6 @@ object Layout {
   def zorderFileStats(df: DataFrame, xCol: Column, yCol: Column,
                       tieBreak: Column, rowsPerFile: Long): DataFrame = {
     require(rowsPerFile >= 1, "rowsPerFile must be >= 1")
-    graft.functions.GraftExtensions.installInto(df.sparkSession)
     val keyed = df.select(xCol.cast("long").as("x"),
         yCol.cast("long").as("y"), tieBreak.as("_tb"))
       .withColumn("z", call_function("graft_zorder", col("x"), col("y")))

@@ -46,14 +46,7 @@ object NearDup {
   final class CacheHandle private[operators] (
       private[operators] val cached: Seq[DataFrame]) {
     def release(blocking: Boolean = false): Unit =
-      cached.foreach { df =>
-        df.unpersist(blocking) // no-op on pins; kept for mixed handles
-        df.queryExecution.analyzed.collectLeaves().foreach {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            lr.rdd.unpersist(blocking)
-          case _ => ()
-        }
-      }
+      cached.foreach(Components.releasePin(_, reliable = false, blocking))
   }
 
   /** Spread a (possibly few-partition) input across the cluster before
@@ -117,7 +110,6 @@ object NearDup {
     */
   def shingleArrays(docs: DataFrame, idCol: String, extraCols: Seq[String],
                     textCol: String, n: Int): DataFrame = {
-    graft.functions.GraftExtensions.installInto(docs.sparkSession)
     val keep = col(idCol) +: extraCols.map(col)
     spread(docs)
       .select(keep :+ tokens(col(textCol)).as("_toks"): _*)
@@ -196,29 +188,18 @@ object NearDup {
     * J ≈ 0.33); containment scores it 1.0 — the right metric for
     * sub-document duplication (Broder's resemblance-vs-containment
     * distinction). Candidate generation, the maxDf cap, and the scale
-    * shape are exactly [[jaccardPairsWithHandle]]'s — one inverted-index
-    * equi-join, never all-pairs.
+    * shape are exactly [[jaccardPairs]]'s — one inverted-index
+    * equi-join, never all-pairs. Same cache contract as `jaccardPairs`.
     */
-  def containmentPairsWithHandle(docs: DataFrame, idCol: String,
-                                 textCol: String, blockCol: String, n: Int,
-                                 minContainment: Double, maxDf: Int = 0)
-      : (DataFrame, CacheHandle) = {
-    val (counts, handle) =
-      pairCountsWithHandle(docs, idCol, textCol, blockCol, n, maxDf)
-    val pairs = counts
+  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
+                       blockCol: String, n: Int, minContainment: Double,
+                       maxDf: Int = 0): DataFrame =
+    pairCountsWithHandle(docs, idCol, textCol, blockCol, n, maxDf)._1
       .withColumn("containment",
         round(col("n_common").cast("double") /
               least(col("na"), col("nb")), 6))
       .where(col("containment") >= minContainment)
       .select(col("a"), col("b"), col("n_common"), col("containment"))
-    (pairs, handle)
-  }
-
-  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       blockCol: String, n: Int, minContainment: Double,
-                       maxDf: Int = 0): DataFrame =
-    containmentPairsWithHandle(docs, idCol, textCol, blockCol, n,
-      minContainment, maxDf)._1
 
   /** Inter-SOURCE n-gram contamination matrix: Jaccard of each source
     * pair's distinct shingle sets (which crawls/feeds share boilerplate
@@ -425,7 +406,6 @@ object NearDup {
                 blockCol: String, maxDist: Int): DataFrame = {
     require(maxDist >= 1 && maxDist <= 2,
       "typoPairs covers maxDist 1..2 (symdelete fan-out contract)")
-    graft.functions.GraftExtensions.installInto(df.sparkSession)
     symDeleteCands(df, idCol, strCol, blockCol, maxDist)
       .withColumn("dist",
         call_function("graft_damerau", col("_sa"), col("_sb")))
@@ -445,7 +425,6 @@ object NearDup {
     */
   def jaroWinklerLinkage(df: DataFrame, idCol: String, strCol: String,
                          blockCol: String, minSim: Double): DataFrame = {
-    graft.functions.GraftExtensions.installInto(df.sparkSession)
     symDeleteCands(df, idCol, strCol, blockCol, maxDist = 1)
       .where(call_function("graft_damerau",
         col("_sa"), col("_sb")) <= 1)
@@ -668,7 +647,6 @@ object NearDup {
     */
   def minhashCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
                             shingleN: Int, k: Int, bands: Int): DataFrame = {
-    graft.functions.GraftExtensions.installInto(docs.sparkSession)
     val sigs = minhashSignatures(docs, idCol, textCol, shingleN, k)
       .withColumn("sig", array((0 until k).map(i => col(s"mh$i")): _*))
     val exploded = lshBands(sigs, idCol, k, bands, passthrough = Seq("sig"))
@@ -717,7 +695,6 @@ object NearDup {
   def winnowFingerprints(docs: DataFrame, idCol: String,
                          extraCols: Seq[String], textCol: String,
                          k: Int, w: Int): DataFrame = {
-    graft.functions.GraftExtensions.installInto(docs.sparkSession)
     val keep = col(idCol) +: extraCols.map(col)
     // the whole k-gram → hash → window-min → distinct chain is ONE
     // native per-row call (graft.functions.WinnowKernel) — the
@@ -743,22 +720,12 @@ object NearDup {
     * expected duplicate-class size); implemented as the same
     * map-side-combined count → tiny broadcast anti-join.
     *
-    * Persists the fingerprint table (both join sides read it) — same
-    * cache contract as `jaccardPairs`; use `winnowPairsWithHandle` to
-    * own the release.
+    * Pins the fingerprint table (both join sides read it); its blocks
+    * are left to the ContextCleaner, as in `jaccardPairs`.
     */
   def winnowPairs(docs: DataFrame, idCol: String, textCol: String,
                   blockCol: String, k: Int, w: Int,
-                  maxDf: Int = 0): DataFrame =
-    winnowPairsWithHandle(docs, idCol, textCol, blockCol, k, w, maxDf)._1
-
-  /** `winnowPairs` plus the [[CacheHandle]] owning its pinned
-    * fingerprint table.
-    */
-  def winnowPairsWithHandle(docs: DataFrame, idCol: String,
-                            textCol: String, blockCol: String, k: Int,
-                            w: Int, maxDf: Int = 0)
-      : (DataFrame, CacheHandle) = {
+                  maxDf: Int = 0): DataFrame = {
     val fps = Components.pin(
       winnowFingerprints(docs, idCol, Seq(blockCol), textCol, k, w)
         .withColumnRenamed(idCol, "id").withColumnRenamed(blockCol, "blk"),
@@ -777,11 +744,10 @@ object NearDup {
     val b = e.select(col("blk"), col("fp"), col("id").as("b"))
     // hint("merge"): see symDeleteCands — exploded fingerprint index,
     // same misjudged-broadcast hazard
-    val pairs = a.hint("merge").join(b, Seq("blk", "fp"))
+    a.hint("merge").join(b, Seq("blk", "fp"))
       .where(col("a") < col("b"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n_shared"))
-    (pairs, new CacheHandle(Seq(fps)))
   }
 
   /** SimHash near-duplicate pairs with Hamming distance ≤ `maxHamming`
@@ -886,7 +852,6 @@ object NearDup {
     * reproduces them without 64-bit shifts.
     */
   def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.GraftExtensions.installInto(docs.sparkSession)
     val withSig = spread(docs).select(col(idCol),
       call_function("graft_simhash", tokens(col(textCol))).as("_sig"))
     val bands = (0 to 3).map { j =>
@@ -1048,7 +1013,6 @@ object NearDup {
                          idCol: String, textCol: String, n: Int,
                          expectedItems: Long = 100000L,
                          numBits: Long = 800000L): DataFrame = {
-    graft.functions.GraftExtensions.installInto(train.sparkSession)
     val bg = shingleRows(bench, idCol, Seq.empty, textCol, n)
       .select(col("shingle")).distinct()
     val bfBytes = bg
@@ -1103,7 +1067,6 @@ object NearDup {
                          bandBits: Int = 16): DataFrame = {
     require(Set(8, 16, 32).contains(bandBits),
       s"bandBits must be 8, 16, or 32; got $bandBits")
-    graft.functions.GraftExtensions.installInto(incoming.sparkSession)
     val bands = 64 / bandBits
     val mask = (1L << bandBits) - 1L
     def bandVal(sig: org.apache.spark.sql.Column, j: Int) =

@@ -38,9 +38,9 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Codegen'd dot product (graft.functions.DotProduct); requires the
-    * graft functions to be registered on the session — every operator in
-    * this object does that itself via `ensureFns`.
+  /** Codegen'd dot product (graft.functions.DotProduct); resolves
+    * through the session function registry that
+    * [[graft.functions.GraftExtensions]] fills on every engine session.
     */
   private def ndot(a: Column, b: Column): Column =
     call_function("graft_dot", a, b)
@@ -59,12 +59,6 @@ object Similarity {
     */
   private def safeDiv(dotProd: Column, normProd: Column): Column =
     when(normProd > 0d, dotProd / normProd)
-
-  /** Idempotently register the graft native functions on the session the
-    * operator's input belongs to (build-time, driver-side, cheap).
-    */
-  private def ensureFns(df: DataFrame): Unit =
-    graft.functions.GraftExtensions.installInto(df.sparkSession)
 
   /** Cosine similarity of two float-array columns (double arithmetic).
     * NULL when either vector has zero norm (see [[safeDiv]] — ANSI
@@ -85,7 +79,6 @@ object Similarity {
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                      vecCol: String, k: Int): DataFrame = {
-    ensureFns(corpus)
     // norms are projected ONCE per side (|Q| + |corpus| sqrt-dots) and
     // reused across every pair — the naive inline cosine recomputes both
     // norms per PAIR, tripling the dominant flop count. Same doubles
@@ -156,7 +149,6 @@ object Similarity {
 
   def ivfAssign(vectors: DataFrame, centroids: DataFrame, idCol: String,
                 vecCol: String): DataFrame = {
-    ensureFns(vectors)
     val cents = collectCentroids(centroids, idCol, vecCol)
     // Fused native kernel (functions/ArgmaxCentroidExpression): the
     // composable form — a Column aggregate() fold over typedlit(cents)
@@ -192,7 +184,6 @@ object Similarity {
   def ivfAssignProbes(vectors: DataFrame, centroids: DataFrame,
                       idCol: String, vecCol: String,
                       nprobe: Int): DataFrame = {
-    ensureFns(vectors)
     require(nprobe >= 1, "nprobe must be >= 1")
     val cents = collectCentroids(centroids, idCol, vecCol)
     // same Double.MinValue no-signal sentinel as ivfAssign's fold —
@@ -243,7 +234,6 @@ object Similarity {
   def quantizedTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                     vecCol: String, k: Int, rerank: Int): DataFrame = {
     require(rerank >= k, s"rerank window ($rerank) must be >= k ($k)")
-    ensureFns(corpus)
     def qside(df: DataFrame, idAs: String, qvAs: String, qnAs: String) =
       df.select(col(idCol).as(idAs),
           call_function("graft_quantize_i8", col(vecCol)).as(qvAs))
@@ -511,7 +501,6 @@ object Similarity {
     // replays (the kernel enforces the same bound)
     require(bandBits >= 1 && bandBits <= 31,
       s"bandBits must be in 1..31, got $bandBits")
-    ensureFns(vectors)
     val bands = bits / bandBits
     val sig = call_function("graft_hyperplane_sig", col(vecCol),
       lit(bits), lit(bandBits), lit(dim))
@@ -621,7 +610,6 @@ object Similarity {
                             dim: Int, bits: Int, bandBits: Int,
                             minCosine: Double): DataFrame = {
     require(bits % bandBits == 0, s"bits=$bits not divisible by $bandBits")
-    ensureFns(corpus)
     val bands = bits / bandBits
     val sig = call_function("graft_hyperplane_sig", col(vecCol),
       lit(bits), lit(bandBits), lit(dim))
@@ -697,7 +685,6 @@ object Similarity {
     */
   def mutualBestMatch(vectors: DataFrame, idCol: String, vecCol: String,
                       blockCol: String): DataFrame = {
-    ensureFns(vectors)
     val v = vectors.select(col(blockCol).as("_blk"),
       col(idCol).as("_id"), col(vecCol).as("_v"),
       nnorm(col(vecCol)).as("_n"))

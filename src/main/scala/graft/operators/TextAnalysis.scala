@@ -437,9 +437,9 @@ object TextAnalysis {
   /** langIdOf with the marker counting done by the NATIVE
     * `graft_count_in` expression — the composable form's filter() lambda
     * evaluates interpreted per token per profile. Requires the graft
-    * functions registered on the session
-    * (`GraftExtensions.installInto`); the composable `langIdOf` stays
-    * session-free.
+    * functions registered on the session (every engine session carries
+    * [[graft.functions.GraftExtensions]]); the composable `langIdOf`
+    * stays session-free.
     */
   def langIdNative(toks: Column, profiles: Seq[(String, Seq[String])])
       : Column =
@@ -550,7 +550,6 @@ object TextAnalysis {
   def repetitionSignals(docs: DataFrame, idCol: String, textCol: String,
                         topTokenMax: Double = 0.12,
                         dupBigramMax: Double = 0.05): DataFrame = {
-    graft.functions.GraftExtensions.installInto(docs.sparkSession)
     val base = docs
       .select(col(idCol), tokens(col(textCol)).as("_toks"))
       .select(col(idCol), col("_toks"),
@@ -596,7 +595,6 @@ object TextAnalysis {
                   minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
                   minAlphaFrac: Double = 0.8,
                   minStopHits: Int = 2): DataFrame = {
-    graft.functions.GraftExtensions.installInto(docs.sparkSession)
     val stopwords = Seq("the", "be", "to", "of", "and", "that", "have",
       "with", "a", "in")
     val base = docs.select(col(idCol), tokens(col(textCol)).as("_toks"))
@@ -908,21 +906,12 @@ object TextAnalysis {
     *
     * SCALE SHAPE: one tokenize pass feeds both the global vocab count
     * and the per-group totals; the top-K is a TakeOrdered (never a
-    * global sort) broadcast back as a semi-join.
+    * global sort) broadcast back as a semi-join. The token table is
+    * pinned; its blocks are left to the ContextCleaner (freed at the GC
+    * after the result frame is dropped).
     */
   def vocabCoverage(docs: DataFrame, groupCol: String, textCol: String,
-                    topK: Int): DataFrame =
-    vocabCoverageWithHandle(docs, groupCol, textCol, topK)._1
-
-  /** [[vocabCoverage]] plus the [[NearDup.CacheHandle]] owning its
-    * pinned token table — `release()` after the final action on the
-    * result frees the blocks immediately. The handle-less overload
-    * leaves them to the ContextCleaner (freed at the GC after the
-    * result frame is dropped).
-    */
-  def vocabCoverageWithHandle(docs: DataFrame, groupCol: String,
-                              textCol: String, topK: Int)
-      : (DataFrame, NearDup.CacheHandle) = {
+                    topK: Int): DataFrame = {
     val tok = Components.pin(
       docs
         .select(col(groupCol), explode(tokens(col(textCol))).as("token"))
@@ -934,7 +923,8 @@ object TextAnalysis {
       .select(col("token"))
     val covered = tok.join(broadcast(vocab), Seq("token"), "left_semi")
       .groupBy(col(groupCol)).agg(count(lit(1)).as("covered_tokens"))
-    val out = tok.groupBy(col(groupCol))
+    // the pinned token table serves vocab, covered, AND totals
+    tok.groupBy(col(groupCol))
       .agg(count(lit(1)).as("total_tokens"))
       .join(covered, Seq(groupCol), "left")
       .select(col(groupCol), col("total_tokens"),
@@ -942,8 +932,6 @@ object TextAnalysis {
         round(lit(1.0) - coalesce(col("covered_tokens"), lit(0L))
           .cast("double") / col("total_tokens").cast("double"), 6)
           .as("oov_rate"))
-    // the pinned token table serves vocab, covered, AND totals
-    (out, new NearDup.CacheHandle(Seq(tok)))
   }
 
   /** Pairwise Jensen–Shannon divergence between the groups' token
@@ -965,20 +953,12 @@ object TextAnalysis {
     * the most token occurrences (ties by group ascending — the
     * deterministic, oracle-stateable pick) before forming pairs, so
     * pointing the matrix at 10³+ fine-grained groups costs
-    * topGroups²·vocab, not #groups²·vocab.
+    * topGroups²·vocab, not #groups²·vocab. The pinned intermediates
+    * are left to the ContextCleaner, as in [[vocabCoverage]].
     */
   def jsDivergenceMatrix(docs: DataFrame, groupCol: String,
                          textCol: String,
-                         topGroups: Int = 0): DataFrame =
-    jsDivergenceMatrixWithHandle(docs, groupCol, textCol, topGroups)._1
-
-  /** [[jsDivergenceMatrix]] plus the [[NearDup.CacheHandle]] owning its
-    * pinned intermediates (see [[vocabCoverageWithHandle]] for the
-    * lifecycle contract).
-    */
-  def jsDivergenceMatrixWithHandle(docs: DataFrame, groupCol: String,
-                                   textCol: String, topGroups: Int = 0)
-      : (DataFrame, NearDup.CacheHandle) = {
+                         topGroups: Int = 0): DataFrame = {
     val bg = Components.pin(
       docs
         .select(col(groupCol).as("g"),
@@ -1017,11 +997,10 @@ object TextAnalysis {
         .otherwise(lit(0.0)) +
       when(col("pb").isNotNull, lit(0.5) * pb * log(pb / m))
         .otherwise(lit(0.0))
-    // pinned bg/withP serve both pair sides; the handle owns them
-    val out = cells.groupBy(col("ga"), col("gb"))
+    // pinned bg/withP serve both pair sides
+    cells.groupBy(col("ga"), col("gb"))
       .agg(count(lit(1)).as("n_union_tokens"),
         round(sum(term), 6).as("js"))
-    (out, new NearDup.CacheHandle(Seq(bg, withP)))
   }
 
   def simhashBitContribution(tokenMd5: Column, pos: Int): Column = {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 /** The engine's whole-operator Catalyst extension: backward as-of join
   * as a FIRST-CLASS physical operator — logical node + planner strategy
   * + sort-merge exec, registered through `SparkSessionExtensions`
-  * (builder) / `experimentalMethods.extraStrategies` (live session).
+  * ([[graft.functions.GraftExtensions]], on every engine session).
   *
   * Why a physical operator when the union-LOCF formulation
   * ([[graft.operators.AsOfJoin.asofBackward]]) is already linear:

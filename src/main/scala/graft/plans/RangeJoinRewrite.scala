@@ -39,10 +39,9 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, 
   * satisfy the original predicate, and an unguarded descending
   * `sequence()` would fabricate buckets for them.
   *
-  * Registered via [[graft.functions.GraftExtensions]] (builder
-  * `withExtensions` → `injectOptimizerRule`) or on a live session
-  * through `experimentalMethods.extraOptimizations`
-  * (`GraftExtensions.installInto`). The rule is idempotent: the
+  * Registered via [[graft.functions.GraftExtensions]]
+  * (`injectOptimizerRule`), which every engine session carries. The
+  * rule is idempotent: the
   * rewritten join's condition carries only equalities, which the
   * pattern cannot re-match.
   */

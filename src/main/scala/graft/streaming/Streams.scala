@@ -190,20 +190,9 @@ object Streams {
     * also scopes the memory-sink temp view; read results via the
     * RETURNED session.
     */
-  def noEvictionDrainSession(s: SparkSession): SparkSession = {
-    val sd = s.newSession()
-    // newSession starts from the SparkConf defaults, not the parent's
-    // RUNTIME session conf — copy it so the drain keeps the engine's
-    // streaming/shuffle settings (state-store provider, join state
-    // format, shuffle width) in every environment, including test
-    // suites that configure a session over an existing context. Static
-    // confs refuse runtime set — skip them (they are shared anyway).
-    s.conf.getAll.foreach { case (k, v) =>
-      try sd.conf.set(k, v) catch { case _: Throwable => () }
-    }
-    sd.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    sd
-  }
+  def noEvictionDrainSession(s: SparkSession): SparkSession =
+    graft.GraftSession.withConf(s,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
 
   /** Drain-then-stop writer: processes all available input then stops —
     * the reference's `end.txt` sentinel semantics without sideband files.

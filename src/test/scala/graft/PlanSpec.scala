@@ -803,35 +803,14 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("q232 overlap join goes through the rewrite rule, not a BNLJ") {
-    // q232 itself materializes inside its closure (eager), so pin the
-    // SAME join expression it builds: under the scoped binSize conf the
-    // shape-2 rewrite must fire — both sides exploded on _graft_bkt,
-    // no nested loop. If the rule silently stopped matching, q232's
-    // correctness row would stay green while its plan regressed to the
-    // quadratic join; this is the net for that.
-    graft.functions.GraftExtensions.installInto(spark)
-    val o = GraftSession.table(spark, sf, "orders")
-      .select(col("o_orderkey"),
-        (col("o_totalprice").cast("decimal(18,2)") * 100)
-          .cast("long").as("cents"))
-    val a = o.where(col("o_orderkey") % 75 === 0)
-      .select(col("o_orderkey").as("a_id"),
-        (col("cents") - 5000L).as("a_lo"),
-        (col("cents") + 5000L).as("a_hi"))
-    val b = o.where(col("o_orderkey") % 90 === 0)
-      .select(col("o_orderkey").as("b_id"),
-        (col("cents") - 5000L).as("b_lo"),
-        (col("cents") + 5000L).as("b_hi"))
-    spark.conf.set(graft.plans.RangeJoinRewrite.BinSizeKey, "20000")
-    try {
-      val p = a.join(b,
-          col("a_lo") <= col("b_hi") && col("b_lo") <= col("a_hi") &&
-            col("a_id") =!= col("b_id"))
-        .queryExecution.executedPlan.toString
-      assert(p.contains("_graft_bkt"), s"shape-2 rewrite must fire:\n$p")
-      assert(!p.contains("BroadcastNestedLoopJoin") &&
-             !p.contains("CartesianProduct"), p)
-    } finally spark.conf.unset(graft.plans.RangeJoinRewrite.BinSizeKey)
+    // under q232's scoped binSize the shape-2 rewrite must fire — both
+    // sides exploded on _graft_bkt, no nested loop. If the rule silently
+    // stopped matching, q232's correctness row would stay green while
+    // its plan regressed to the quadratic join; this is the net for that.
+    val p = plan("q232_overlap_rule_join")
+    assert(p.contains("_graft_bkt"), s"shape-2 rewrite must fire:\n$p")
+    assert(!p.contains("BroadcastNestedLoopJoin") &&
+           !p.contains("CartesianProduct"), p)
   }
 
   test("q277 SQL simhash is scan-stage: native kernel, no exchange before sort") {

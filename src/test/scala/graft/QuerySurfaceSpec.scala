@@ -51,18 +51,16 @@ class QuerySurfaceSpec extends SparkTestBase {
     // q188 pins HITS rounds (localCheckpoint) at construction; q190's
     // global z-index zips the sorted RDD eagerly; q197 drains a stream
     "q188_hits", "q190_zorder_layout", "q197_stream_distinct",
-    // q199 materializes under a scoped optimizer conf (sink round-trip)
-    "q199_range_band_join", "q205_stream_left_join",
+    // q205 stages a sink copy and drains a stream at construction
+    "q205_stream_left_join",
     // q208 pins PPR rounds + counts the seed set at construction;
     // q211 zips the z-sorted RDD eagerly (q190 machinery)
     "q208_personalized_pagerank", "q211_skip_rate",
     // q225 drains a stream + sink round-trip at construction
     "q225_stream_drift",
-    // q231 pins weighted-PageRank rounds at construction; q232
-    // materializes under a scoped optimizer conf (q199's shape); q234
-    // drains a stream
-    "q231_weighted_pagerank", "q232_overlap_rule_join",
-    "q234_stream_reservoir",
+    // q231 pins weighted-PageRank rounds at construction; q234 drains
+    // a stream
+    "q231_weighted_pagerank", "q234_stream_reservoir",
     // q248 drains a stream at construction
     "q248_stream_new_users",
     // q256/q269 run the jaccard-closure (eager checkpointed labels)

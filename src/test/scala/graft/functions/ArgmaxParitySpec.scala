@@ -21,7 +21,6 @@ class ArgmaxParitySpec extends SparkTestBase {
     */
   private def foldAssign(vectors: DataFrame, centroids: DataFrame)
       : DataFrame = {
-    graft.functions.GraftExtensions.installInto(spark)
     val cents = centroids
       .select(col("vec_id").cast("long"),
         col("embedding").cast("array<float>"))

@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions._
 class BucketIdSpec extends SparkTestBase {
   import spark.implicits._
 
-  GraftExtensions.installInto(spark)
-
   test("native BucketId matches floor(pos/width) on non-negative inputs") {
     val df = (0L to 1000L by 7L).flatMap(p => Seq((p, 1L), (p, 13L),
       (p, 100L))).toDF("pos", "w")

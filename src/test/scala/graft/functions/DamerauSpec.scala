@@ -46,7 +46,6 @@ class DamerauSpec extends SparkTestBase {
   }
 
   test("expression evaluates inside codegen over a DataFrame") {
-    graft.functions.GraftExtensions.installInto(spark)
     val df = Seq(("abcd", "abdc"), ("same", "same"), ("CA", "ABC"))
       .toDF("a", "b")
       .select(call_function("graft_damerau", col("a"), col("b")).as("d"))
@@ -54,7 +53,6 @@ class DamerauSpec extends SparkTestBase {
   }
 
   test("null propagates") {
-    graft.functions.GraftExtensions.installInto(spark)
     val df = Seq((Some("x"), None: Option[String])).toDF("a", "b")
       .select(call_function("graft_damerau", col("a"), col("b")).as("d"))
     assert(df.collect().head.isNullAt(0))

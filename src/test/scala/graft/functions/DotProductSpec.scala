@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 class DotProductSpec extends SparkTestBase {
   import spark.implicits._
 
-  GraftExtensions.installInto(spark)
-
   private def nd(a: org.apache.spark.sql.Column,
                  b: org.apache.spark.sql.Column) =
     call_function("graft_dot", a, b)
@@ -60,8 +58,6 @@ class DotProductSpec extends SparkTestBase {
 
 class CountInSpec extends SparkTestBase {
   import spark.implicits._
-
-  GraftExtensions.installInto(spark)
 
   test("graft_count_in matches size(filter(isin)) incl. duplicates") {
     val df = Seq(Seq("the", "cat", "the", "dog"), Seq.empty[String])

@@ -46,7 +46,6 @@ class JaroWinklerSpec extends SparkTestBase {
   }
 
   test("expression: codegen path, null propagation, symmetry") {
-    GraftExtensions.installInto(spark)
     val df = Seq(("martha", "marhta"), ("hello", "hallo"))
       .toDF("a", "b")
       .select(call_function("graft_jaro_winkler", col("a"), col("b"))

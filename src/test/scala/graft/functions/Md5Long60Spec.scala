@@ -18,7 +18,6 @@ class Md5Long60Spec extends SparkTestBase {
     "0123456789abcdef0123456789abcdef")
 
   test("kernel equals conv(substring(md5)) at both hex offsets") {
-    GraftExtensions.installInto(spark)
     val df = (samples ++ (0 until 10000).map(i => s"key:$i")).toDF("s")
     val bad = df.select(
       call_function("graft_md5_long60", col("s"), lit(1)).as("k1"),
@@ -33,7 +32,6 @@ class Md5Long60Spec extends SparkTestBase {
   }
 
   test("null-safe; hexPos validated at construction") {
-    GraftExtensions.installInto(spark)
     val got = Seq(Option("abc"), None).toDF("s")
       .select(call_function("graft_md5_long60", col("s"), lit(1)))
       .collect()

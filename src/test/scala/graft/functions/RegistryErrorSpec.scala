@@ -47,7 +47,6 @@ class RegistryErrorSpec extends SparkTestBase {
   }
 
   test("wrong-arity SQL call surfaces the builder's message to the user") {
-    GraftExtensions.installInto(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT graft_simhash()").collect()
     }

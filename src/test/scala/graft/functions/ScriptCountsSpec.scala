@@ -35,7 +35,6 @@ class ScriptCountsSpec extends SparkTestBase {
     "word " * 30 + "привет" * 3)
 
   test("graft_script_counts equals the four regexp_extract_all sizes") {
-    GraftExtensions.installInto(spark)
     val df = samples.toDF("text")
     val txt = coalesce(col("text"), lit(""))
     def cnt(pattern: String) =
@@ -53,7 +52,6 @@ class ScriptCountsSpec extends SparkTestBase {
   }
 
   test("graft_bpe_count equals size(regexp_extract_all(bpe regex))") {
-    GraftExtensions.installInto(spark)
     val df = samples.toDF("text")
     val low = lower(coalesce(col("text"), lit("")))
     val got = df.select(
@@ -67,7 +65,6 @@ class ScriptCountsSpec extends SparkTestBase {
   }
 
   test("graft_ws_count equals size(split(normalize(text), ' '))") {
-    GraftExtensions.installInto(spark)
     val df = (samples ++ Seq(" leading", "trailing ", " both ",
       "a\t\tb", "\r\n", "x")).toDF("text")
     val norm = trim(regexp_replace(lower(coalesce(col("text"),
@@ -83,7 +80,6 @@ class ScriptCountsSpec extends SparkTestBase {
   }
 
   test("kernels are null-safe and codegen-stage friendly") {
-    GraftExtensions.installInto(spark)
     val df = Seq(Option("abc"), None).toDF("text")
     val got = df.select(
       call_function("graft_script_counts", col("text")).as("sc"),

@@ -11,8 +11,6 @@ import org.apache.spark.sql.functions._
 class SqlAggregatesSpec extends SparkTestBase {
   import spark.implicits._
 
-  GraftExtensions.installInto(spark)
-
   test("all five aggregate names resolve in the function registry") {
     for (n <- Seq("graft_interval_union", "graft_topk", "graft_reservoir",
                   "graft_vec_sum", "graft_gram"))

@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 class WordShinglesSpec extends SparkTestBase {
   import spark.implicits._
 
-  GraftExtensions.installInto(spark)
-
   test("matches the HOF wordShinglesOf form on real documents") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
@@ -53,8 +51,6 @@ class WordShinglesSpec extends SparkTestBase {
 
 class WinnowKernelSpec extends SparkTestBase {
   import spark.implicits._
-
-  GraftExtensions.installInto(spark)
 
   test("fused kernel selects the same fingerprint SET as the composable form") {
     import graft.operators.TextAnalysis

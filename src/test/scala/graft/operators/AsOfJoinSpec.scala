@@ -97,4 +97,207 @@ class AsOfJoinSpec extends SparkTestBase {
       .select($"rid", $"delta").as[(Long, Long)].collect().head
     assert(got == ((100L, 0L)))
   }
+
+  // ---- brute-force reference: every left row scans its key's right
+  // rows in memory; `rights` is one row per (key, ts) ----
+
+  private type L = (Long, Long, Long)    // (k, t, lid)
+  private type R = (Long, Long, Double)  // (k, rt, rv)
+
+  /** Latest right at or before t within `tol`: (asof_ts, rv). */
+  private def bruteBackward(ls: Seq[L], rs: Seq[R], tol: Option[Long])
+      : Map[Long, Option[(Long, Double)]] = {
+    val byK = rs.groupBy(_._1)
+    ls.map { case (k, t, lid) =>
+      lid -> byK.getOrElse(k, Nil)
+        .filter(r => r._2 <= t && tol.forall(t - r._2 <= _))
+        .sortBy(_._2).lastOption.map(r => (r._2, r._3))
+    }.toMap
+  }
+
+  /** Closest right within ±tol, equidistant ties backward:
+    * (asof_ts, delta = rt − t, rv).
+    */
+  private def bruteNearest(ls: Seq[L], rs: Seq[R], tol: Long)
+      : Map[Long, Option[(Long, Long, Double)]] = {
+    val byK = rs.groupBy(_._1)
+    ls.map { case (k, t, lid) =>
+      lid -> byK.getOrElse(k, Nil)
+        .filter(r => math.abs(r._2 - t) <= tol)
+        // smallest |Δ| first; on a tie the backward row (Δ ≤ 0) wins
+        .sortBy(r => (math.abs(r._2 - t), r._2 > t)).headOption
+        .map(r => (r._2, r._2 - t, r._3))
+    }.toMap
+  }
+
+  private def randomSides(seed: Int, nl: Int, nr: Int, keys: Int,
+                          span: Int): (Seq[L], Seq[R]) = {
+    val rnd = new scala.util.Random(seed)
+    val ls = (1 to nl).map(i =>
+      (rnd.nextInt(keys).toLong, rnd.nextInt(span).toLong, i.toLong))
+    // one row per (key, ts): the determinism contract (latestPerTs)
+    val rs = (1 to nr).map(i =>
+        (rnd.nextInt(keys + 5).toLong, rnd.nextInt(span).toLong, i.toDouble))
+      .groupBy(r => (r._1, r._2)).values.map(_.maxBy(_._3)).toSeq
+    (ls, rs)
+  }
+
+  private def nearestRows(df: org.apache.spark.sql.DataFrame)
+      : Map[Long, Option[(Long, Long, Double)]] =
+    df.select($"lid", $"asof_ts", $"delta", $"rv")
+      .as[(Long, Option[Long], Option[Long], Option[Double])].collect()
+      .map { case (lid, ts, d, rv) =>
+        lid -> ts.map(x => (x, d.get, rv.get)) }.toMap
+
+  test("randomized backward with tolerance matches brute force") {
+    val (ls, rs) = randomSides(23, 2000, 800, 20, 1000)
+    val l = ls.toDF("k", "t", "lid")
+    val r = rs.toDF("k", "rt", "rv")
+    for (tol <- Seq(None, Some(0L), Some(7L), Some(50L))) {
+      val got = AsOfJoin.asofBackward(l, r, Seq("k"), "t", "rt", Seq("rv"),
+          tolerance = tol)
+        .select($"lid", $"asof_ts", $"rv")
+        .as[(Long, Option[Long], Option[Double])].collect()
+        .map { case (lid, ts, rv) => lid -> ts.map(x => (x, rv.get)) }
+        .toMap
+      val want = bruteBackward(ls, rs, tol)
+      assert(got == want, s"tol=$tol")
+      assert(want.values.exists(_.isDefined) &&
+        want.values.exists(_.isEmpty), s"tol=$tol covers both outcomes")
+    }
+  }
+
+  test("randomized nearest matches brute force") {
+    val (ls, rs) = randomSides(29, 1500, 600, 15, 600)
+    val l = ls.toDF("k", "t", "lid")
+    val r = rs.toDF("k", "rt", "rv")
+    for (tol <- Seq(0L, 7L, 50L, 1000L)) {
+      val got = nearestRows(AsOfJoin.asofNearest(l, r, Seq("k"), "t", "rt",
+        Seq("rv"), tol))
+      val want = bruteNearest(ls, rs, tol)
+      assert(got == want, s"tol=$tol")
+      // tol = 0 admits only Δ = 0; every wider tolerance must exercise
+      // the forward direction
+      assert(want.values.exists(_.isDefined) &&
+        (tol == 0 || want.values.exists(_.exists(_._2 > 0))),
+        s"tol=$tol exercises the match directions")
+    }
+  }
+
+  test("TimestampType: tolerance and delta in microseconds") {
+    // whole-second inputs: the brute force runs on seconds, the operator
+    // on timestamps with a tolerance in micros — every delta must be the
+    // seconds delta × 10⁶, and |delta| ≤ tolerance
+    val (ls, rs) = randomSides(31, 800, 400, 10, 600)
+    val l = ls.toDF("k", "sec", "lid")
+      .select($"k", timestamp_seconds($"sec").as("t"), $"lid")
+    val r = rs.toDF("k", "sec", "rv")
+      .select($"k", timestamp_seconds($"sec").as("rt"), $"rv")
+    for (tolSec <- Seq(0L, 7L, 50L)) {
+      val tol = tolSec * 1000000L
+      val got = AsOfJoin.asofNearest(l, r, Seq("k"), "t", "rt", Seq("rv"),
+          tol)
+        .select($"lid", unix_seconds($"asof_ts"), $"delta", $"rv")
+        .as[(Long, Option[Long], Option[Long], Option[Double])].collect()
+      val deltas = got.flatMap(_._3)
+      assert(deltas.nonEmpty && deltas.forall(d =>
+        math.abs(d) <= tol && d % 1000000L == 0),
+        s"delta units broke at tol=$tol")
+      val want = bruteNearest(ls, rs, tolSec).map { case (lid, m) =>
+        lid -> m.map { case (ts, d, rv) => (ts, d * 1000000L, rv) } }
+      assert(got.map { case (lid, ts, d, rv) =>
+        lid -> ts.map(x => (x, d.get, rv.get)) }.toMap == want,
+        s"tol=$tol micros")
+    }
+  }
+
+  test("TimestampNTZType agrees with TimestampType under UTC") {
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    val (ls, rs) = randomSides(37, 400, 200, 8, 500)
+    def run(tsType: String) = {
+      val l = ls.toDF("k", "sec", "lid")
+        .select($"k", timestamp_seconds($"sec").cast(tsType).as("t"),
+          $"lid")
+      val r = rs.toDF("k", "sec", "rv")
+        .select($"k", timestamp_seconds($"sec").cast(tsType).as("rt"),
+          $"rv")
+      AsOfJoin.asofNearest(l, r, Seq("k"), "t", "rt", Seq("rv"),
+          30L * 1000000L)
+        .select($"lid", $"asof_ts".cast("string"), $"delta", $"rv")
+        .collect().map(_.toSeq.map(String.valueOf).mkString("|"))
+        .sorted.toSeq
+    }
+    val ntz = run("timestamp_ntz")
+    assert(ntz == run("timestamp") && ntz.exists(!_.contains("null")))
+  }
+
+  test("DateType tolerance counts days") {
+    val l = Seq((1L, "2024-01-10", "in"), (1L, "2024-02-10", "stale"),
+        (1L, "2024-01-06", "before"))
+      .toDF("k", "d", "lv")
+      .select($"k", to_date($"d").as("t"), $"lv")
+    val r = Seq((1L, "2024-01-08", 1.0)).toDF("k", "d", "rv")
+      .select($"k", to_date($"d").as("rt"), $"rv")
+    // backward: Δ = 2 days (within 5) matches; Δ = 33 days expires
+    val back = AsOfJoin.asofBackward(l, r, Seq("k"), "t", "rt", Seq("rv"),
+        tolerance = Some(5L))
+      .select($"lv", $"asof_ts".cast("string"))
+      .as[(String, Option[String])].collect().toMap
+    assert(back == Map("in" -> Some("2024-01-08"), "stale" -> None,
+      "before" -> None))
+    // nearest: delta is a day count, signed rt − t
+    val near = AsOfJoin.asofNearest(l, r, Seq("k"), "t", "rt", Seq("rv"),
+        tolerance = 5L)
+      .select($"lv", $"delta").as[(String, Option[Long])].collect().toMap
+    assert(near == Map("in" -> Some(-2L), "stale" -> None,
+      "before" -> Some(2L)))
+  }
+
+  test("empty right side: every left row survives with nulls") {
+    val l = Seq((1L, 10L, 7L), (2L, 20L, 8L)).toDF("k", "t", "lid")
+    val r = Seq.empty[R].toDF("k", "rt", "rv")
+    val back = AsOfJoin.asofBackward(l, r, Seq("k"), "t", "rt", Seq("rv"))
+      .select($"lid", $"asof_ts", $"rv")
+      .as[(Long, Option[Long], Option[Double])].collect().toSet
+    assert(back == Set((7L, None, None), (8L, None, None)))
+    assert(nearestRows(AsOfJoin.asofNearest(l, r, Seq("k"), "t", "rt",
+      Seq("rv"), 100L)) == Map(7L -> None, 8L -> None))
+  }
+
+  test("NULL right key never matches") {
+    // a NULL right key must not pair with any left key — in particular
+    // not with 0, the default a null long slot would read as
+    import org.apache.spark.sql.types._
+    val l = Seq((0L, 10L, 1L), (1L, 10L, 2L)).toDF("k", "t", "lid")
+    assert(!l.schema("k").nullable)
+    val r = spark.createDataFrame(
+      java.util.Arrays.asList(
+        org.apache.spark.sql.Row(null, 5L, 9.0),
+        org.apache.spark.sql.Row(1L: java.lang.Long, 5L, 2.0)),
+      StructType(Seq(
+        StructField("k", LongType, nullable = true),
+        StructField("rt", LongType, nullable = false),
+        StructField("rv", DoubleType, nullable = false))))
+    val back = AsOfJoin.asofBackward(l, r, Seq("k"), "t", "rt", Seq("rv"))
+      .select($"lid", $"rv").as[(Long, Option[Double])].collect().toMap
+    assert(back == Map(1L -> None, 2L -> Some(2.0)))
+    assert(nearestRows(AsOfJoin.asofNearest(l, r, Seq("k"), "t", "rt",
+      Seq("rv"), 100L)) == Map(1L -> None, 2L -> Some((5L, -5L, 2.0))))
+  }
+
+  test("result is invariant to input partitioning") {
+    val l = (1 to 500).map(i => ((i % 7).toLong, (i * 13 % 100).toLong,
+      i.toLong)).toDF("k", "t", "lid")
+    val r = (1 to 200).map(i => ((i % 9).toLong, (i * 7 % 100).toLong,
+      i.toDouble)).toDF("k", "rt", "rv")
+      .groupBy("k", "rt").agg(max($"rv").as("rv"))
+    def run(lp: Int, rp: Int) = {
+      val (l2, r2) = (l.repartition(lp), r.repartition(rp))
+      Seq(
+        AsOfJoin.asofBackward(l2, r2, Seq("k"), "t", "rt", Seq("rv")),
+        AsOfJoin.asofNearest(l2, r2, Seq("k"), "t", "rt", Seq("rv"), 5L))
+        .map(_.collect().map(_.toString).sorted.toSeq)
+    }
+    assert(run(2, 5) == run(7, 1))
+  }
 }

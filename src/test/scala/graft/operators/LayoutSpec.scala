@@ -22,7 +22,6 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("kernel agrees with the Column-arithmetic zValue2 on 16-bit input") {
-    graft.functions.GraftExtensions.installInto(spark)
     val xs = Seq(0L, 1L, 2L, 255L, 256L, 4095L, 65535L, 31337L)
     val df = (for (x <- xs; y <- xs) yield (x, y)).toDF("x", "y")
       .withColumn("k", org.apache.spark.sql.functions.call_function(

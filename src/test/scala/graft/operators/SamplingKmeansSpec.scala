@@ -456,7 +456,6 @@ class HyperplaneLshSpec extends SparkTestBase {
   }
 
   test("fused kernel ≡ per-bit HOF formulation (seeded property)") {
-    graft.functions.GraftExtensions.installInto(spark)
     val rnd = new scala.util.Random(29)
     val dim = 12; val bits = 16; val bandBits = 4
     val vecs = (0L until 30L)
@@ -504,7 +503,6 @@ class HyperplaneLshSpec extends SparkTestBase {
   }
 
   test("kernel edge semantics: wrong dim / null element → all-zero bands") {
-    graft.functions.GraftExtensions.installInto(spark)
     val vecs = Seq(
       (1L, Array(1f, 2f)),              // dim mismatch (expects 3)
       (2L, Array(1f, 2f, 3f))           // clean

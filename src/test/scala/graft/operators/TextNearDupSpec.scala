@@ -13,7 +13,6 @@ class TextAnalysisSpec extends SparkTestBase {
   }
 
   test("nfc/strip_accents kernels: decomposed forms fold; ASCII zero-copy") {
-    graft.functions.GraftExtensions.installInto(spark)
     val df = Seq("Cafe\u0301", "Caf\u00e9", "plain ascii", "u\u0308ber")
       .toDF("text")
     val got = df.select(TextAnalysis.nfcNormalize($"text").as("n"),
@@ -53,7 +52,6 @@ class TextAnalysisSpec extends SparkTestBase {
   }
 
   test("charEntropy: known distributions; empty → 0; kernel matches log2") {
-    graft.functions.GraftExtensions.installInto(spark)
     val df = Seq("aabb", "abcd", "aaaa", "").toDF("text")
     val got = df.select(TextAnalysis.charEntropy($"text"))
       .as[Double].collect()
@@ -234,7 +232,6 @@ class TextAnalysisSpec extends SparkTestBase {
 
   test("graft_top_count == the O(n²) Column formulation on the real corpus") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftExtensions.installInto(spark)
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id", TextAnalysis.tokens($"text").as("toks"))
@@ -773,7 +770,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("int8 quantization: bounds, zeros, ties-away-from-zero rounding") {
-    graft.functions.GraftExtensions.installInto(spark)
     import org.apache.spark.sql.functions.call_function
     val df = Seq(
       (1L, Array(1f, -1f, 0.5f, -0.5f)),   // ±127, round(63.5)=64, -64

@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions._
 class TextStatsWave4Spec extends SparkTestBase {
   import spark.implicits._
 
-  graft.functions.GraftExtensions.installInto(spark)
-
   test("graft_lcp: exact prefix lengths, codegen and interpreted agree") {
     val df = Seq(("abcx", "abcy"), ("", "abc"), ("same", "same"),
       ("a", "b")).toDF("a", "b")

@@ -7,8 +7,6 @@ class AsOfJoinExecSpec extends SparkTestBase {
   import spark.implicits._
   import graft.operators.AsOfJoin
 
-  graft.functions.GraftExtensions.installInto(spark)
-
   test("plan: custom exec node, co-partitioned sort-merge shape") {
     val l = Seq((1L, 10L, "a")).toDF("k", "t", "lv")
     val r = Seq((1L, 5L, 2.0)).toDF("k", "rt", "rv")

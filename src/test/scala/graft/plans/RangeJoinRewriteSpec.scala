@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 class RangeJoinRewriteSpec extends SparkTestBase {
   import spark.implicits._
 
-  graft.functions.GraftExtensions.installInto(spark)
-
   private def intervals: DataFrame =
     Seq((1L, 0L, 99L), (2L, 50L, 149L), (3L, 500L, 500L),
         (4L, 700L, 650L)) // inverted — can never match
