@@ -190,7 +190,6 @@ object Bench {
     // third of every median was JIT warm-up, not engine). With it, all
     // recorded passes are steady-state — directly comparable to the old
     // query-major protocol whose median also landed on warm reps.
-    // $SPARK_GRAFT_BENCH_WARMPASS=0 skips it (fast local iteration).
     // PRE-FLIGHT CONTENTION CHECK (VERDICT r15 #7): the r15 driver leg
     // self-declared CONTENDED only after burning a full 416 s run. One
     // parallel hostcal sample BEFORE any warm-up (HostCal self-warms
@@ -205,23 +204,17 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] warm-up $name failed: ${e.getMessage}")
       }
-    if (sys.env.get("SPARK_GRAFT_BENCH_WARMPASS").forall(_ != "0")) {
-      val w0 = System.nanoTime()
-      baseOrder.foreach { case (n, _) =>
-        runOnce(n)
-        // same cache/state hygiene as timed runs (persisted
-        // intermediates and drained state stores must not leak into
-        // pass 0), but no per-query System.gc — warm-up isn't measured
-        spark.catalog.clearCache()
-        org.apache.spark.sql.GraftSqlBridge.unloadStateStores()
-      }
-      System.err.println(f"[bench] warm-up pass: ${baseOrder.size} " +
-        f"queries in ${(System.nanoTime() - w0) / 1e9}%.1f s")
-    } else {
-      runOnce("q1_agg")
-      baseOrder.collectFirst { case (n, _) if n.contains("stream") => n }
-        .foreach(runOnce)
+    val w0 = System.nanoTime()
+    baseOrder.foreach { case (n, _) =>
+      runOnce(n)
+      // same cache/state hygiene as timed runs (persisted intermediates
+      // and drained state stores must not leak into pass 0), but no
+      // per-query System.gc — warm-up isn't measured
+      spark.catalog.clearCache()
+      org.apache.spark.sql.GraftSqlBridge.unloadStateStores()
     }
+    System.err.println(f"[bench] warm-up pass: ${baseOrder.size} " +
+      f"queries in ${(System.nanoTime() - w0) / 1e9}%.1f s")
     spark.catalog.clearCache()
     // calibrate BEFORE and AFTER the query loop: round 11's host slowed
     // ~7% DURING the session (1950 -> 2090 ms on the python twin), so a

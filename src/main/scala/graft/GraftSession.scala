@@ -128,43 +128,19 @@ object GraftSession {
       // released-when-superseded lifetime localCheckpoint blocks get.
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       // the engine's SparkSessionExtensions: native function kernels +
-      // the RangeJoinRewrite optimizer rule (rule is conf-gated, so
-      // registering it is free until a query opts in)
+      // the as-of join planner strategy
       .config("spark.sql.extensions",
               "graft.functions.GraftExtensions")
       // per-session artifact isolation (on by default since Spark 4)
       // gives every session its own class loader, and the codegen cache
-      // is per class loader: each `newSession()` clone (withConf, drain
-      // sessions) recompiled every whole-stage class of its first query
-      // — q199 at the 10x twin recompiled 10 classes per build and ran
-      // 3.1 s against 1.7 s on a reused session (local[4]). The engine
-      // adds no per-session jars or files, so its sessions share one
-      // loader and one codegen cache.
+      // is per class loader: each `newSession()` clone (the streaming
+      // drain sessions) recompiled every whole-stage class of its first
+      // query — a q199 build on a fresh clone at the 10x twin recompiled
+      // 10 classes and ran 3.1 s against 1.7 s on a reused session
+      // (local[4]). The engine adds no per-session jars or files, so its
+      // sessions share one loader and one codegen cache.
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
-
-  /** A clone of `s` with `kv` set on top of its runtime conf: the way to
-    * scope a setting to one query's frames. The clone shares the
-    * SparkContext, the cached data and the extensions (functions and
-    * optimizer rules); frames built on it plan and run under its conf,
-    * and nothing set here reaches `s` or any other clone — where
-    * setting and unsetting a key on a shared session would leak it to,
-    * or clear it under, every other query running there meanwhile.
-    */
-  def withConf(s: SparkSession, kv: (String, String)*): SparkSession = {
-    val c = s.newSession()
-    // newSession starts from the SparkConf defaults, not the parent's
-    // RUNTIME session conf — copy it so the clone keeps the engine's
-    // settings (state-store provider, join state format, shuffle width)
-    // in every environment, including test suites that configure a
-    // session over an existing context. Static confs refuse runtime
-    // set — skip them (they are shared anyway).
-    s.conf.getAll.foreach { case (k, v) =>
-      try c.conf.set(k, v) catch { case _: Throwable => () }
-    }
-    kv.foreach { case (k, v) => c.conf.set(k, v) }
-    c
-  }
 
   /** Read one of the driver-provided parquet tables from an sf directory,
     * with the event-time column normalized (see [[normalizeEventTime]]).

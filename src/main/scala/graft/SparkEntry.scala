@@ -881,10 +881,7 @@ object SparkEntry {
       val sess = graft.streaming.Streams.sessionAgg(
         ready.select(col("user_id"), eventTimestamp("ts").as("ets")),
         Seq("user_id"), "ets", "1800 seconds", "0 seconds")
-      val qname = "graft_q43_sessions"
-      val query = graft.streaming.Streams.drainToMemory(sess, qname).start()
-      try query.awaitTermination() finally query.stop()
-      sd.table(qname)
+      graft.streaming.Streams.drainToMemory(sess, "graft_q43_sessions")
         .select(col("user_id"),
           col("sess_start").cast("long").as("sess_start"),
           col("sess_end").cast("long").as("sess_end"),
@@ -1699,11 +1696,8 @@ object SparkEntry {
         .groupBy(col("user_id"))
         .agg(round(sum(col("_dv")), 6).as("decayed_value"),
           count(lit(1)).as("n_events"))
-      val qname = "graft_q172_decay"
-      val query = graft.streaming.Streams.drainToMemory(agg, qname)
-        .start()
-      try query.awaitTermination() finally query.stop()
-      s.table(qname).orderBy(col("user_id"))
+      graft.streaming.Streams.drainToMemory(agg, "graft_q172_decay")
+        .orderBy(col("user_id"))
     }),
 
     // Lower weighted median: each lineitem votes with its quantity —
@@ -1809,11 +1803,9 @@ object SparkEntry {
           Seq("user_id"), "a_ts", "b_ts", "10 minutes", "1 minute",
           joinType = "left_outer")
         .select(col("user_id"), col("a_id"), col("b_id"))
-      val qname = "graft_q205_left_join"
-      val query = graft.streaming.Streams.drainToMemory(joined, qname,
-        "append").start()
-      try query.awaitTermination() finally query.stop()
-      s.table(qname).where(col("user_id") >= 0)
+      graft.streaming.Streams
+        .drainToMemory(joined, "graft_q205_left_join", "append")
+        .where(col("user_id") >= 0)
         .orderBy(col("user_id"), col("a_id"), col("b_id"))
     }),
 
@@ -1930,15 +1922,13 @@ object SparkEntry {
         .orderBy(col("id"))
     }),
 
-    // Interval-OVERLAP theta join through the RangeJoinRewrite rule's
-    // SHAPE 2 (both sides explode; the join credits only the bucket
-    // holding max(a_lo, b_lo), so each overlapping pair matches
-    // exactly once) — q199 proves shape 1; this carries shape 2's
-    // oracle row. Price bands of two order samples: overlap ⇔ totals
-    // within 10000 cents
-    "q232_overlap_rule_join" -> ((s0, dir) => {
-      val s = GraftSession.withConf(s0,
-        graft.plans.RangeJoinRewrite.BinSizeKey -> "20000")
+    // Interval-OVERLAP join on RangeJoin.bucketedOverlapJoin (both
+    // sides explode into width-20000 buckets; the join credits only the
+    // bucket holding max(a_lo, b_lo), so each overlapping pair matches
+    // exactly once). The registry name is historical: it once ran
+    // through an optimizer rule. Price bands of two order samples:
+    // overlap ⇔ totals within 10000 cents
+    "q232_overlap_rule_join" -> ((s, dir) => {
       val o = t(s, dir, "orders").select(col("o_orderkey"),
         (col("o_totalprice").cast("decimal(18,2)") * 100)
           .cast("long").as("cents"))
@@ -1950,9 +1940,9 @@ object SparkEntry {
         .select(col("o_orderkey").as("b_id"),
           (col("cents") - 5000L).as("b_lo"),
           (col("cents") + 5000L).as("b_hi"))
-      a.join(b,
-          col("a_lo") <= col("b_hi") && col("b_lo") <= col("a_hi") &&
-            col("a_id") =!= col("b_id"))
+      RangeJoin.bucketedOverlapJoin(a, b, Seq.empty,
+          "a_lo", "a_hi", "b_lo", "b_hi", bucketWidth = 20000L)
+        .where(col("a_id") =!= col("b_id"))
         .select(col("a_id"), col("b_id"))
         .orderBy(col("a_id"), col("b_id"))
     }),
@@ -2000,14 +1990,11 @@ object SparkEntry {
           col("value").cast("double").as("v"))
         .groupBy(col("event_type"))
         .agg(ra(col("h"), col("v")).as("smp"))
-      val qname = "graft_q234_reservoir"
-      val query = graft.streaming.Streams.drainToMemory(agg, qname,
-        outputMode = "complete").start()
-      try query.awaitTermination() finally query.stop()
       val m = size(col("smp"))
       def at(p: Double) = round(element_at(col("smp"),
         greatest(lit(1), ceil(lit(p) * m).cast("int"))), 6)
-      s.table(qname)
+      graft.streaming.Streams
+        .drainToMemory(agg, "graft_q234_reservoir", "complete")
         .select(col("event_type"), m.cast("long").as("n_sample"),
           at(0.25).as("p25"), at(0.50).as("p50"), at(0.90).as("p90"))
         .orderBy(col("event_type"))
@@ -2225,11 +2212,7 @@ object SparkEntry {
       val agg = eventsStream(s, dir)
         .groupBy(col("user_id"))
         .agg(min(expr("unix_micros(ts)")).as("first_us"))
-      val qname = "graft_q248_newusers"
-      val query = graft.streaming.Streams.drainToMemory(agg, qname)
-        .start()
-      try query.awaitTermination() finally query.stop()
-      s.table(qname)
+      graft.streaming.Streams.drainToMemory(agg, "graft_q248_newusers")
         .groupBy(expr("first_us DIV 86400000000").as("day"))
         .agg(count(lit(1)).as("new_users"))
         .orderBy(col("day"))
@@ -3106,15 +3089,12 @@ object SparkEntry {
         .agg(count(lit(1)).as("c"))
         .select(col("window.start").cast("long").as("w_start"),
           col("bin"), col("c"))
-      val qname = "graft_q225_drift"
-      val query = graft.streaming.Streams.drainToMemory(agg, qname)
-        .start()
-      try query.awaitTermination() finally query.stop()
       // parquet round-trip: the memory-sink view cannot appear on both
       // sides of the spine join (conflicting attribute ids inside the
       // MemoryPlan view defeat join dedup); the table is windows×10
       val winsPath = scratch(s, "q225")
-      sd.table(qname).write.mode("overwrite").parquet(winsPath)
+      graft.streaming.Streams.drainToMemory(agg, "graft_q225_drift")
+        .write.mode("overwrite").parquet(winsPath)
       val wins = s.read.parquet(winsPath)
       val ref = t(s, dir, "events").select(bin.as("bin"))
         .groupBy(col("bin")).agg(count(lit(1)).as("rc"))
@@ -3528,17 +3508,13 @@ object SparkEntry {
         .orderBy(col("source"))
     }),
 
-    // Point-in-interval theta join through the RangeJoinRewrite
-    // OPTIMIZER RULE (plans/RangeJoinRewrite.scala): the query is the
-    // natural inequality join — no manual bucketing — and the opt-in
-    // rule rewrites it to the exploded-bucket equi-join (hash shuffle,
-    // no BNLJ/cartesian). The bin size is scoped to a session clone
-    // (GraftSession.withConf), so the frame stays lazy and no other
-    // query sharing the caller's session sees the setting;
-    // RangeJoinRewriteSpec pins the plan shape and parity
-    "q199_range_band_join" -> ((s0, dir) => {
-      val s = GraftSession.withConf(s0,
-        graft.plans.RangeJoinRewrite.BinSizeKey -> "10000")
+    // Point-in-interval band join on RangeJoin.bucketedOverlapJoin:
+    // each order's cents is a degenerate interval [cents, cents], so it
+    // lands in exactly one width-10000 bucket and the band side explodes
+    // into the buckets it covers (hash shuffle, no BNLJ/cartesian). The
+    // helper's predicate is closed; the band's half-open upper bound is
+    // the residual `cents < hi`
+    "q199_range_band_join" -> ((s, dir) => {
       val o = t(s, dir, "orders").select(col("o_orderkey"),
         (col("o_totalprice").cast("decimal(18,2)") * 100)
           .cast("long").as("cents"))
@@ -3546,9 +3522,10 @@ object SparkEntry {
         .select(col("o_orderkey").as("band_id"),
           (col("cents") - 5000L).as("lo"),
           (col("cents") + 5000L).as("hi"))
-      o.join(bands,
-          col("lo") <= col("cents") && col("cents") < col("hi") &&
-            col("o_orderkey") =!= col("band_id"))
+      RangeJoin.bucketedOverlapJoin(o, bands, Seq.empty,
+          "cents", "cents", "lo", "hi", bucketWidth = 10000L)
+        .where(col("cents") < col("hi") &&
+          col("o_orderkey") =!= col("band_id"))
         .groupBy(col("band_id"))
         .agg(count(lit(1)).as("n_in_band"),
           min(col("o_orderkey")).as("first_pt"))
@@ -3611,11 +3588,7 @@ object SparkEntry {
         .dropDuplicates("w", "event_type", "user_id")
       val agg = deduped.groupBy(col("w"), col("event_type"))
         .agg(count(lit(1)).as("distinct_users"))
-      val qname = "graft_q197_distinct"
-      val query = graft.streaming.Streams.drainToMemory(agg, qname)
-        .start()
-      try query.awaitTermination() finally query.stop()
-      sd.table(qname)
+      graft.streaming.Streams.drainToMemory(agg, "graft_q197_distinct")
         .select(col("w.start").cast("long").as("w_start"),
           col("event_type"), col("distinct_users"))
         .orderBy(col("w_start"), col("event_type"))
@@ -3755,11 +3728,7 @@ object SparkEntry {
         .select(col("event_type"), col("value"), col("event_id"))
         .groupBy(col("event_type"))
         .agg(tk(col("value"), col("event_id")).as("top"))
-      val qname = "graft_q187_topk"
-      val query = graft.streaming.Streams.drainToMemory(agg, qname)
-        .start()
-      try query.awaitTermination() finally query.stop()
-      s.table(qname)
+      graft.streaming.Streams.drainToMemory(agg, "graft_q187_topk")
         .select(col("event_type"), posexplode(col("top")))
         .select(col("event_type"),
           (col("pos") + 1).cast("int").as("rnk"),
@@ -3986,10 +3955,8 @@ object SparkEntry {
             .cast("long").as("bar_id"),
           col("open"), col("high"), col("low"), col("close"),
           col("volume"), col("mean_value"))
-      val qname = "graft_q151_ohlc"
-      val query = graft.streaming.Streams.drainToMemory(agg, qname).start()
-      try query.awaitTermination() finally query.stop()
-      sd.table(qname).orderBy(col("bar_id"))
+      graft.streaming.Streams.drainToMemory(agg, "graft_q151_ohlc")
+        .orderBy(col("bar_id"))
     }),
 
     // Iterative k-core peel (k=5, 3 rounds) on a sparsified co-order
@@ -4064,11 +4031,9 @@ object SparkEntry {
         .as[graft.streaming.StatefulFunnel.KeyedEvent]
       val heads = graft.streaming.StatefulFunnel
         .debounce(evs, 86400L * 1000000L)
-      val qname = "graft_q139_debounce"
-      val query = graft.streaming.Streams
-        .drainToMemory(heads.toDF(), qname, outputMode = "append").start()
-      try query.awaitTermination() finally query.stop()
-      s.table(qname).select(col("tie").as("event_id"))
+      graft.streaming.Streams
+        .drainToMemory(heads.toDF(), "graft_q139_debounce", "append")
+        .select(col("tie").as("event_id"))
         .orderBy(col("event_id"))
     }),
 
@@ -4162,11 +4127,9 @@ object SparkEntry {
         .as[graft.streaming.StatefulFunnel.StepEvent]
       val revs = graft.streaming.StatefulFunnel
         .trackUnordered(evs, steps.length, 86400L)
-      val qname = "graft_q130_funnel"
-      val query = graft.streaming.Streams
-        .drainToMemory(revs.toDF(), qname, outputMode = "append").start()
-      try query.awaitTermination() finally query.stop()
-      val fin = s.table(qname).groupBy(col("key"))
+      val fin = graft.streaming.Streams
+        .drainToMemory(revs.toDF(), "graft_q130_funnel", "append")
+        .groupBy(col("key"))
         .agg(max_by(col("reached"), col("rev")).as("reached"))
         .where(col("reached") >= 1)
       steps.zipWithIndex.map { case (st, i) => (i + 1, st) }
@@ -4593,11 +4556,8 @@ object SparkEntry {
       val novel = NearDup.simhashNoveltyGate(stream, index,
           "doc_id", "text")
         .select(col("doc_id"), col("simhash_hex"))
-      val qname = "graft_q83_gate"
-      val query = graft.streaming.Streams.drainToMemory(novel, qname,
-        "append").start()
-      try query.awaitTermination() finally query.stop()
-      s.table(qname).orderBy(col("doc_id"))
+      graft.streaming.Streams.drainToMemory(novel, "graft_q83_gate", "append")
+        .orderBy(col("doc_id"))
     }),
 
     // One-pass numeric profiling: per-column nulls / exact distincts /
@@ -4886,11 +4846,9 @@ object SparkEntry {
       val joined = graft.streaming.Streams.intervalJoin(a, b,
           Seq("user_id"), "a_ts", "b_ts", "10 minutes", "1 minute")
         .select(col("user_id"), col("a_id"), col("b_id"))
-      val qname = "graft_q78_join"
-      val query = graft.streaming.Streams.drainToMemory(joined, qname,
-        "append").start()
-      try query.awaitTermination() finally query.stop()
-      sd.table(qname).orderBy(col("user_id"), col("a_id"), col("b_id"))
+      graft.streaming.Streams
+        .drainToMemory(joined, "graft_q78_join", "append")
+        .orderBy(col("user_id"), col("a_id"), col("b_id"))
     }),
 
     // Dedup modality 5: embedding-cosine near-duplicates, IVF-cell
@@ -5037,10 +4995,8 @@ object SparkEntry {
         stream.select(eventTimestamp("ts").as("ets"),
                       col("value").cast("decimal(18,4)").as("v")),
         "ets", "v", "1 day", "0 seconds")
-      val qname = "graft_q54_tumbling"
-      val query = graft.streaming.Streams.drainToMemory(agg, qname).start()
-      try query.awaitTermination() finally query.stop()
-      sd.table(qname).select(
+      graft.streaming.Streams.drainToMemory(agg, "graft_q54_tumbling")
+        .select(
           col("w_start").cast("long").as("w_start"),
           col("w_end").cast("long").as("w_end"),
           col("n_events"),
@@ -5068,10 +5024,8 @@ object SparkEntry {
         .groupBy(window(col("ets"), "1 day"),
           coalesce(col("c_nationkey"), lit(-1L)).as("c_nationkey"))
         .agg(count(lit(1)).as("n_events"), sum(col("v")).as("sum_value"))
-      val qname = "graft_q69_enrich"
-      val query = graft.streaming.Streams.drainToMemory(agg, qname).start()
-      try query.awaitTermination() finally query.stop()
-      sd.table(qname).select(
+      graft.streaming.Streams.drainToMemory(agg, "graft_q69_enrich")
+        .select(
           col("window.start").cast("long").as("w_start"),
           col("c_nationkey"), col("n_events"),
           round(col("sum_value"), 4).cast("double").as("sum_value"))
@@ -5090,10 +5044,8 @@ object SparkEntry {
         stream.select(eventTimestamp("ts").as("ets"),
                       col("value").cast("decimal(18,4)").as("v")),
         "ets", "v", "1 day", "12 hours", "0 seconds")
-      val qname = "graft_q55_sliding"
-      val query = graft.streaming.Streams.drainToMemory(agg, qname).start()
-      try query.awaitTermination() finally query.stop()
-      sd.table(qname).select(
+      graft.streaming.Streams.drainToMemory(agg, "graft_q55_sliding")
+        .select(
           col("w_start").cast("long").as("w_start"),
           col("w_end").cast("long").as("w_end"),
           col("n_events"),
@@ -5113,11 +5065,9 @@ object SparkEntry {
       val dedup = graft.streaming.Streams.streamDedup(
         stream.select(TextAnalysis.fingerprint(col("text")).as("fp")),
         Seq("fp"))
-      val qname = "graft_q56_dedup"
-      val query = graft.streaming.Streams
-        .drainToMemory(dedup, qname, outputMode = "append").start()
-      try query.awaitTermination() finally query.stop()
-      s.table(qname).agg(count(lit(1)).as("n_classes"))
+      graft.streaming.Streams
+        .drainToMemory(dedup, "graft_q56_dedup", "append")
+        .agg(count(lit(1)).as("n_classes"))
     }),
 
     // The streaming CURATION PIPELINE end-to-end (the streaming twin of
@@ -5141,11 +5091,9 @@ object SparkEntry {
           TextAnalysis.fingerprint(col("text")).as("fp"))
       val dedup = graft.streaming.Streams.streamDedup(curated,
         Seq("source", "fp"))
-      val qname = "graft_q61_pipeline"
-      val query = graft.streaming.Streams
-        .drainToMemory(dedup, qname, outputMode = "append").start()
-      try query.awaitTermination() finally query.stop()
-      s.table(qname).groupBy(col("source"))
+      graft.streaming.Streams
+        .drainToMemory(dedup, "graft_q61_pipeline", "append")
+        .groupBy(col("source"))
         .agg(count(lit(1)).as("n_classes"))
         .orderBy(col("source"))
     }),
@@ -5183,11 +5131,8 @@ object SparkEntry {
         .as[graft.streaming.StatefulSessions.TsEvent]
       val sess = graft.streaming.StatefulSessions
         .sessionizeWithTimeout(tsEvents, 1800L, "0 seconds")
-      val qname = "graft_q49_sessions"
-      val query = graft.streaming.Streams
-        .drainToMemory(sess.toDF(), qname, outputMode = "append").start()
-      try query.awaitTermination() finally query.stop()
-      s.table(qname)
+      graft.streaming.Streams
+        .drainToMemory(sess.toDF(), "graft_q49_sessions", "append")
         .select(col("key").as("user_id"), col("sess_start"),
                 col("sess_end"), col("n_rows"))
         .orderBy(col("user_id"), col("sess_start"))

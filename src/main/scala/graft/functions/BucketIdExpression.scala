@@ -60,9 +60,8 @@ object BucketId {
 
 /** SparkSessionExtensions installer: registers the engine's functions
   * (`bucket_id(pos, width)` and the rest of `GraftExtensions.entries`)
-  * for SQL and the Column API, the [[graft.plans.RangeJoinRewrite]]
-  * optimizer rule and the [[graft.plans.AsOfJoinStrategy]] planner
-  * strategy. `GraftSession.configure` sets
+  * for SQL and the Column API, and the [[graft.plans.AsOfJoinStrategy]]
+  * planner strategy. `GraftSession.configure` sets
   * `spark.sql.extensions=graft.functions.GraftExtensions`, so every
   * engine session and every `newSession()` clone of one carries them;
   * any other session is built with
@@ -71,7 +70,6 @@ object BucketId {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.entries.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }

@@ -51,21 +51,4 @@ object Bucketize {
     df.join(broadcast(dict), Seq(groupCol))
       .withColumn(bucketCol, bucketId(col(posCol), col("bucket_width")))
       .drop("bucket_width")
-
-  /** Fixed-width variant (no dict): `bucket = floor(pos / width)`. */
-  def withFixedBucket(df: DataFrame, posCol: String, width: Long,
-                      bucketCol: String = "bucket"): DataFrame =
-    df.withColumn(bucketCol, bucketId(col(posCol), lit(width)))
-
-  /** Physically co-locate rows of one (group, bucket) — the shuffle the
-    * reference did by writing per-(chr,reg) HDFS files
-    * (S/SparkGA1.scala:192,196). Hash partitioning keeps all rows of a
-    * bucket in one partition for downstream mapPartitions/sort.
-    */
-  def colocate(df: DataFrame, groupCol: String, bucketCol: String,
-               numPartitions: Option[Int] = None): DataFrame =
-    numPartitions match {
-      case Some(n) => df.repartition(n, col(groupCol), col(bucketCol))
-      case None    => df.repartition(col(groupCol), col(bucketCol))
-    }
 }

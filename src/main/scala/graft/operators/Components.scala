@@ -83,13 +83,10 @@ object Components {
     * millis. Costs nothing beyond the counts the convergence logic
     * already takes — the point is that a drifting bench number can be
     * attributed to "more rounds" vs "same rounds, slower rounds" from
-    * the log alone. Disable with
-    * `spark.graft.closure.log=false` (session conf).
+    * the log alone.
     */
-  private def logRound(spark: org.apache.spark.sql.SparkSession,
-                       msg: String): Unit =
-    if (spark.conf.get("spark.graft.closure.log", "true") == "true")
-      System.err.println(s"[graft.closure] $msg")
+  private def logRound(msg: String): Unit =
+    System.err.println(s"[graft.closure] $msg")
 
   /** Plan-shape diagnostics for pinned intermediates: a pin EXECUTES its
     * frame's plan at operator-construction time, so the result frame's
@@ -367,9 +364,8 @@ object Components {
       val out = localUnionFind(e0, idType)
         .select(col("id"), col("component"))
       releasePin(e0, reliable)
-      logRound(spark,
-        f"local union-find: edges=$m " +
-          f"${(System.nanoTime() - t0) / 1e6}%.0f ms")
+      logRound(f"local union-find: edges=$m " +
+        f"${(System.nanoTime() - t0) / 1e6}%.0f ms")
       return out
     }
     // Cap sym's partition count at the session shuffle width: sym is
@@ -387,9 +383,8 @@ object Components {
     var labels = pin(sym.select(col("s").as("id")).distinct()
       .select(col("id"), col("id").as("lab")), reliable)
     val n = labels.count()
-    logRound(spark,
-      f"hashmin seed: nodes=$n edges=$m " +
-        f"${(System.nanoTime() - t0) / 1e6}%.0f ms")
+    logRound(f"hashmin seed: nodes=$n edges=$m " +
+      f"${(System.nanoTime() - t0) / 1e6}%.0f ms")
     // rounds = diameter for hash-min. Dedup graphs (LSH-bucket cliques,
     // typo pairs) have single-digit diameter and converge in ≤ 4
     // rounds; a graph still unconverged after 6 is chain-shaped and
@@ -426,9 +421,8 @@ object Components {
       labels = next
       converged = changed == 0L
       round += 1
-      logRound(edges.sparkSession,
-        f"hashmin round=$round changed=${changed != 0L} " +
-          f"${(System.nanoTime() - tr) / 1e6}%.0f ms")
+      logRound(f"hashmin round=$round changed=${changed != 0L} " +
+        f"${(System.nanoTime() - tr) / 1e6}%.0f ms")
     }
     // converged: the output references only the final labels, so sym is
     // dead too. Unconverged: starContraction EAGERLY pins its own edge
@@ -477,7 +471,7 @@ object Components {
               least(col(aCol), col(bCol)).as("v"))
       .where(col("u") =!= col("v")).distinct(), reliable)
     var eCount = e.count()
-    logRound(edges.sparkSession, s"star seed: edges=$eCount")
+    logRound(s"star seed: edges=$eCount")
     var converged = eCount == 0L
     var round = 0
     while (!converged && round < maxRounds) {
@@ -508,9 +502,8 @@ object Components {
       e = next
       eCount = nextCount
       round += 1
-      logRound(edges.sparkSession,
-        f"star round=$round edges=$eCount converged=$converged " +
-          f"${(System.nanoTime() - tr) / 1e6}%.0f ms")
+      logRound(f"star round=$round edges=$eCount converged=$converged " +
+        f"${(System.nanoTime() - tr) / 1e6}%.0f ms")
     }
     require(converged,
       s"starContraction did not converge in $maxRounds rounds")

@@ -30,14 +30,6 @@ object Dedup {
       .drop("_rn")
   }
 
-  /** Exact duplicate groups report: keys occurring > 1 time.
-    * (the "duplicates marked" view rather than the deduped view)
-    */
-  def duplicateGroups(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    df.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("n_dups"))
-      .where(col("n_dups") > 1)
-
   /** INCREMENTAL corpus dedup — the production "new crawl vs existing
     * corpus" shape: the accepted corpus keeps its fingerprints persisted
     * as a BUCKETED table ([[graft.sources.Sinks.writeBucketed]] on the

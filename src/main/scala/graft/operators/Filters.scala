@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Predicate combinators — the reference's parse-time filters.
@@ -11,9 +11,8 @@ import org.apache.spark.sql.functions._
   * (`Configuration.java:100-107`).
   *
   * Spark-native: plain `Column` predicates so Catalyst pushes them into the
-  * scan (visible as `PushedFilters` in explain). The ignore list is either
-  * `isin` (small literal list — becomes an `In` filter, pushable) or a
-  * broadcast anti-join (large list).
+  * scan (visible as `PushedFilters` in explain). The ignore list is a
+  * literal `isin` — an `In` filter, pushable.
   */
 object Filters {
 
@@ -22,18 +21,7 @@ object Filters {
     */
   def maskClear(c: Column, mask: Int): Column = c.bitwiseAND(mask) === 0
 
-  def maskSet(c: Column, mask: Int): Column = c.bitwiseAND(mask) =!= 0
-
   /** Small literal ignore list → `NOT isin`, pushed to the scan. */
   def notIgnored(c: Column, ignore: Seq[String]): Column =
     if (ignore.isEmpty) lit(true) else !c.isin(ignore: _*)
-
-  /** Large ignore list as a one-column DataFrame → broadcast anti-join;
-    * at 100 TB the fact side never shuffles.
-    */
-  def antiJoinIgnore(df: DataFrame, ignore: DataFrame, keyCol: String)
-      : DataFrame = {
-    val ig = ignore.toDF(keyCol)
-    df.join(broadcast(ig), Seq(keyCol), "left_anti")
-  }
 }

@@ -250,20 +250,4 @@ object Multimodal {
     df.select(col(idCol), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) => decodeMedia(id, bytes) })
   }
-
-  /** Frame sampling for a (fake) multi-frame payload: emit every
-    * `stride`-th fixed-size block as a "frame" — the plumbing for video
-    * frame extraction (one input row → N frame rows, a generator shape).
-    */
-  def sampleFrames(spark: SparkSession, df: DataFrame, idCol: String,
-                   frameBytes: Int, stride: Int): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol), col("payload")).as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        val n = bytes.length / frameBytes
-        (0 until n by stride).map { f =>
-          (id, f, bytes.slice(f * frameBytes, (f + 1) * frameBytes))
-        }
-      }.toDF(idCol, "frame_no", "frame")
-  }
 }

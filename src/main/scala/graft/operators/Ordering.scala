@@ -35,24 +35,6 @@ object Ordering {
   def topK(df: DataFrame, k: Int, cols: Seq[Column]): DataFrame =
     df.orderBy(cols: _*).limit(k)
 
-  /** Largest-first ordering of work items (SparkGA1.scala:1159-1161):
-    * a descending sort by the size column — downstream per-partition
-    * consumers then see their biggest items first, and the range
-    * exchange places the largest items in the lowest-numbered output
-    * partitions, which Spark launches first within the next stage.
-    *
-    * CAVEAT (honest scope): that is an ORDERING guarantee, not a
-    * placement one — once tasks are launched, finish order is the
-    * scheduler's business, and AQE may coalesce the partitions. The
-    * reference's static LPT placement (longest job to the least-loaded
-    * node) has no DataFrame analog by design: Spark's scheduler + AQE
-    * own placement, and a round-robin repartition after this sort would
-    * destroy the very order it creates. Kept as the ordering primitive
-    * for parity with the reference's LPT-first scheduling intent.
-    */
-  def largestFirst(df: DataFrame, sizeCol: String): DataFrame =
-    df.orderBy(desc(sizeCol))
-
   /** Top-k rows PER GROUP (the per-key sibling of [[topK]]): rank by
     * `orderCols` within each key, keep rank ≤ k. Include a unique
     * tie-break column for determinism.

@@ -11,11 +11,15 @@ import org.apache.spark.sql.functions._
   * (`SparkGA1.scala:692-695`).
   *
   * Spark-native: an overlap join `a.start <= b.end && b.start <= a.end`
-  * (half-open or closed per flag). With a small side it's a
-  * BroadcastNestedLoopJoin — fine. For two LARGE interval sets a pure theta
-  * join is quadratic per key; `bucketedOverlapJoin` turns it into an
-  * equi-join on (key, coarse-bucket) + residual range predicate, which
-  * Catalyst executes as a shuffled hash/sort-merge join — the 100 TB path.
+  * on closed intervals. With a small side that is a broadcast nested-loop
+  * join under [[overlaps]] — fine. Between two LARGE sides a pure theta
+  * join is quadratic per key (or a cartesian product);
+  * `bucketedOverlapJoin` turns it into an equi-join on (key,
+  * coarse-bucket) + residual range predicate, which Catalyst executes as
+  * a shuffled hash/sort-merge join — the 100 TB path. A point-in-interval
+  * join passes the point column as both bounds of a degenerate interval;
+  * stricter bounds (half-open intervals) are a residual filter on the
+  * result.
   */
 object RangeJoin {
 
@@ -32,24 +36,19 @@ object RangeJoin {
   def overlaps(aStart: Column, aEnd: Column, bStart: Column, bEnd: Column)
       : Column = aStart <= bEnd && bStart <= aEnd
 
-  /** Broadcast overlap join: `small` is broadcast; result carries all
-    * columns of both (caller projects). Same-named key columns must be
-    * pre-renamed by the caller.
-    */
-  def broadcastOverlapJoin(big: DataFrame, small: DataFrame,
-                           bigKey: String, smallKey: String,
-                           bigStart: String, bigEnd: String,
-                           smallStart: String, smallEnd: String): DataFrame =
-    big.join(broadcast(small),
-      big(bigKey) === small(smallKey) &&
-        overlaps(big(bigStart), big(bigEnd),
-                 small(smallStart), small(smallEnd)))
-
   /** Scale path for big-big overlap joins: explode each left interval into
     * the coarse buckets it touches, equi-join on (key, bucket), keep the
     * residual overlap predicate, and dedupe pairs that matched in more than
     * one bucket by crediting the match to the first shared bucket.
     * Shuffle is hash on (key, bucket) — no cartesian blow-up.
+    *
+    * Exact for every long bound: the bucket of a value is a monotone
+    * function of it (Double rounding beyond 2^53 moves bucket edges,
+    * never the order), so both intervals of a matching pair cover
+    * the credited bucket. An inverted interval (start > end) explodes its
+    * buckets descending and still matches wherever the predicate holds.
+    * `bucketWidth` is a data statement (interval scale), picked by the
+    * caller.
     */
   def bucketedOverlapJoin(left: DataFrame, right: DataFrame,
                           keyCols: Seq[String],

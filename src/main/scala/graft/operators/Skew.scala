@@ -26,25 +26,6 @@ object Skew {
     */
   val AutoBuckets: Int = -1
 
-  /** `segments = max(1, round(n * factor / avg))` — SparkGA1.scala:242.
-    *
-    * NOTE: the global average is computed EAGERLY (`.head` — one scalar
-    * aggregation job at operator-build time, same deliberate pattern as
-    * Similarity.ivfAssign's centroid collect). `counts` is a per-key
-    * aggregate, so the job scans #keys rows, not the data; a fully lazy
-    * formulation would need a cross join against the 1-row average,
-    * which costs the same work with worse ergonomics.
-    */
-  def segmentCounts(counts: DataFrame, keyCols: Seq[String],
-                    countCol: String, factor: Double): DataFrame = {
-    val row = counts.agg(avg(col(countCol))).head()
-    // empty input (or all-NULL counts): avg is NULL — any divisor works,
-    // the result has no rows (or segments=1 for NULL-count rows)
-    val avgCount = if (row.isNullAt(0)) 1.0 else row.getDouble(0)
-    counts.withColumn("segments",
-      greatest(round(col(countCol) * factor / avgCount).cast("int"), lit(1)))
-  }
-
   /** Exact equal-frequency split: `ntile(n)` per key partition, total
     * ordering given by `orderCols` (include a unique tie-break for
     * determinism). Matches the reference's exact-histogram split.

@@ -1221,8 +1221,8 @@ object Stats {
       .withColumn("_frac", col("_pos") - floor(col("_pos")))
     // banded value-at-index lookup: klo's bin must appear among the
     // interval's covered bins — equi-join on the bin, exact predicate
-    // re-applied (the RangeJoinRewrite shape, inlined so no session
-    // conf is touched)
+    // re-applied (the RangeJoin.bucketedOverlapJoin shape for a point
+    // against an interval)
     val ivBinned = giNext.withColumn("_bin",
       explode(sequence(expr(s"_lo DIV $binSize"),
         expr(s"(_hi - 1) DIV $binSize"))))

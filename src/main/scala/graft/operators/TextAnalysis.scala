@@ -343,19 +343,13 @@ object TextAnalysis {
                       log(col("_rank").cast("double"))).as("slope"))
   }
 
-  /** Distinct-token ratio — low values indicate repetitive/boilerplate
-    * text (a standard LLM-data quality signal).
+  /** Distinct-token ratio of a token array — low values indicate
+    * repetitive/boilerplate text (a standard LLM-data quality signal).
     */
-  def distinctTokenRatio(text: Column): Column =
-    distinctTokenRatioOf(tokens(text))
-
   def distinctTokenRatioOf(toks: Column): Column =
     size(array_distinct(toks)).cast("double") / size(toks)
 
-  /** Mean token length in characters. */
-  def meanTokenLength(text: Column): Column =
-    meanTokenLengthOf(tokens(text))
-
+  /** Mean token length in characters of a token array. */
   def meanTokenLengthOf(toks: Column): Column =
     (length(concat_ws("", toks)).cast("double")) / size(toks)
 
@@ -366,13 +360,6 @@ object TextAnalysis {
       .cast("double") / greatest(length(t), lit(1))
   }
 
-  /** Fraction of tokens found in `stops` (e.g. language stopwords). */
-  def stopwordRatio(text: Column, stops: Seq[String]): Column = {
-    val t = tokens(text)
-    size(array_intersect_keep(t, stops)).cast("double") /
-      greatest(size(t), lit(1))
-  }
-
   /** Tokens of `t` that are in the literal set (keeps duplicates —
     * unlike array_intersect which dedups).
     */
@@ -381,11 +368,9 @@ object TextAnalysis {
 
   /** Composite quality score in [0,1]: rewards mid-length docs with
     * diverse tokens and low punctuation density. Weights are fixed so the
-    * score is deterministic and comparable across runs.
+    * score is deterministic and comparable across runs. `toks` is
+    * `tokens(text)`, passed in so callers tokenize once.
     */
-  def qualityScore(text: Column): Column =
-    qualityScoreOf(text, tokens(text))
-
   def qualityScoreOf(text: Column, toks: Column): Column = {
     val nTok = size(toks).cast("double")
     val lenScore = least(nTok / 50d, lit(1d)) // saturates at 50 tokens

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Data-layout optimization: Z-ORDER (Morton-curve) clustering.
@@ -33,21 +33,5 @@ object Layout {
         shiftright(y.cast("long"), i).bitwiseAND(lit(1L)) *
           lit(1L << (2 * i + 1))
     }.reduce(_ + _)
-  }
-
-  /** Z-ordered parquet write: range-partition + sort by the interleaved
-    * key, then drop it — the file ROW ORDER (and therefore every file's
-    * and row group's min/max footer stats on both columns) keeps the
-    * clustering. `nFiles` sizes the layout; at scale pick
-    * bytes/targetFileSize like [[Sinks.compact]].
-    */
-  def writeZOrdered(df: DataFrame, xCol: String, yCol: String,
-                    path: String, nFiles: Int, bits: Int = 16): Unit = {
-    require(nFiles >= 1)
-    df.withColumn("_z", zValue2(col(xCol), col(yCol), bits))
-      .repartitionByRange(nFiles, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
   }
 }

@@ -802,15 +802,20 @@ class PlanSpec extends SparkTestBase {
            !p.contains("BroadcastNestedLoopJoin"), p)
   }
 
-  test("q232 overlap join goes through the rewrite rule, not a BNLJ") {
-    // under q232's scoped binSize the shape-2 rewrite must fire — both
-    // sides exploded on _graft_bkt, no nested loop. If the rule silently
-    // stopped matching, q232's correctness row would stay green while
-    // its plan regressed to the quadratic join; this is the net for that.
-    val p = plan("q232_overlap_rule_join")
-    assert(p.contains("_graft_bkt"), s"shape-2 rewrite must fire:\n$p")
-    assert(!p.contains("BroadcastNestedLoopJoin") &&
-           !p.contains("CartesianProduct"), p)
+  test("q199 and q232 plan a bucket Generate and an equi-join, not a BNLJ") {
+    // both run on RangeJoin.bucketedOverlapJoin: the interval sides
+    // explode into buckets and join on the bucket id. A regression to
+    // the plain inequality join would keep their correctness rows green
+    // while the plan turned quadratic; this is the net for that.
+    val equiOnBucket =
+      "(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \\[_bkt".r
+    for (q <- Seq("q199_range_band_join", "q232_overlap_rule_join")) {
+      val p = plan(q)
+      assert(p.contains("Generate explode(sequence("), s"$q:\n$p")
+      assert(equiOnBucket.findFirstIn(p).nonEmpty, s"$q:\n$p")
+      assert(!p.contains("BroadcastNestedLoopJoin") &&
+             !p.contains("CartesianProduct"), s"$q:\n$p")
+    }
   }
 
   test("q277 SQL simhash is scan-stage: native kernel, no exchange before sort") {

@@ -75,8 +75,8 @@ class BucketIdSpec extends SparkTestBase {
       TextAnalysis.normalize($"text").as("norm"),
       TextAnalysis.fingerprint($"text").as("fp"),
       TextAnalysis.tokenCount($"text").as("n_tok"),
-      TextAnalysis.distinctTokenRatio($"text").as("dr"),
-      TextAnalysis.meanTokenLength($"text").as("mtl"),
+      TextAnalysis.distinctTokenRatioOf(toks).as("dr"),
+      TextAnalysis.meanTokenLengthOf(toks).as("mtl"),
       TextAnalysis.punctRatio($"text").as("pr"),
       TextAnalysis.qualityScoreOf($"text", toks).as("q"))
     assert(viaSql.exceptAll(viaColumn).isEmpty &&

@@ -97,16 +97,6 @@ class MultimodalSpec extends SparkTestBase {
     val bad = Multimodal.encodeGif(5, 5); bad(4) = '8'
     assert(Multimodal.decodeMedia(9L, bad).format == "raw")
   }
-
-  test("sampleFrames emits every stride-th fixed-size block") {
-    val df = Multimodal.attachPayload(
-      Seq((1L, "abcdefghij")).toDF("doc_id", "text"), "doc_id", "text")
-    val frames = Multimodal.sampleFrames(spark, df, "doc_id", 2, 2)
-      .select($"frame_no", $"frame").as[(Int, Array[Byte])]
-      .collect().toMap
-    assert(frames.keySet == Set(0, 2, 4))
-    assert(new String(frames(2), "UTF-8") == "ef")
-  }
 }
 
 class PipeSpec extends SparkTestBase {
@@ -281,8 +271,12 @@ class SinksSpec extends SparkTestBase {
       val rows = Seq.fill(1 << 14)((rnd.nextInt(1024), rnd.nextInt(1024)))
       val df = rows.toDF("x", "y")
       val zpath = dir.getAbsolutePath + "/z"
-      graft.sources.Layout.writeZOrdered(df, "x", "y", zpath,
-        nFiles = 16, bits = 10)
+      // range-partition + sort by the interleaved key: each file's row
+      // order (and footer min/max) keeps the clustering
+      df.withColumn("_z",
+          graft.sources.Layout.zValue2($"x", $"y", bits = 10))
+        .repartitionByRange(16, $"_z").sortWithinPartitions($"_z")
+        .drop("_z").write.parquet(zpath)
       def spans(path: String): (Double, Double) = {
         val byFile = spark.read.parquet(path)
           .groupBy(input_file_name().as("f"))

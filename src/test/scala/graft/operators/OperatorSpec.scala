@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class BucketizeSpec extends SparkTestBase {
@@ -8,8 +9,9 @@ class BucketizeSpec extends SparkTestBase {
 
   test("fixed-width bucket = floor(pos/width)") {
     val df = Seq((1, 0L), (1, 99L), (1, 100L), (2, 250L)).toDF("g", "pos")
-    val got = Bucketize.withFixedBucket(df, "pos", 100L)
-      .select($"g", $"pos", $"bucket").as[(Int, Long, Int)].collect().toSet
+    val got = df.select($"g", $"pos",
+        Bucketize.bucketId($"pos", lit(100L)).as("bucket"))
+      .as[(Int, Long, Int)].collect().toSet
     assert(got == Set((1, 0L, 0), (1, 99L, 0), (1, 100L, 1), (2, 250L, 2)))
   }
 
@@ -19,34 +21,15 @@ class BucketizeSpec extends SparkTestBase {
       .as[(String, Long)].collect().toMap
     assert(w == Map("a" -> 100L, "b" -> 1L, "c" -> 1L))
   }
-
-  test("colocate puts all rows of one (group,bucket) in one partition") {
-    val df = (1 to 1000).map(i => (i % 7, i % 13, i)).toDF("g", "b", "v")
-    val parts = Bucketize.colocate(df, "g", "b", Some(8))
-      .select($"g", $"b", spark_partition_id().as("p"))
-      .groupBy($"g", $"b").agg(countDistinct($"p").as("np"))
-      .agg(max($"np")).head.getLong(0)
-    assert(parts == 1L)
-  }
 }
 
 class FiltersSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("maskClear/maskSet mirror (flags & mask)") {
+  test("maskClear keeps rows where (flags & mask) == 0") {
     val df = (0 to 15).toDF("f")
     val clear = df.where(Filters.maskClear($"f", 4)).as[Int].collect().toSet
     assert(clear == (0 to 15).filter(i => (i & 4) == 0).toSet)
-    val set = df.where(Filters.maskSet($"f", 4)).as[Int].collect().toSet
-    assert(set == (0 to 15).filter(i => (i & 4) != 0).toSet)
-  }
-
-  test("anti-join ignore list drops listed keys") {
-    val df = Seq("chr1", "chr2", "chrM", "chrY").toDF("k")
-    val ignore = Seq("chrM", "chrY").toDF("k")
-    val kept = Filters.antiJoinIgnore(df, ignore, "k").as[String]
-      .collect().toSet
-    assert(kept == Set("chr1", "chr2"))
   }
 }
 
@@ -146,14 +129,6 @@ class SkewSpec extends SparkTestBase {
       .withColumn("_salt", pmod(hash($"k", $"v"), lit(8)))
       .select($"_salt").distinct().count()
     assert(hotSalts == 1L)
-  }
-
-  test("segmentCounts: round(n*factor/avg), min 1") {
-    // counts 10, 10, 100 -> avg 40; factor 1 -> 0->1, 0->1, round(2.5)=3
-    val counts = Seq(("a", 10L), ("b", 10L), ("c", 100L)).toDF("k", "n")
-    val got = Skew.segmentCounts(counts, Seq("k"), "n", 1.0)
-      .select($"k", $"segments").as[(String, Int)].collect().toMap
-    assert(got == Map("a" -> 1, "b" -> 1, "c" -> 3))
   }
 
   test("ntile split is equal-frequency within +-1") {
@@ -257,6 +232,110 @@ class RangeJoinSpec extends SparkTestBase {
       .collect().sorted.toSeq
     assert(bucketed == naive)
   }
+
+  // parity harness: every case below compares bucketedOverlapJoin with
+  // the nested loop that evaluates the same predicate on every pair
+  private def ivs(n: Int, seed: Int, base: Long, span: Int, len: Int,
+                  side: String): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    (1 to n).map { i =>
+      val lo = base + rnd.nextInt(span).toLong
+      (i.toLong, lo, lo + rnd.nextInt(len).toLong)
+    }.toDF(s"${side}_id", s"${side}_lo", s"${side}_hi")
+  }
+
+  private def idPairs(df: DataFrame): Seq[(Long, Long)] =
+    df.select($"a_id", $"b_id").as[(Long, Long)].collect().sorted.toSeq
+
+  private def nestedLoop(a: DataFrame, b: DataFrame): Seq[(Long, Long)] =
+    idPairs(a.join(b,
+      RangeJoin.overlaps($"a_lo", $"a_hi", $"b_lo", $"b_hi")))
+
+  private def bucketed(a: DataFrame, b: DataFrame, width: Long): DataFrame =
+    RangeJoin.bucketedOverlapJoin(a, b, Seq.empty,
+      "a_lo", "a_hi", "b_lo", "b_hi", width)
+
+  test("overlap randomized parity across bucket widths") {
+    val a = ivs(150, 17, 0L, 5000, 800, "a")
+    val b = ivs(150, 18, 0L, 5000, 800, "b")
+    val naive = nestedLoop(a, b)
+    assert(naive.nonEmpty)
+    for (w <- Seq(16L, 100L, 1024L)) {
+      val q = bucketed(a, b, w)
+      val plan = q.queryExecution.executedPlan.toString
+      assert(!plan.contains("NestedLoopJoin") &&
+        !plan.contains("CartesianProduct"), plan)
+      // sorted with duplicates kept: equal means every pair exactly once
+      assert(idPairs(q) == naive, s"width $w")
+    }
+  }
+
+  test("point as a degenerate interval: parity with closed and " +
+       "half-open residuals") {
+    val fixedIvs = Seq((1L, 0L, 99L), (2L, 50L, 149L), (3L, 500L, 500L),
+        (4L, 700L, 650L)) // inverted: no point can lie in it
+      .toDF("b_id", "b_lo", "b_hi")
+    val fixedPts = Seq(5L, 120L, 499L, 500L, 75L).zipWithIndex
+      .map { case (p, i) => (10L + i, p) }.toDF("a_id", "pt")
+    // returns the closed-predicate pairs after checking all three forms
+    def check(pts: DataFrame, bands: DataFrame, w: Long)
+        : Seq[(Long, Long)] = {
+      val a = pts.select($"a_id", $"pt", $"pt".as("a_lo"), $"pt".as("a_hi"))
+      def ref(c: Column) = idPairs(a.join(bands, c))
+      val closed = ref($"b_lo" <= $"pt" && $"pt" <= $"b_hi")
+      val halfOpen = ref($"b_lo" <= $"pt" && $"pt" < $"b_hi")
+      val strict = ref($"b_lo" < $"pt" && $"pt" < $"b_hi")
+      val q = bucketed(a, bands, w)
+      assert(idPairs(q) == closed, s"closed, width $w")
+      assert(idPairs(q.where($"pt" < $"b_hi")) == halfOpen,
+        s"half-open, width $w")
+      assert(idPairs(q.where($"b_lo" < $"pt" && $"pt" < $"b_hi")) ==
+        strict, s"strict, width $w")
+      assert(halfOpen.nonEmpty, s"width $w")
+      closed
+    }
+    val closedFixed = check(fixedPts, fixedIvs, 64L)
+    assert(closedFixed.contains((13L, 3L))) // closed upper bound kept
+    assert(!closedFixed.exists(_._2 == 4L)) // inverted band: no point
+    check(ivs(500, 41, 0L, 11000, 1, "a").select($"a_id", $"a_lo".as("pt")),
+      ivs(300, 42, 0L, 10000, 500, "b"), 128L)
+  }
+
+  test("inverted interval matches wherever the overlap predicate holds") {
+    // a = (700, 650) has lo > hi, yet a.lo <= b.hi && b.lo <= a.hi holds
+    // against b = (600, 800): the nested loop returns the pair, and so
+    // must the bucketed join (its sequence() explodes a descending)
+    val a = Seq((1L, 700L, 650L), (2L, 0L, 10L)).toDF("a_id", "a_lo", "a_hi")
+    val b = Seq((1L, 600L, 800L), (2L, 660L, 690L), (3L, 5L, 5L))
+      .toDF("b_id", "b_lo", "b_hi")
+    val naive = nestedLoop(a, b)
+    assert(naive == Seq((1L, 1L), (2L, 3L)))
+    for (w <- Seq(1L, 16L, 64L, 1000L))
+      assert(idPairs(bucketed(a, b, w)) == naive, s"width $w")
+  }
+
+  test("parity at ±2^61 bounds: Double-rounded buckets stay exact") {
+    // at |x| ≈ 2^61 a Double carries ±256 of rounding error, so bucket
+    // edges move; bucket order does not, and order is all the
+    // exactly-once credit needs
+    for (base <- Seq(1L << 61, -(1L << 61))) {
+      val a = ivs(200, 61, base, 1000000, 5000, "a")
+      val b = ivs(400, 62, base, 1005000, 50, "b")
+      val naive = nestedLoop(a, b)
+      assert(naive.nonEmpty, s"base $base")
+      assert(idPairs(bucketed(a, b, 1000L)) == naive, s"base $base")
+    }
+  }
+
+  test("parity hard against Long.MinValue and Long.MaxValue") {
+    for (base <- Seq(Long.MinValue, Long.MaxValue - 1010000L)) {
+      val a = ivs(150, 63, base, 1000000, 5000, "a")
+      val b = ivs(300, 64, base, 1005000, 50, "b")
+      val naive = nestedLoop(a, b)
+      assert(naive.nonEmpty, s"base $base")
+      assert(idPairs(bucketed(a, b, 1000L)) == naive, s"base $base")
+    }
+  }
 }
 
 class DedupSpec extends SparkTestBase {
@@ -275,13 +354,6 @@ class DedupSpec extends SparkTestBase {
     val twice = Dedup.firstPerKey(once, Seq("k"), Seq(desc("v")))
     assert(once.as[(Int, Int)].collect().toSet ==
            twice.as[(Int, Int)].collect().toSet)
-  }
-
-  test("duplicateGroups finds only keys with >1 row") {
-    val df = Seq(1, 1, 2, 3, 3, 3).toDF("k")
-    val got = Dedup.duplicateGroups(df, Seq("k"))
-      .as[(Int, Long)].collect().toMap
-    assert(got == Map(1 -> 2L, 3 -> 3L))
   }
 
   test("incrementalDedup: in-batch min-id + index anti-join, incremental append") {
@@ -477,35 +549,20 @@ class CoverageSweepSpec extends SparkTestBase {
   import spark.implicits._
   import org.apache.spark.sql.functions._
 
-  test("largestFirst orders work items size-descending") {
-    val df = Seq((1, 10L), (2, 99L), (3, 50L)).toDF("id", "sz")
-    val got = Ordering.largestFirst(df, "sz").select($"id")
-      .as[Int].collect().toSeq
-    assert(got == Seq(2, 3, 1))
-  }
-
-  test("broadcastOverlapJoin matches the overlap predicate, small side broadcast") {
-    val big = Seq((1, 0L, 10L), (1, 20L, 30L), (2, 0L, 5L))
-      .toDF("k", "s", "e")
-    val small = Seq((1, 8L, 22L), (2, 50L, 60L)).toDF("sk", "ss", "se")
-    val joined = RangeJoin.broadcastOverlapJoin(big, small,
-      "k", "sk", "s", "e", "ss", "se")
-    val got = joined.select($"s", $"ss").as[(Long, Long)].collect().toSet
-    assert(got == Set((0L, 8L), (20L, 8L))) // both key-1 intervals overlap
-    assert(joined.queryExecution.executedPlan.toString.contains("Broadcast"))
-  }
-
   test("nonZeroNorm guards cosine's NaN on zero vectors") {
     val df = Seq(Array(0f, 0f), Array(1f, 0f)).toDF("v")
     val kept = df.where(Similarity.nonZeroNorm($"v")).count()
     assert(kept == 1)
   }
 
-  test("stopwordRatio counts duplicate marker hits, unlike array_intersect") {
-    val df = Seq("the cat the dog the end").toDF("text")
-    val r = df.select(TextAnalysis.stopwordRatio($"text", Seq("the")))
-      .as[Double].head
-    assert(math.abs(r - 3.0 / 6.0) < 1e-12) // 3 hits of 6 tokens, not 1
+  test("langIdOf counts duplicate marker hits, unlike array_intersect") {
+    // 'the' three times beats two distinct 'de' markers only when every
+    // hit counts: deduplicated, en would score 1 and lose to de's 2
+    val df = Seq(Seq("the", "der", "the", "ist", "the")).toDF("toks")
+    val got = df.select(TextAnalysis.langIdOf($"toks",
+        Seq("de" -> Seq("der", "ist"), "en" -> Seq("the"))))
+      .as[String].head
+    assert(got == "en")
   }
 }
 

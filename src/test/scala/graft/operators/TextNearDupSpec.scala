@@ -177,7 +177,8 @@ class TextAnalysisSpec extends SparkTestBase {
   test("quality score is in [0,1] and favors diverse text") {
     val df = Seq(("rep", ("spam " * 60).trim),
                  ("div", (1 to 60).map("w" + _).mkString(" "))).toDF("id", "text")
-    val q = df.select($"id", TextAnalysis.qualityScore($"text"))
+    val q = df.select($"id",
+        TextAnalysis.qualityScoreOf($"text", TextAnalysis.tokens($"text")))
       .as[(String, Double)].collect().toMap
     assert(q.values.forall(v => v >= 0 && v <= 1))
     assert(q("div") > q("rep"))
