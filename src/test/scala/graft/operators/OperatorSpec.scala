@@ -270,35 +270,75 @@ class RangeJoinSpec extends SparkTestBase {
     }
   }
 
-  test("point as a degenerate interval: parity with closed and " +
-       "half-open residuals") {
-    val fixedIvs = Seq((1L, 0L, 99L), (2L, 50L, 149L), (3L, 500L, 500L),
+  test("wide-by-wide overlap: both sides explode, exactly-once match") {
+    // every pair shares many buckets at width 8; the later-start credit
+    // must still emit it once
+    val a = ivs(120, 21, 0L, 3000, 600, "a")
+    val b = ivs(120, 22, 0L, 3000, 600, "b")
+    val naive = nestedLoop(a, b)
+    assert(naive.nonEmpty)
+    val q = bucketed(a, b, 8L)
+    val plan = q.queryExecution.executedPlan.toString
+    assert(!plan.contains("NestedLoopJoin"), plan)
+    assert("Generate".r.findAllIn(plan).length >= 2, plan) // both sides
+    val got = idPairs(q)
+    assert(got == naive)
+    assert(got.distinct == got)
+  }
+
+  // points as degenerate intervals (pt, pt) against fixed bands
+  private def fixedBands: DataFrame =
+    Seq((1L, 0L, 99L), (2L, 50L, 149L), (3L, 500L, 500L),
         (4L, 700L, 650L)) // inverted: no point can lie in it
       .toDF("b_id", "b_lo", "b_hi")
-    val fixedPts = Seq(5L, 120L, 499L, 500L, 75L).zipWithIndex
-      .map { case (p, i) => (10L + i, p) }.toDF("a_id", "pt")
-    // returns the closed-predicate pairs after checking all three forms
-    def check(pts: DataFrame, bands: DataFrame, w: Long)
-        : Seq[(Long, Long)] = {
-      val a = pts.select($"a_id", $"pt", $"pt".as("a_lo"), $"pt".as("a_hi"))
-      def ref(c: Column) = idPairs(a.join(bands, c))
-      val closed = ref($"b_lo" <= $"pt" && $"pt" <= $"b_hi")
-      val halfOpen = ref($"b_lo" <= $"pt" && $"pt" < $"b_hi")
-      val strict = ref($"b_lo" < $"pt" && $"pt" < $"b_hi")
-      val q = bucketed(a, bands, w)
-      assert(idPairs(q) == closed, s"closed, width $w")
-      assert(idPairs(q.where($"pt" < $"b_hi")) == halfOpen,
-        s"half-open, width $w")
-      assert(idPairs(q.where($"b_lo" < $"pt" && $"pt" < $"b_hi")) ==
-        strict, s"strict, width $w")
-      assert(halfOpen.nonEmpty, s"width $w")
-      closed
-    }
-    val closedFixed = check(fixedPts, fixedIvs, 64L)
-    assert(closedFixed.contains((13L, 3L))) // closed upper bound kept
-    assert(!closedFixed.exists(_._2 == 4L)) // inverted band: no point
-    check(ivs(500, 41, 0L, 11000, 1, "a").select($"a_id", $"a_lo".as("pt")),
-      ivs(300, 42, 0L, 10000, 500, "b"), 128L)
+
+  private def asPoints(pts: DataFrame): DataFrame =
+    pts.select($"a_id", $"pt", $"pt".as("a_lo"), $"pt".as("a_hi"))
+
+  private def fixedPoints: DataFrame = asPoints(
+    Seq(5L, 120L, 499L, 500L, 75L).zipWithIndex
+      .map { case (p, i) => (10L + i, p) }.toDF("a_id", "pt"))
+
+  private def pointLoop(a: DataFrame, bands: DataFrame, c: Column) =
+    idPairs(a.join(bands, c))
+
+  test("fixed fixture: bucketed equi-join plan, identical rows") {
+    val closed = pointLoop(fixedPoints, fixedBands,
+      $"b_lo" <= $"pt" && $"pt" <= $"b_hi")
+    val q = bucketed(fixedPoints, fixedBands, 64L)
+    val plan = q.queryExecution.executedPlan.toString
+    assert(!plan.contains("NestedLoopJoin") &&
+      !plan.contains("CartesianProduct"), plan)
+    assert(plan.contains("Generate"), plan) // the exploded buckets
+    val got = idPairs(q)
+    assert(got == closed)
+    assert(got.contains((13L, 3L))) // closed upper bound kept
+    assert(!got.exists(_._2 == 4L)) // inverted band: no point
+  }
+
+  test("point as a degenerate interval: randomized half-open parity") {
+    val a = asPoints(
+      ivs(500, 41, 0L, 11000, 1, "a").select($"a_id", $"a_lo".as("pt")))
+    val bands = ivs(300, 42, 0L, 10000, 500, "b")
+    val q = bucketed(a, bands, 128L)
+    assert(idPairs(q) ==
+      pointLoop(a, bands, $"b_lo" <= $"pt" && $"pt" <= $"b_hi"))
+    val halfOpen = pointLoop(a, bands, $"b_lo" <= $"pt" && $"pt" < $"b_hi")
+    assert(halfOpen.nonEmpty)
+    assert(idPairs(q.where($"pt" < $"b_hi")) == halfOpen)
+  }
+
+  test("strict bounds and interval-on-left orientation: residual parity") {
+    val strict = pointLoop(fixedPoints, fixedBands,
+      $"b_lo" < $"pt" && $"pt" < $"b_hi")
+    assert(strict.nonEmpty)
+    assert(!strict.contains((13L, 3L))) // boundary point excluded
+    val residual = $"b_lo" < $"pt" && $"pt" < $"b_hi"
+    assert(idPairs(bucketed(fixedPoints, fixedBands, 32L).where(residual))
+      == strict)
+    val bandsLeft = RangeJoin.bucketedOverlapJoin(fixedBands, fixedPoints,
+      Seq.empty, "b_lo", "b_hi", "a_lo", "a_hi", 32L)
+    assert(idPairs(bandsLeft.where(residual)) == strict)
   }
 
   test("inverted interval matches wherever the overlap predicate holds") {
