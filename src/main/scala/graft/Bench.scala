@@ -195,8 +195,8 @@ object Bench {
     // parallel hostcal sample BEFORE any warm-up (HostCal self-warms
     // with an unrecorded leg, so a cold JVM does not read as
     // contention); HostCal.preflight holds the warn/abort contract.
-    val preflightPar = HostCal.preflight(spark, "bench")
-    val preflightContended = preflightPar > HostCal.preflightMaxMs
+    val (preflightPar, preflightContended) =
+      HostCal.preflight(spark, "bench")
 
     def runOnce(name: String): Unit =
       try SparkEntry.queries(name)(spark, sfDir)

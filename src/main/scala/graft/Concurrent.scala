@@ -37,8 +37,8 @@ object Concurrent {
     // PRE-FLIGHT (VERDICT r16 #3): the r16 concurrency walls ran in a
     // contended window and were informational-only. Same contract as
     // Bench (HostCal.preflight), stamped into the payload.
-    val preflightPar = HostCal.preflight(spark, "concurrent")
-    val preflightContended = preflightPar > HostCal.preflightMaxMs
+    val (preflightPar, preflightContended) =
+      HostCal.preflight(spark, "concurrent")
 
     val names = SparkEntry.queries.keys.toVector.sorted
     val assign = names.zipWithIndex

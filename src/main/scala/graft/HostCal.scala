@@ -73,27 +73,30 @@ object HostCal {
     math.round(times.min * 10.0) / 10.0
   }
 
-  /** The preflight contention threshold in ms: env
-    * `SPARK_GRAFT_BENCH_MAXPAR`, default 250.
+  /** The preflight contention threshold in ms for a session with
+    * `cores` task slots: 250 ms per task wave of the [[parTasks]]-task
+    * leg, `ceil(parTasks / min(cores, parTasks))` waves. 250 ms is the
+    * budget calibrated at >= 32 cores (NOTES.md "Pre-flight contention
+    * gate"), where the leg is one wave; 4 cores run it in 8 waves and
+    * get 2000 ms.
     */
-  def preflightMaxMs: Double = sys.env.get("SPARK_GRAFT_BENCH_MAXPAR")
-    .flatMap(s => scala.util.Try(s.trim.toDouble).toOption)
-    .getOrElse(250.0)
+  def preflightMaxMs(cores: Int): Double =
+    250.0 * math.ceil(parTasks.toDouble / math.min(cores, parTasks))
 
   /** Host-contention preflight for the timed mains (Bench, Concurrent):
     * one [[hostcalParMs]] sample before any work, reported on stderr
-    * under `[tag]`, and returned so the caller stamps it into its
-    * artifact (`preflight_par_ms`, and `preflight_contended` = above
-    * [[preflightMaxMs]]). Above the threshold the run warns — or, with
-    * env `SPARK_GRAFT_BENCH_PREFLIGHT=abort`, stops the session and
-    * exits 4 in a few seconds, so a retry wrapper
-    * (scripts/bench_retry.py) can re-run it when the host is idle.
-    * Warn-and-stamp is the default because an unattended run must still
-    * produce a payload.
+    * under `[tag]`, and returned with its verdict so the caller stamps
+    * both into its artifact (`preflight_par_ms`, `preflight_contended`
+    * = above [[preflightMaxMs]] of the session's default parallelism).
+    * Above the threshold the run warns — or, with env
+    * `SPARK_GRAFT_BENCH_PREFLIGHT=abort`, stops the session and exits 4
+    * in a few seconds, so a retry wrapper (scripts/bench_retry.py) can
+    * re-run it when the host is idle. Warn-and-stamp is the default
+    * because an unattended run must still produce a payload.
     */
   def preflight(spark: org.apache.spark.sql.SparkSession,
-                tag: String): Double = {
-    val max = preflightMaxMs
+                tag: String): (Double, Boolean) = {
+    val max = preflightMaxMs(spark.sparkContext.defaultParallelism)
     val par = hostcalParMs(spark)
     val contended = par > max
     System.err.println(f"[$tag] preflight hostcal_par_ms=$par " +
@@ -106,6 +109,6 @@ object HostCal {
       spark.stop()
       sys.exit(4)
     }
-    par
+    (par, contended)
   }
 }

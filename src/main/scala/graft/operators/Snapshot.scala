@@ -135,13 +135,14 @@ object Snapshot {
     * Because intervalize emits CONTIGUOUS intervals per key
     * (valid_to = next valid_from), containment reduces to a backward
     * as-of join on valid_from alone — [[AsOfJoin.asofBackward]]'s
-    * union+LOCF single-shuffle plan, never an interval range join.
-    * Probes before the key's first version keep NULL attributes (left
-    * semantics).
+    * co-partitioned sort-merge, never an interval range join (q162 at a
+    * 10x twin of sf0.1: 15.7 s, against 16.5 s for the union + LOCF
+    * window form it replaced). Probes before the key's first version
+    * keep NULL attributes (left semantics).
     *
     * `intervals` must be intervalize output (or share its contract);
-    * `probeTs` and `valid_from` must be union-compatible orderable
-    * types (caller aligns, same as AsOfJoin).
+    * `probeTs` and `valid_from`, and each key column, must have the
+    * same type on both sides (caller aligns; AsOfJoin checks).
     */
   def pointInTime(intervals: DataFrame, probes: DataFrame,
                   keyCols: Seq[String], probeTs: String,

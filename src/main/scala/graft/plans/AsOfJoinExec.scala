@@ -7,37 +7,28 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
-/** The engine's whole-operator Catalyst extension: backward as-of join
-  * as a FIRST-CLASS physical operator — logical node + planner strategy
-  * + sort-merge exec, registered through `SparkSessionExtensions`
+/** The engine's whole-operator Catalyst extension: the as-of join as a
+  * FIRST-CLASS physical operator — logical node + planner strategy +
+  * sort-merge exec, registered through `SparkSessionExtensions`
   * ([[graft.functions.GraftExtensions]], on every engine session).
+  * [[graft.operators.AsOfJoin.asofBackward]] and
+  * [[graft.operators.AsOfJoin.asofNearest]] build it.
   *
-  * Why a physical operator when the union-LOCF formulation
-  * ([[graft.operators.AsOfJoin.asofBackward]]) is already linear:
-  * the union form pays ONE sort over left+right CONCATENATED — every
-  * left row is widened with null right-struct slots (and vice versa)
-  * before the sort, and the window operator buffers a running frame.
-  * This exec co-partitions the sides independently (each sort sees
-  * only its own columns), then streams a two-pointer merge with O(1)
-  * state per partition: the classic trades/quotes merge, at shuffle
-  * cost = the two sides' own bytes. Semantics match `asofBackward`:
-  * for each left row, the LAST right row with the same key and
-  * `rightTime <= leftTime` (right must be one row per (key, time) for
-  * a deterministic match); unmatched left rows keep null right
-  * columns (left-outer).
+  * The exec co-partitions the sides independently (each sort sees only
+  * its own columns), then streams a two-pointer merge with O(1) state
+  * per partition: the classic trades/quotes merge, at shuffle cost =
+  * the two sides' own bytes. For each left row it attaches the LAST
+  * right row with the same key and `rightTime <= leftTime` (right must
+  * be one row per (key, time) for a deterministic match); unmatched
+  * left rows keep null right columns (left-outer).
   *
-  * SCOPE (decided round 12, permanent): this exec serves the NEAREST /
-  * TOLERANCE modes (q250/q272) — semantics the union-LOCF window form
-  * cannot express without two passes. For plain backward as-of (q14),
-  * the union-LOCF form stays the production path: even after moving
-  * the merge's key equality onto a compiled ordering, the exec's
-  * row-at-a-time iterator (no whole-stage fusion; per-row
-  * JoinedRow + projection + virtual next()) measures ~1.9× the LOCF
-  * form at the 20× probe (warm 1.7-1.8 s vs 0.9 s, two runs) — the
-  * remaining gap is the execution model, and closing it means
-  * implementing SortMergeJoin-grade doProduce/doConsume codegen for a
-  * path that already has a faster equivalent. Recorded-negative;
-  * do not re-litigate without new evidence.
+  * SCOPE: the engine's only as-of join. A union + last-observation-
+  * carried-forward window form served plain backward joins on a
+  * local[32] probe (exec ~1.9x slower there); on a 4-vCPU host the exec
+  * is faster for every caller at sf0.1 and its 10x twin (exec/union
+  * 0.63-0.98, medians of 10 reps), so the window form was deleted. The
+  * row-at-a-time iterator is the remaining cost; SortMergeJoin-grade
+  * doProduce/doConsume codegen is the lever if it ever dominates.
   */
 /** @param nearest   false = backward-only (latest right ≤ left time);
   *                  true = closest right in EITHER direction,
@@ -90,11 +81,12 @@ object AsOfJoinStrategy extends SparkStrategy {
   * closer in-tolerance side wins, equidistant ties backward.
   *
   * KEY TYPES: integral/string/etc. — FLOATING-POINT KEYS ARE REJECTED
-  * at the API boundary ([[graft.operators.AsOfJoin.asofMergeExec]]):
-  * this exec compares keys with boxed equality and its children's
-  * exchanges bypass `NormalizeFloatingNumbers` (which rewrites only
-  * built-in join/aggregate nodes), so -0.0/0.0 and NaN would hash to
-  * different partitions and diverge from SQL equality.
+  * at the API boundary ([[graft.operators.AsOfJoin]]): this exec's
+  * children's exchanges bypass `NormalizeFloatingNumbers` (which
+  * rewrites only built-in join/aggregate nodes), so -0.0/0.0 and NaN
+  * would hash to different partitions and diverge from SQL equality.
+  * Key and time types must be identical on both sides (checked there
+  * too): one compiled ordering typed by the left side compares both.
   */
 case class AsOfJoinExec(leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
                         leftTime: Attribute, rightTime: Attribute,
@@ -142,10 +134,8 @@ case class AsOfJoinExec(leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
       new org.apache.spark.sql.catalyst.expressions.codegen
         .LazilyGeneratedOrdering(prefixOrders)
     // key-prefix EQUALITY as a second compiled ordering over only the
-    // key fields (compare == 0): the previous boxed per-field
-    // `a.get(i, dt) == b.get(i, dt)` loop allocated a box per key per
-    // row on the hot path; SortOrder's nulls-first semantics give the
-    // same NULL==NULL (groupBy) equality
+    // key fields (compare == 0), no per-row boxing; SortOrder's
+    // nulls-first semantics give NULL==NULL (groupBy) equality
     val keyOrdGen = () =>
       new org.apache.spark.sql.catalyst.expressions.codegen
         .LazilyGeneratedOrdering(prefixOrders.take(leftKeys.length))
@@ -159,7 +149,7 @@ case class AsOfJoinExec(leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
     val needTime = isNearest || tolerance.isDefined
     // the time field sits at prefix index nKeys in BOTH projections;
     // long-valued access per type (timestamps are micros-as-long in
-    // UnsafeRow). Checked at the API boundary (asofMergeExec); the
+    // UnsafeRow). Checked at the API boundary (AsOfJoin); the
     // require is defense for programmatic plan builders.
     import org.apache.spark.sql.types._
     def timeGetter(dt: DataType): UnsafeRow => Long = dt match {

@@ -34,6 +34,13 @@ class HostCalSpec extends AnyFunSuite {
     assert(HostCal.parTasks * HostCal.workload(HostCal.parTaskN)
       == HostCal.parExpected)
   }
+
+  test("preflight threshold is 250 ms per task wave of the 32-task leg") {
+    // ceil(32 / cores) waves: 11 at 3 cores, 8 at 4, 4 at 8, 1 at 32;
+    // more cores than tasks still run one wave
+    assert(Seq(3, 4, 8, 32, 64).map(HostCal.preflightMaxMs) ==
+      Seq(2750.0, 2000.0, 1000.0, 250.0, 250.0))
+  }
 }
 
 /** Spark-session half of the parallel-leg pin: the leg must actually

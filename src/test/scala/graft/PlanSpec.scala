@@ -818,6 +818,20 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("as-of queries run on exactly one AsOfJoinExec, no union-LOCF column") {
+    // every as-of caller goes through the co-partitioned sort-merge
+    // exec; a `_side` tag column would mean a union + window form crept
+    // back in next to (or instead of) it
+    for (q <- Seq("q14_asof_join", "q134_attribution",
+        "q162_point_in_time", "q178_latency_percentiles",
+        "q181_nearest_event", "q250_asof_exec",
+        "q272_asof_nearest_exec")) {
+      val p = plan(q)
+      assert("AsOfJoin \\[".r.findAllIn(p).length == 1, s"$q:\n$p")
+      assert(!p.contains("_side"), s"$q:\n$p")
+    }
+  }
+
   test("q277 SQL simhash is scan-stage: native kernel, no exchange before sort") {
     // the fused kernel must keep the signature computation in the scan
     // stage — one shuffle total (the final ORDER BY), no aggregate or

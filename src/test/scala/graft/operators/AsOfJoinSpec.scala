@@ -34,14 +34,48 @@ class AsOfJoinSpec extends SparkTestBase {
     assert(got(("A", 20L)) == None)      // gap 5 > 3
   }
 
-  test("single shuffle: plan has exactly one exchange on the key") {
+  test("plan: custom exec node, co-partitioned sort-merge shape") {
     val df = AsOfJoin.asofBackward(trades, quotes, Seq("sym"), "t", "qt",
       Seq("px"))
     val p = df.queryExecution.executedPlan.toString
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
-    assert(exchanges == 1, s"expected 1 shuffle:\n$p")
-    // and the two LOCF columns share one Window node (one sort)
-    assert("Window \\[".r.findAllIn(p).size == 1)
+    assert(p.contains("AsOfJoin ["), p) // SparkPlan strips "Exec"
+    // both children shuffled on the key and sorted (key, time); no
+    // union, no window
+    assert("Exchange hashpartitioning".r.findAllIn(p).length == 2, p)
+    assert("Sort \\[".r.findAllIn(p).length >= 2, p)
+    assert(!p.contains("Union") && !p.contains("Window"), p)
+  }
+
+  test("floating-point join keys are rejected with a clear error") {
+    val l = Seq((1.0, 10L, "a")).toDF("k", "t", "lv")
+    val r = Seq((1.0, 5L, 2.0)).toDF("k", "rt", "rv")
+    val e = intercept[IllegalArgumentException] {
+      AsOfJoin.asofBackward(l, r, Seq("k"), "t", "rt", Seq("rv"))
+    }
+    assert(e.getMessage.contains("floating-point join key"))
+  }
+
+  test("nearest with non-integral time column is rejected") {
+    val l = Seq((1L, "x", "a")).toDF("k", "t", "lv")
+    val r = Seq((1L, "y", 2.0)).toDF("k", "rt", "rv")
+    val e = intercept[IllegalArgumentException] {
+      AsOfJoin.asofNearest(l, r, Seq("k"), "t", "rt", Seq("rv"), 5L)
+    }
+    assert(e.getMessage.contains("integral or timestamp"))
+  }
+
+  test("key or time types that differ across sides are rejected") {
+    // one compiled ordering typed by the left side compares both sides
+    val l = Seq((1, 10L, "a")).toDF("k", "t", "lv")
+    val r = Seq((1L, 5L, 2.0)).toDF("k", "rt", "rv")
+    val e = intercept[IllegalArgumentException] {
+      AsOfJoin.asofBackward(l, r, Seq("k"), "t", "rt", Seq("rv"))
+    }
+    assert(e.getMessage.contains("column 'k'"))
+    val r2 = Seq((1, 5, 2.0)).toDF("k", "rt", "rv")
+    assert(intercept[IllegalArgumentException] {
+      AsOfJoin.asofBackward(l, r2, Seq("k"), "t", "rt", Seq("rv"))
+    }.getMessage.contains("column 't'"))
   }
 
   test("null right payload stays paired with its own timestamp (atomic LOCF)") {
@@ -52,7 +86,8 @@ class AsOfJoinSpec extends SparkTestBase {
       .select($"asof_ts", $"px").as[(Option[Long], Option[Double])]
       .collect().head
     // the ct=10 row IS the match; its null payload must not be replaced
-    // by the older non-null value from ct=5
+    // by the older non-null value from ct=5 (the exec carries the
+    // matched right row whole)
     assert(row == (Some(10L), None))
   }
 
