@@ -3836,9 +3836,10 @@ object SparkEntry {
 
     // End-to-end entity resolution: typo-model pair generation (q168's
     // symdelete + native DL kernel) → connected-components closure
-    // (q73's hash-min machinery) → one entity id + cluster size per
-    // record — the full "dedupe the customer table" pipeline in three
-    // composed operators
+    // (q73's closure) → one entity id + cluster size per record — the
+    // full "dedupe the customer table" pipeline in three composed
+    // operators. The typo-pair graph (14,129 edges at sf0.1, 147,543 at
+    // the 10× twin) sits under the driver union-find cap.
     "q179_entity_clusters" -> ((s, dir) => {
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
@@ -4416,11 +4417,12 @@ object SparkEntry {
 
     // Duplicate-class closure: the q21 pair emitter finds EDGES; the
     // curation decision needs the transitive closure (A≈B≈C ⇒ one
-    // class). Hash-min label propagation over the pair graph — each
-    // round one join + one min-aggregate, rounds = diameter (small by
-    // construction for dedup graphs). Every doc gets its class
-    // representative (min reachable id) + class size; "keep one per
-    // class" downstream is doc_id === component.
+    // class). The 0.01 stress threshold makes a chain-shaped pair graph
+    // (16,411 edges at sf0.1, 164,110 at the 10× twin), still under the
+    // driver union-find cap, so it closes on the driver; larger graphs
+    // run star contraction. Every doc gets its class representative
+    // (min reachable id) + class size; "keep one per class" downstream
+    // is doc_id === component.
     "q73_dup_clusters" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val (pairs, handle) = NearDup.jaccardPairsWithHandle(docs, "doc_id",
@@ -4433,11 +4435,6 @@ object SparkEntry {
       out.orderBy(col("doc_id"))
     }),
 
-    // Same closure at the curation-realistic threshold (0.5): the pair
-    // graph is clique-shaped (LSH-bucket-like), so hash-min converges in
-    // single-digit rounds — the documented fast path — where q73's 0.01
-    // stress threshold yields a chain-shaped graph that exercises the
-    // star-contraction fallback.
     // Leakage-safe split over the strict-threshold closure: near-dup
     // CLASSES are the split unit, so a training doc's 98%-copy cannot
     // land in eval. 200/26/30 of 256 ≈ 78/10/12%, keyed on md5 of the
@@ -4452,6 +4449,9 @@ object SparkEntry {
       out.orderBy(col("doc_id"))
     }),
 
+    // Same closure at the curation-realistic threshold (0.5): the pair
+    // graph is a few clique-shaped classes (7 edges at sf0.1, 70 at the
+    // 10× twin), closed on the driver by union-find like q73's.
     "q74_dup_clusters_strict" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val (pairs, handle) = NearDup.jaccardPairsWithHandle(docs, "doc_id",

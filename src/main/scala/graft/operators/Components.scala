@@ -13,40 +13,36 @@ import org.apache.spark.sql.functions._
   * (program/src/main/scala/hmushtaq/sparkga1/SparkGA1.scala:822-851);
   * this generalizes to the graph closure.
   *
-  * Three strategies, selected automatically by graph size and shape:
+  * Two strategies, selected by graph size:
   *
-  *  0. '''Driver union-find''' — below `spark.graft.closure
-  *     .localMaxEdges` edge rows (default heap-derived: 1/8 of driver
-  *     maxMemory at the 184 B/edge worst case, clamped to ≤ 4 M —
-  *     broadcast-scale on an 8 GB driver, proportionally lower on a
-  *     small one), the
-  *     edge list is collected and closed with path-halving union-find
-  *     in microseconds; a distributed round costs ~0.5 s of fixed
+  *  0. '''Driver union-find''' — up to [[defaultLocalMaxEdges]] edge rows
+  *     (heap-derived: 1/8 of driver maxMemory at the 184 B/edge worst
+  *     case, clamped to [65 536, 4 M] — broadcast-scale on an 8 GB
+  *     driver, proportionally lower on a small one), the edge list is
+  *     collected and closed with path-halving union-find in
+  *     microseconds; a distributed round costs ~0.5 s of fixed
   *     shuffle/checkpoint machinery regardless of volume, so on the
   *     sparse pair graphs dedup actually emits the machinery dwarfs
   *     the work (same logic as AQE's broadcast threshold). Integral id
   *     types only — see [[localUnionFind]].
-  *  1. '''Hash-min label propagation''' — every node starts labeled with
-  *     its own id; each round every node takes the min of its label and
-  *     its neighbors' labels; fixpoint = every node carries its
-  *     component's min id. One shuffle join + one min-aggregate per
-  *     round, rounds = graph diameter. Near-dup graphs are piles of
-  *     small dense clusters (LSH buckets emit cliques), so diameter is
-  *     single-digit even at corpus scale.
-  *  2. '''Alternating large-star / small-star contraction''' (Kiveris et
+  *  1. '''Alternating large-star / small-star contraction''' (Kiveris et
   *     al., "Connected Components in MapReduce and Beyond", SoCC 2014) —
-  *     O(log n) rounds regardless of diameter. Selected automatically
-  *     when hash-min hasn't converged within ~log₂(n) rounds, i.e. the
-  *     input turned out chain-shaped (low-threshold pair lists, road-
-  *     network-like graphs) rather than dedup-shaped.
+  *     everything else: O(log n) rounds regardless of diameter, so
+  *     clique-shaped dedup graphs and chain-shaped ones (low-threshold
+  *     pair lists, road-network-like graphs) take the same path. It
+  *     replaced hash-min label propagation (rounds = diameter) plus a
+  *     hand-off to contraction, because contraction alone was faster on
+  *     every graph above the 65 536-edge floor (medians at local[4] on
+  *     a 4-vCPU host: q73's 10× pair graph 3.5 s vs 6.3 s, q179's 6.9 s
+  *     vs 10.2 s, sf0.1 co-order part pairs 3.1 s vs 5.9 s).
   *
   * LINEAGE: each round's frame is pinned with an EAGER
-  * `localCheckpoint`, which both materializes it (so the convergence
+  * `localCheckpoint`, which both materializes it (so the fixpoint
   * probe never recomputes through earlier rounds) and replaces its
   * logical plan with a `LogicalRDD` over the cached partitions. A plain
   * `persist()` would NOT do the second half: it short-circuits
-  * execution but leaves the analyzed plan growing ~3× per round (the
-  * propagation join, the union, and the probe each re-reference the
+  * execution but leaves the analyzed plan growing several-fold per
+  * round (the round's joins and the probe each re-reference the
   * previous round), and plan copy/stringification under AQE goes
   * exponential — the round-4 sf0.1 OOM. With the checkpoint the plan is
   * O(1) per round; superseded rounds' cached blocks are released by the
@@ -78,10 +74,9 @@ import org.apache.spark.sql.functions._
 object Components {
 
   /** Per-round closure diagnostics on stderr (`[graft.closure] …`):
-    * algorithm, round number, the count the round already computed (edge
-    * count for star contraction; node count once for hash-min), and wall
-    * millis. Costs nothing beyond the counts the convergence logic
-    * already takes — the point is that a drifting bench number can be
+    * algorithm, round number, the edge count the round already
+    * computed, and wall millis. Costs nothing beyond the counts the
+    * convergence logic already takes — the point is that a drifting bench number can be
     * attributed to "more rounds" vs "same rounds, slower rounds" from
     * the log alone.
     */
@@ -146,28 +141,6 @@ object Components {
       case _ => ()
     }
 
-  /** Driver union-find over a collected edge list — the small-graph fast
-    * path. A closure round on the distributed path costs a join + an
-    * aggregate + a checkpoint of FIXED shuffle machinery (~0.5 s on
-    * local[32]) regardless of data volume; on the pair graphs dedup
-    * actually produces (banded candidates over a corpus — sparse by
-    * construction, vastly smaller than the corpus itself) several rounds
-    * of that machinery dwarf the work. Same reasoning as AQE's broadcast
-    * threshold: below `spark.graft.closure.localMaxEdges` directed rows
-    * (default heap-derived via [[defaultLocalMaxEdgesFor]], ≤ 4 M — a
-    * size Spark happily broadcasts), collect the edges
-    * as flat primitive long chunks, run path-halving union-find with
-    * min-id roots over a primitive open-addressing map, and return the
-    * labels as a parallelized (not LocalRelation — keeps plans small)
-    * distributed frame. Driver heap is genuinely flat: 16 B/edge for
-    * the collected chunks + ~17 B/slot for the label map (≤0.5 load) —
-    * ≈ 350 MB worst case at the 4 M default, no boxed rows or boxed
-    * map entries anywhere (a Row-level collect + java HashMap was
-    * 10-20× that). Above the threshold, or for
-    * non-integral id types (driver min-ordering for strings is UTF-16,
-    * Spark's is UTF-8 binary — not identical), the distributed
-    * hash-min/star path below runs unchanged.
-    */
   /** Minimal open-addressing Long→Long map (linear probing, power-of-2
     * capacity, SplitMix64 finalizer so sequential ids don't cluster).
     * `java.util.HashMap[Long,Long]` boxes every key/value and holds a
@@ -209,14 +182,14 @@ object Components {
     private def grow(): Unit = {
       // cap is a power of two; at 1<<30 another doubling overflows Int
       // to a negative, making `mask` negative and corrupting slot
-      // indexing. Reachable only when spark.graft.closure.localMaxEdges
-      // is raised far above its default (~>2^29 distinct node ids) —
-      // fail loudly instead of silently corrupting the map.
+      // indexing. Unreachable under the edge clamp (4 M edges have at
+      // most 8 M distinct ids, far below 2^29) — fail loudly instead of
+      // silently corrupting the map should that bound ever move.
       require(cap < (1 << 30),
         s"local union-find node map exceeded ${1 << 29} keys — too many " +
-        "distinct node ids for the driver-local path; lower " +
-        "spark.graft.closure.localMaxEdges so the distributed " +
-        "hash-min/star path handles this graph")
+        "distinct node ids for the driver-local path; its edge cap " +
+        "(defaultLocalMaxEdgesFor) must route graphs this large to " +
+        "starContraction")
       val ok = keys; val ov = vals; val ou = used; val oc = cap
       cap <<= 1; mask = cap - 1; n = 0
       keys = new Array[Long](cap); vals = new Array[Long](cap)
@@ -272,6 +245,28 @@ object Components {
   private[operators] def defaultLocalMaxEdges: Long =
     defaultLocalMaxEdgesFor(Runtime.getRuntime.maxMemory)
 
+  /** Driver union-find over a collected edge list — the small-graph fast
+    * path. A closure round on the distributed path costs a join + an
+    * aggregate + a checkpoint of FIXED shuffle machinery (~0.5 s on
+    * local[32]) regardless of data volume; on the pair graphs dedup
+    * actually produces (banded candidates over a corpus — sparse by
+    * construction, vastly smaller than the corpus itself) several rounds
+    * of that machinery dwarf the work. Same reasoning as AQE's broadcast
+    * threshold: up to [[defaultLocalMaxEdges]] directed rows
+    * (heap-derived via [[defaultLocalMaxEdgesFor]], ≤ 4 M — a
+    * size Spark happily broadcasts), collect the edges
+    * as flat primitive long chunks, run path-halving union-find with
+    * min-id roots over a primitive open-addressing map, and return the
+    * labels as a parallelized (not LocalRelation — keeps plans small)
+    * distributed frame. Driver heap is genuinely flat: 16 B/edge for
+    * the collected chunks + ~17 B/slot for the label map (≤0.5 load) —
+    * ≈ 350 MB worst case at the 4 M default, no boxed rows or boxed
+    * map entries anywhere (a Row-level collect + java HashMap was
+    * 10-20× that). Above the threshold, or for
+    * non-integral id types (driver min-ordering for strings is UTF-16,
+    * Spark's is UTF-8 binary — not identical), [[starContraction]]
+    * runs instead.
+    */
   private def localUnionFind(e0: DataFrame,
                              idType: org.apache.spark.sql.types.DataType)
       : DataFrame = {
@@ -335,118 +330,53 @@ object Components {
   /** (id, component) for every node appearing in `edges`, where
     * `component` is the smallest node id reachable over the undirected
     * edge list. Ids must be non-null; self-loops and duplicate edges are
-    * harmless (min() absorbs them). `maxRounds` bounds the hash-min
-    * phase; a graph that is still unconverged after ~log₂(n) rounds
-    * hands off to [[starContraction]] (seeded with the partial labels,
-    * which preserve components and shrink the remaining diameter).
+    * harmless. Graphs up to [[defaultLocalMaxEdges]] edge rows with
+    * integral ids close on the driver ([[localUnionFind]]); the rest run
+    * [[starContraction]].
     */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-                          maxRounds: Int = 25,
-                          reliable: Boolean = false): DataFrame = {
+                          reliable: Boolean = false): DataFrame =
+    connectedComponents(edges, aCol, bCol, reliable, defaultLocalMaxEdges)
+
+  /** [[connectedComponents]] with an explicit driver-path edge cap —
+    * `localMaxEdges = 0` sends every non-empty graph to
+    * [[starContraction]].
+    */
+  private[operators] def connectedComponents(edges: DataFrame,
+                                             aCol: String, bCol: String,
+                                             reliable: Boolean,
+                                             localMaxEdges: Long)
+      : DataFrame = {
     val t0 = System.nanoTime()
-    val spark = edges.sparkSession
     // Materialize the pair list ONCE before anything references it
     // twice: the emitters upstream (inverted-index joins, LSH banding)
-    // are the expensive part of a closure call, and both the symmetrize
-    // union and the node-set derivation would otherwise re-evaluate the
-    // un-cached emitter plan (Spark shares no subexpressions across
-    // union branches — measured 2× the emitter cost on q73's seed).
+    // are the expensive part of a closure call, and star contraction's
+    // node set and canonical edge set would otherwise each re-evaluate
+    // the un-cached emitter plan (Spark shares no subexpressions across
+    // them — 2× the emitter cost).
     val e0 = pin(edges.select(col(aCol).as("s"), col(bCol).as("d")),
       reliable)
     val m = e0.count()
     val idType = e0.schema("s").dataType
-    val localMax = spark.conf
-      .get("spark.graft.closure.localMaxEdges",
-        defaultLocalMaxEdges.toString).toLong
-    if (m <= localMax &&
-        (idType == org.apache.spark.sql.types.LongType ||
-         idType == org.apache.spark.sql.types.IntegerType)) {
-      val out = localUnionFind(e0, idType)
-        .select(col("id"), col("component"))
-      releasePin(e0, reliable)
-      logRound(f"local union-find: edges=$m " +
-        f"${(System.nanoTime() - t0) / 1e6}%.0f ms")
-      return out
-    }
-    // Cap sym's partition count at the session shuffle width: sym is
-    // re-joined EVERY round, and it otherwise inherits the input's
-    // partitioning — a many-way-union pair emitter hands over hundreds
-    // of slivers, and each round then pays a task launch per sliver
-    // (measured: 6 s/round vs 1.5 s for star contraction's post-distinct
-    // frames on the same 328k-edge graph). coalesce, not repartition:
-    // no extra shuffle, and a no-op when the input is already narrower.
-    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sym = pin(
-      e0.union(e0.select(col("d").as("s"), col("s").as("d")))
-        .coalesce(width), reliable)
-    releasePin(e0, reliable) // sym pinned off e0's cache; e0 is dead
-    var labels = pin(sym.select(col("s").as("id")).distinct()
-      .select(col("id"), col("id").as("lab")), reliable)
-    val n = labels.count()
-    logRound(f"hashmin seed: nodes=$n edges=$m " +
-      f"${(System.nanoTime() - t0) / 1e6}%.0f ms")
-    // rounds = diameter for hash-min. Dedup graphs (LSH-bucket cliques,
-    // typo pairs) have single-digit diameter and converge in ≤ 4
-    // rounds; a graph still unconverged after 6 is chain-shaped and
-    // star contraction wins — handing off EARLY matters, because every
-    // further hash-min round is pure waste (measured: a 13k-node
-    // digit-chain graph burned 17 rounds before the old log₂(n)+3
-    // handoff, ~2× the whole closure's useful work)
-    val budget = math.min(maxRounds.toLong,
-      math.min(6L,
-        (64 - java.lang.Long.numberOfLeadingZeros(math.max(n, 2) - 1))
-          + 3L))
-    var converged = false
-    var round = 0
-    while (!converged && round < budget) {
-      val tr = System.nanoTime()
-      val prop = sym
-        .join(labels.select(col("id").as("s"), col("lab")), Seq("s"))
-        .select(col("d").as("id"), col("lab"))
-      val next = pin(prop.union(labels)
-        .groupBy(col("id")).agg(min(col("lab")).as("lab")), reliable)
-      // labels only ever decrease, so "no label changed" = fixpoint.
-      // Both sides are checkpointed — the probe rides cached partitions
-      // and limit(1) stops at the first change. Round 1 always changes
-      // something (every edge endpoint adopts min(self, neighbor lab),
-      // and the graph has ≥1 edge by construction of `sym`), so its
-      // probe job is skipped outright.
-      val changed =
-        if (round == 0) 1L
-        else next
-          .join(labels.withColumnRenamed("lab", "prev"), Seq("id"))
-          .where(col("lab") =!= col("prev"))
-          .limit(1).count()
-      releasePin(labels, reliable) // probe done; prev round is dead
-      labels = next
-      converged = changed == 0L
-      round += 1
-      logRound(f"hashmin round=$round changed=${changed != 0L} " +
-        f"${(System.nanoTime() - tr) / 1e6}%.0f ms")
-    }
-    // converged: the output references only the final labels, so sym is
-    // dead too. Unconverged: starContraction EAGERLY pins its own edge
-    // frame from sym + labels in its first statements, after which both
-    // seeds are dead — release on return.
-    if (converged) {
-      releasePin(sym, reliable)
-      labels.select(col("id"), col("lab").as("component"))
-    } else {
-      val out = starContraction(
-        sym.select(col("s").as("a"), col("d").as("b"))
-          .union(labels.where(col("id") =!= col("lab"))
-            .select(col("id").as("a"), col("lab").as("b"))),
-        "a", "b", reliable = reliable)
-      releasePin(sym, reliable)
-      releasePin(labels, reliable)
-      out
-    }
+    val out =
+      if (m <= localMaxEdges &&
+          (idType == org.apache.spark.sql.types.LongType ||
+           idType == org.apache.spark.sql.types.IntegerType)) {
+        val labels = localUnionFind(e0, idType)
+        logRound(f"local union-find: edges=$m " +
+          f"${(System.nanoTime() - t0) / 1e6}%.0f ms")
+        labels
+      } else starContraction(e0, "s", "d", reliable = reliable)
+    // neither result reads e0 (union-find hands back driver labels,
+    // contraction eagerly pins its own frames), so e0 is dead
+    releasePin(e0, reliable)
+    out
   }
 
   /** Connected components by alternating large-star / small-star
     * contraction (Kiveris et al., SoCC 2014) — O(log n) rounds
-    * independent of graph diameter, the scale path for chain-shaped
-    * graphs where hash-min's rounds-=-diameter behavior is fatal.
+    * independent of graph diameter: [[connectedComponents]]' path for
+    * every graph above the driver union-find cap.
     *
     *  - Large-star: every node attaches its LARGER neighbors to the
     *    minimum of its closed neighborhood — one groupBy-min + one join

@@ -5,28 +5,22 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 /** Streaming conversion funnel: per-user ordered-step tracking with
   * `flatMapGroupsWithState` — the streaming twin of the batch
-  * `Funnel.conversion`. State per key is THREE numbers (anchor time,
-  * last-step time, steps reached) — O(#users), never O(events), the
-  * same bound that makes StatefulSessions safe at scale.
-  *
-  * Semantics match the batch operator under in-order delivery (each
-  * batch's events are processed in event-time order; cross-batch order
-  * holds when the source is time-ordered, e.g. replayed logs or a
-  * watermarked upstream): step k advances at the EARLIEST event of the
-  * k-th type strictly after step k−1, within `windowSec` of the first
-  * step-1 event. One `Advance` row is emitted per (user, step) — counts
-  * per step are the funnel. For sources with NO ordering contract, use
-  * [[trackUnordered]]: per-step candidate state + a revision log make
-  * the final counts exact under arbitrary cross-batch reordering.
+  * `Funnel.conversion`. [[trackUnordered]] needs no ordering contract
+  * from its source: per-step candidate state + a revision log make the
+  * final counts exact under arbitrary cross-batch reordering, with state
+  * O(#users), never O(events) — the same bound that makes
+  * StatefulSessions safe at scale. [[debounce]] is the streaming burst
+  * collapse.
   */
 object StatefulFunnel {
 
   /** Streaming burst collapse (debounce): emit only the head event of
     * every gap-delimited burst per key — the streaming twin of
     * `Sessionize.burstCollapse`, with state = ONE timestamp per key
-    * (the current burst's maximum). Exact under in-order delivery
-    * (same contract as [[track]]); each batch's events are processed
-    * in (ts, tie) order.
+    * (the current burst's maximum). Exact under in-order delivery (each
+    * batch's events are processed in (ts, tie) order; cross-batch order
+    * holds when the source is time-ordered, e.g. replayed logs or a
+    * watermarked upstream).
     */
   case class KeyedEvent(key: String, ts: java.sql.Timestamp, tie: Long)
   case class BurstHead(key: String, ts: java.sql.Timestamp, tie: Long)
@@ -60,41 +54,9 @@ object StatefulFunnel {
     * sees irrelevant events.
     */
   case class StepEvent(key: Long, ts: java.sql.Timestamp, step: Int)
-  case class Advance(key: Long, step_idx: Int, ts: java.sql.Timestamp)
-  case class FState(t0Micros: Long, lastMicros: Long, reached: Int)
 
   private def micros(ts: java.sql.Timestamp): Long =
     ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
-
-  def track(events: Dataset[StepEvent], nSteps: Int, windowSec: Long)
-      : Dataset[Advance] = {
-    implicit val ea = Encoders.product[Advance]
-    implicit val es = Encoders.product[FState]
-    implicit val ek = Encoders.scalaLong
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[FState, Advance](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[StepEvent], state: GroupState[FState]) =>
-          val evs = it.toArray.sortBy(e => (micros(e.ts), e.step))
-          var st = state.getOption.getOrElse(FState(0L, 0L, 0))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Advance]
-          evs.foreach { e =>
-            if (st.reached < nSteps && e.step == st.reached) {
-              val t = micros(e.ts)
-              if (st.reached == 0) {
-                st = FState(t, t, 1)
-                out += Advance(key, 1, e.ts)
-              } else if (t > st.lastMicros &&
-                         t <= st.t0Micros + windowSec * 1000000L) {
-                st = FState(st.t0Micros, t, st.reached + 1)
-                out += Advance(key, st.reached, e.ts)
-              }
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
 
   /** One funnel-progress revision: `reached` steps were complete for
     * `key` as of revision `rev`. Later revisions supersede earlier ones
@@ -106,20 +68,21 @@ object StatefulFunnel {
     */
   case class FunnelRev(key: Long, rev: Int, reached: Int)
 
-  /** [[track]]'s state per revision: the anchor (earliest step-1 time,
-    * MaxValue = none yet) plus, per later step, the surviving candidate
-    * event times. Candidates above `t1 + window` are pruned permanently:
-    * the anchor only ever moves EARLIER, so the window's right edge only
-    * moves left and a time beyond it can never become feasible again.
-    * Times below the current resolution must be kept — they are exactly
-    * the ones a leftward-shifting window makes feasible.
+  /** [[trackUnordered]]'s state per revision: the anchor (earliest
+    * step-1 time, MaxValue = none yet) plus, per later step, the
+    * surviving candidate event times. Candidates above `t1 + window`
+    * are pruned permanently: the anchor only ever moves EARLIER, so the
+    * window's right edge only moves left and a time beyond it can never
+    * become feasible again. Times below the current resolution must be
+    * kept — they are exactly the ones a leftward-shifting window makes
+    * feasible.
     */
   case class UState(t1: Long, cands: Seq[Seq[Long]], rev: Int,
                     lastReached: Int)
 
   /** Out-of-order-tolerant funnel: exact under ARBITRARY cross-batch
-    * reordering (no in-order delivery contract, unlike [[track]]), at
-    * the price of revision-log output and per-step candidate state.
+    * reordering (no in-order delivery contract), at the price of
+    * revision-log output and per-step candidate state.
     *
     * Semantics match the batch `Funnel.conversion` on the final
     * revision: step 1 anchors at the user's earliest step-1 event; step

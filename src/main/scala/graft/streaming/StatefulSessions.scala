@@ -13,59 +13,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * State per key is ONE open session (constant size — this is what makes
   * it safe at scale: state store holds O(#active keys), not O(events)).
-  * A session is emitted when a later event arrives beyond the gap. Use
+  * A session is emitted when a later event arrives beyond the gap, or
+  * when the watermark passes its end + gap. Use
   * `session_window` (Streams.sessionAgg) when the built-in semantics fit;
   * this operator is the template for state Spark can't express — e.g.
   * sessions carrying custom payload reductions.
   */
 object StatefulSessions {
 
-  case class Event(key: Long, t: Long)
   case class OpenSession(start: Long, end: Long, n: Long)
   case class Session(key: Long, sess_start: Long, sess_end: Long,
                      n_rows: Long)
-
-  def sessionize(events: Dataset[Event], gap: Long): Dataset[Session] = {
-    implicit val se = Encoders.product[Session]
-    implicit val so = Encoders.product[OpenSession]
-    implicit val sk = Encoders.scalaLong
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[OpenSession, Session](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[Event], state: GroupState[OpenSession]) =>
-          val times = it.map(_.t).toArray.sorted
-          var cur = state.getOption
-          val closed = scala.collection.mutable.ArrayBuffer.empty[Session]
-          // stragglers older than the open session's leading gap can't
-          // join it (state holds ONE open session — that's what bounds
-          // it); gap-merge them among themselves and emit immediately.
-          val guard = cur.map(_.start - gap).getOrElse(Long.MinValue)
-          val (late, rest) = times.partition(_ < guard)
-          late.foreach { t =>
-            closed.lastOption match {
-              case Some(s) if t <= s.sess_end + gap =>
-                closed(closed.length - 1) =
-                  s.copy(sess_end = t, n_rows = s.n_rows + 1)
-              case _ => closed += Session(key, t, t, 1)
-            }
-          }
-          rest.foreach { t =>
-            cur = cur match {
-              // extends (or exactly touches) the open session — also
-              // lowers start for a late event within the leading gap
-              case Some(s) if t <= s.end + gap =>
-                Some(OpenSession(math.min(s.start, t),
-                                 math.max(s.end, t), s.n + 1))
-              case Some(s) =>
-                closed += Session(key, s.start, s.end, s.n)
-                Some(OpenSession(t, t, 1))
-              case None => Some(OpenSession(t, t, 1))
-            }
-          }
-          cur.foreach(state.update)
-          closed.iterator
-      }
-  }
 
   case class TsEvent(key: Long, ts: java.sql.Timestamp)
 
@@ -94,8 +52,9 @@ object StatefulSessions {
             val times = it.map(_.ts.getTime / 1000L).toArray.sorted
             var cur = state.getOption
             val closed = scala.collection.mutable.ArrayBuffer.empty[Session]
-            // same straggler guard as the batch variant: events older
-            // than the open session's leading gap must not merge into it
+            // stragglers older than the open session's leading gap can't
+            // join it (state holds ONE open session — that's what bounds
+            // it); gap-merge them among themselves and emit immediately.
             val guard = cur.map(_.start - gapSeconds).getOrElse(Long.MinValue)
             val (late, rest) = times.partition(_ < guard)
             late.foreach { t =>
@@ -108,6 +67,8 @@ object StatefulSessions {
             }
             rest.foreach { t =>
               cur = cur match {
+                // extends (or exactly touches) the open session — also
+                // lowers start for a late event within the leading gap
                 case Some(s) if t <= s.end + gapSeconds =>
                   Some(OpenSession(math.min(s.start, t),
                                    math.max(s.end, t), s.n + 1))

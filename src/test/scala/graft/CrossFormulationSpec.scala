@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 /** Property tests pinning that independent formulations of the same
   * operator agree on random inputs — the engine's internal consistency
   * net: window sessionization vs the interval-union Aggregator vs the
-  * built-in session_window, and the union+LOCF as-of join vs a
-  * brute-force reference.
+  * built-in session_window, the as-of join vs a brute-force reference,
+  * and driver union-find vs star contraction.
   */
 class CrossFormulationSpec extends SparkTestBase {
   import spark.implicits._
@@ -77,30 +77,21 @@ class CrossFormulationSpec extends SparkTestBase {
     }
   }
 
-  test("hash-min and star contraction agree on random graphs") {
-    // two independent connected-components algorithms (rounds=diameter
-    // label propagation vs O(log n) large/small-star contraction) must
-    // label every node identically on the same edge list
+  test("union-find and star contraction agree on random graphs") {
+    // the two connected-components algorithms (driver union-find vs
+    // O(log n) large/small-star contraction) must label every node
+    // identically on the same edge list; 60 edges are far below the
+    // heap-derived cap (>= 65,536), so connectedComponents takes the
+    // union-find branch
     val rnd = new scala.util.Random(83)
-    // localMaxEdges=0 keeps this a hash-min-vs-star comparison — the
-    // default conf would route these tiny graphs to the driver
-    // union-find fast path instead (covered in ComponentsSpec)
-    val key = "spark.graft.closure.localMaxEdges"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "0")
-    try {
-      for (_ <- 1 to 4) {
-        val es = Seq.fill(60)((rnd.nextLong(40), rnd.nextLong(40)))
-          .toDF("a", "b")
-        val hm = operators.Components.connectedComponents(es, "a", "b")
-          .as[(Long, Long)].collect().toMap
-        val sc = operators.Components.starContraction(es, "a", "b")
-          .as[(Long, Long)].collect().toMap
-        assert(hm == sc)
-      }
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    for (_ <- 1 to 4) {
+      val es = Seq.fill(60)((rnd.nextLong(40), rnd.nextLong(40)))
+        .toDF("a", "b")
+      val uf = operators.Components.connectedComponents(es, "a", "b")
+        .as[(Long, Long)].collect().toMap
+      val sc = operators.Components.starContraction(es, "a", "b")
+        .as[(Long, Long)].collect().toMap
+      assert(uf == sc)
     }
   }
 }

@@ -6,20 +6,14 @@ import org.apache.spark.sql.functions._
 class ComponentsSpec extends SparkTestBase {
   import spark.implicits._
 
-  /** Force the distributed hash-min/star path (localMaxEdges=0) for the
-    * tests that exist to exercise IT — small test graphs would otherwise
-    * all take the driver union-find fast path.
+  /** `connectedComponents`' above-threshold branch (star contraction)
+    * for the tests that exist to exercise IT — small test graphs would
+    * otherwise all take the driver union-find fast path.
     */
-  private def forceDistributed[A](body: => A): A = {
-    val key = "spark.graft.closure.localMaxEdges"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "0")
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def distributed(edges: org.apache.spark.sql.DataFrame,
+                          reliable: Boolean = false) =
+    Components.connectedComponents(edges, "a", "b", reliable,
+      localMaxEdges = 0L)
 
   /** Reference union-find, for property-testing the distributed answer. */
   private def bruteComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -52,32 +46,31 @@ class ComponentsSpec extends SparkTestBase {
     assert(got == Map(1L -> 1L, 2L -> 1L))
   }
 
-  test("random graphs match union-find (seeded property)") { forceDistributed {
+  test("random graphs match union-find (seeded property)") {
     val rnd = new scala.util.Random(31)
     for (_ <- 1 to 8) {
       val es = Seq.fill(30)((rnd.nextLong(20), rnd.nextLong(20)))
-      val got = Components.connectedComponents(es.toDF("a", "b"), "a", "b")
+      val got = distributed(es.toDF("a", "b"))
         .as[(Long, Long)].collect().toMap
       assert(got == bruteComponents(es))
     }
-  } }
+  }
 
-  test("superseded rounds' local-checkpoint blocks are released eagerly") { forceDistributed {
-    // a 120-node chain burns through the hash-min budget and falls back
-    // to star contraction — ~15 pinned rounds total. Without the
-    // explicit releasePin calls every round's blocks stay registered
-    // until the ContextCleaner GCs the dead frames (which a short test
-    // never triggers), so the persistent-RDD delta would be ~2× rounds.
+  test("superseded rounds' local-checkpoint blocks are released eagerly") {
+    // a 120-node chain takes 8 star-contraction rounds: 11 pins with
+    // the input, node-set and seed-edge pins, of which the result reads
+    // 2. Without the explicit releasePin calls every round's blocks
+    // stay registered until the ContextCleaner GCs the dead frames
+    // (which a short test never triggers), so the delta would be 11.
     // Suites share the session, so the bound is generous to concurrent
     // suites' own persists — but far below the no-release footprint.
     val before = spark.sparkContext.getPersistentRDDs.size
     val chain = (0L until 119L).map(i => (i, i + 1)).toDF("a", "b")
-    val got = Components.connectedComponents(chain, "a", "b")
-      .as[(Long, Long)].collect()
+    val got = distributed(chain).as[(Long, Long)].collect()
     assert(got.length == 120 && got.forall(_._2 == 0L))
     val delta = spark.sparkContext.getPersistentRDDs.size - before
     assert(delta <= 8, s"expected released rounds, $delta RDDs still cached")
-  } }
+  }
 
   test("duplicateClusters keeps singletons and sizes the classes") {
     val docs = Seq(1L, 2L, 3L, 4L, 5L).toDF("doc_id")
@@ -90,34 +83,23 @@ class ComponentsSpec extends SparkTestBase {
     assert(got.filter(r => r._1 == r._2).map(_._1).toSeq == Seq(1L, 4L, 5L))
   }
 
-  test("chain-shaped graph auto-switches to star contraction") { forceDistributed {
-    // a 30-long path has diameter 29 ≫ the 3-round hash-min budget; the
-    // old behavior was a require-abort — now the operator hands off to
-    // star contraction (seeded with the partial labels) and converges
-    val chain = (0L until 30L).sliding(2).map(s => (s(0), s(1))).toSeq
-      .toDF("a", "b")
-    val got = Components.connectedComponents(chain, "a", "b", maxRounds = 3)
-      .as[(Long, Long)].collect().toMap
-    assert(got == (0L until 30L).map(_ -> 0L).toMap)
-  } }
-
-  test("logical plan stays O(1) across propagation rounds") { forceDistributed {
-    // diameter-4 path: several hash-min rounds within budget. Round 4's
-    // OOM root cause was the plan tree growing ~3× per round (persist()
+  test("logical plan stays O(1) across propagation rounds") {
+    // diameter-4 path: several contraction rounds. Round 4's OOM root
+    // cause was the plan tree growing several-fold per round (persist()
     // truncates execution, not the analyzed plan); the eager
     // localCheckpoint pins it to a LogicalRDD, so the returned frame's
     // plan must be round-count-independent and tiny.
     val chain = (0L until 5L).sliding(2).map(s => (s(0), s(1))).toSeq
       .toDF("a", "b")
-    val out = Components.connectedComponents(chain, "a", "b")
+    val out = distributed(chain)
     val planNodes = out.queryExecution.analyzed.collect { case p => p }.size
     assert(planNodes <= 10, s"plan grew with rounds: $planNodes nodes")
     assert(out.as[(Long, Long)].collect().toMap ==
       (0L until 5L).map(_ -> 0L).toMap)
-  } }
+  }
 
   test("star contraction converges on a 10k-node path graph") {
-    // diameter 9,999 — hash-min territory would be 10k rounds; the
+    // diameter 9,999 — label propagation would take 10k rounds; the
     // alternating large-star/small-star loop must do it in O(log n)
     val n = 10000L
     val chain = (0L until n).sliding(2).map(s => (s(0), s(1))).toSeq
@@ -138,13 +120,12 @@ class ComponentsSpec extends SparkTestBase {
     }
   }
 
-  test("reliable checkpoint mode: correct labels through checkpoint(dir)") { forceDistributed {
+  test("reliable checkpoint mode: correct labels through checkpoint(dir)") {
     withTempDir("graft_ckpt") { dir =>
       spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
       val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L),
         (10L, 11L), (11L, 12L), (21L, 20L)).toDF("a", "b")
-      val got = Components.connectedComponents(edges, "a", "b",
-          reliable = true)
+      val got = distributed(edges, reliable = true)
         .as[(Long, Long)].collect().toMap
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
         10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
@@ -153,7 +134,7 @@ class ComponentsSpec extends SparkTestBase {
       assert(dir.listFiles != null && dir.listFiles.nonEmpty,
         "reliable mode must write to the checkpoint directory")
     }
-  } }
+  }
 
   test("reliable mode without a checkpoint dir fails fast, not mid-job") {
     val sc = spark.sparkContext
@@ -169,11 +150,11 @@ class ComponentsSpec extends SparkTestBase {
     } finally saved.foreach(sc.setCheckpointDir)
   }
 
-  test("reliable-path stress: chain+random graph at scale through checkpoint(dir)") { forceDistributed {
+  test("reliable-path stress: chain+random graph at scale through checkpoint(dir)") {
     // the cluster-survivability path (localCheckpoint dies with an
     // executor; reliable checkpoint survives) exercised at a size where
     // plan growth or recomputation would blow up: 100k nodes chained
-    // (diameter forces star contraction) + 25k random extra edges.
+    // (diameter 99,999) + 25k random extra edges.
     // The 2M-node variant of this graph runs in ~81 s via
     // localCheckpoint (NOTES.md); this spec drives every round through
     // the reliable store at a CI-sized fraction of that.
@@ -184,28 +165,26 @@ class ComponentsSpec extends SparkTestBase {
       val chain = spark.range(n - 1).select($"id".as("a"), ($"id" + 1).as("b"))
       val extra = Seq.fill(25000)((rnd.nextLong(n), rnd.nextLong(n)))
         .toDF("a", "b")
-      val labels = Components.connectedComponents(chain.union(extra),
-        "a", "b", reliable = true)
+      val labels = distributed(chain.union(extra), reliable = true)
       // the chain connects everything: every node labels to 0
       val agg = labels.agg(count(lit(1)), countDistinct($"component"),
         min($"component")).head()
       assert(agg.getLong(0) == n)
       assert(agg.getLong(1) == 1L && agg.getLong(2) == 0L)
     }
-  } }
+  }
 
   test("driver union-find fast path agrees with the distributed path") {
-    // same seeded graphs through both routes — the default conf takes
-    // the local path (tiny graphs), localMaxEdges=0 forces hash-min/star
+    // same seeded graphs through both routes — the default threshold
+    // takes the local path (tiny graphs), a zero threshold star
+    // contraction
     val rnd = new scala.util.Random(83)
     for (_ <- 1 to 6) {
       val es = Seq.fill(50)((rnd.nextLong(30), rnd.nextLong(30)))
       val local = Components.connectedComponents(es.toDF("a", "b"), "a", "b")
         .as[(Long, Long)].collect().toMap
-      val dist = forceDistributed {
-        Components.connectedComponents(es.toDF("a", "b"), "a", "b")
-          .as[(Long, Long)].collect().toMap
-      }
+      val dist = distributed(es.toDF("a", "b"))
+        .as[(Long, Long)].collect().toMap
       assert(local == dist)
       assert(local == bruteComponents(es))
     }
@@ -215,19 +194,15 @@ class ComponentsSpec extends SparkTestBase {
     val es = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 7L),
       (8L, 9L), (9L, 10L), (10L, 8L))
     val want = bruteComponents(es)
-    val key = "spark.graft.closure.localMaxEdges"
-    val saved = spark.conf.getOption(key)
-    try {
-      for (thr <- Seq("6", "7")) { // 7 edge rows: above and at threshold
-        spark.conf.set(key, thr)
-        val got = Components
-          .connectedComponents(es.toDF("a", "b"), "a", "b")
-          .as[(Long, Long)].collect().toMap
-        assert(got == want, s"threshold=$thr")
-      }
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    val star = Components.starContraction(es.toDF("a", "b"), "a", "b")
+      .as[(Long, Long)].collect().toMap
+    for (thr <- Seq(6L, 7L)) { // 7 edge rows: above and at threshold
+      val got = Components.connectedComponents(es.toDF("a", "b"), "a", "b",
+          reliable = false, localMaxEdges = thr)
+        .as[(Long, Long)].collect().toMap
+      assert(got == want, s"threshold=$thr")
+      // above the threshold the labels are star contraction's
+      if (thr < es.length) assert(got == star, s"threshold=$thr")
     }
   }
 

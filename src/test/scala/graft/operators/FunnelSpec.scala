@@ -73,30 +73,6 @@ class FunnelSpec extends SparkTestBase {
     assert(got.size == 4)
   }
 
-  test("StatefulFunnel.track (batch mode) matches Funnel.conversion") {
-    import graft.streaming.StatefulFunnel
-    val raw = Seq(
-      (1L, ts(1), "A"), (1L, ts(1, 2), "B"), (1L, ts(1, 5), "C"),
-      (2L, ts(1), "B"), (2L, ts(2), "A"),
-      (3L, ts(1), "A"), (3L, ts(1, 3), "B"), (3L, ts(5), "C"),
-      (4L, ts(1), "C")
-    )
-    val steps = Seq("A", "B", "C")
-    val evs = raw.flatMap { case (u, t, ty) =>
-      val i = steps.indexOf(ty)
-      if (i >= 0) Some(StatefulFunnel.StepEvent(u, t, i)) else None
-    }.toDS()
-    val adv = StatefulFunnel.track(evs, 3, 86400L)
-      .collect().groupBy(_.step_idx).view.mapValues(_.length).toMap
-    val batch = Funnel.conversion(raw.toDF("user_id", "ts", "event_type"),
-        "user_id", "ts", "event_type", steps, 86400L)
-      .select($"step_idx", $"n_users").as[(Int, Long)].collect().toMap
-    (1 to 3).foreach { i =>
-      assert(adv.getOrElse(i, 0).toLong == batch(i),
-        s"step $i: stream ${adv.get(i)} vs batch ${batch(i)}")
-    }
-  }
-
   test("multiTouchLinear: equal split among in-window touches only") {
     val conv = Seq(
       (1L, 100L, 900L, 10.0),  // two touches in (50, 100] → 5.0 each

@@ -31,20 +31,17 @@ class RecoverySpec extends SparkTestBase {
     }
   }
 
-  private def forceDistributed[A](body: => A): A = {
-    val key = "spark.graft.closure.localMaxEdges"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "0")
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  /** `connectedComponents`' above-threshold branch: star contraction,
+    * the pin-heavy route the recovery claim is about (the small test
+    * graphs would otherwise close on the driver).
+    */
+  private def distributedClosure(edges: DataFrame,
+                                 reliable: Boolean): DataFrame =
+    Components.connectedComponents(edges, "a", "b", reliable,
+      localMaxEdges = 0L)
 
   private def chainGraph(n: Long): DataFrame = {
-    // a path graph: diameter n-1, so hash-min hands off to star
-    // contraction — the pin-heavy route the recovery claim is about
+    // a path graph (diameter n-1) plus a few random chords
     val rnd = new scala.util.Random(11)
     spark.range(n - 1).select($"id".as("a"), ($"id" + 1).as("b"))
       .union(Seq.fill(64)((rnd.nextLong(n), rnd.nextLong(n)))
@@ -68,20 +65,17 @@ class RecoverySpec extends SparkTestBase {
   }
 
   test("star-contraction closure reliable=true survives losing every pinned block") {
-    forceDistributed {
-      withTempDir("graft_recovery_cc") { dir =>
-        spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
-        val labels = Components.connectedComponents(chainGraph(3000L),
-          "a", "b", reliable = true)
-        val before = labels.as[(Long, Long)].collect().toMap
-        assert(before.values.forall(_ == 0L),
-          "chain connects everything to component 0")
-        killPinnedBlocks(labels)
-        val after = labels.as[(Long, Long)].collect().toMap
-        assert(after == before,
-          "reliable closure must re-read its labels from the " +
-            "checkpoint directory after block loss")
-      }
+    withTempDir("graft_recovery_cc") { dir =>
+      spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
+      val labels = distributedClosure(chainGraph(3000L), reliable = true)
+      val before = labels.as[(Long, Long)].collect().toMap
+      assert(before.values.forall(_ == 0L),
+        "chain connects everything to component 0")
+      killPinnedBlocks(labels)
+      val after = labels.as[(Long, Long)].collect().toMap
+      assert(after == before,
+        "reliable closure must re-read its labels from the " +
+          "checkpoint directory after block loss")
     }
   }
 
@@ -110,20 +104,17 @@ class RecoverySpec extends SparkTestBase {
   }
 
   test("localCheckpoint default is irrecoverable after block loss (the documented trade)") {
-    forceDistributed {
-      // contrast direction: the local path's pinned rounds live ONLY in
-      // executor blocks with truncated lineage — losing them must fail
-      // the recompute rather than silently return something wrong
-      val labels = Components.connectedComponents(chainGraph(3000L),
-        "a", "b", reliable = false)
-      labels.count() // fully computed once
-      killPinnedBlocks(labels)
-      val e = intercept[Exception] { labels.count() }
-      val msgs = Iterator.iterate(e: Throwable)(_.getCause)
-        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
-      assert(msgs.contains("Checkpoint block") ||
-             msgs.contains("checkpoint"),
-        s"expected the documented checkpoint-block failure, got: $msgs")
-    }
+    // contrast direction: the local path's pinned rounds live ONLY in
+    // executor blocks with truncated lineage — losing them must fail
+    // the recompute rather than silently return something wrong
+    val labels = distributedClosure(chainGraph(3000L), reliable = false)
+    labels.count() // fully computed once
+    killPinnedBlocks(labels)
+    val e = intercept[Exception] { labels.count() }
+    val msgs = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(msgs.contains("Checkpoint block") ||
+           msgs.contains("checkpoint"),
+      s"expected the documented checkpoint-block failure, got: $msgs")
   }
 }

@@ -70,27 +70,33 @@ class StreamingRecoverySpec extends SparkTestBase {
       val flag = new File(root, "poison.flag")
       flag.createNewFile()
 
-      import StatefulSessions.Event
+      import StatefulSessions.TsEvent
+      // event times offset from epoch 0 (a ts EQUAL to the initial 0-ms
+      // watermark is filtered as late); a watermark delay longer than
+      // the span keeps the watermark at 0, so no event-time timeout
+      // fires and sessions close only on a gap break.
+      def ts(s: Long) = new Timestamp((1000L + s) * 1000L)
       // gap=10; in-order across files so the result is batch-split-
       // independent. key 1 closes [0,5] then [30,35]; key 2 closes
       // [0,0]; the final open sessions (60; 100; poison 999) stay open
-      // (NoTimeout) and are never emitted — same as a clean run.
+      // and are never emitted — same as a clean run.
       writeInputFile(in, "e0.parquet",
-        Seq(Event(1L, 0L), Event(1L, 5L), Event(2L, 0L)).toDF(),
-        1000000L)
+        Seq(TsEvent(1L, ts(0)), TsEvent(1L, ts(5)), TsEvent(2L, ts(0)))
+          .toDF(), 1000000L)
       writeInputFile(in, "e1.parquet",
-        Seq(Event(1L, 30L), Event(999L, 31L), Event(1L, 35L)).toDF(),
-        2000000L)
+        Seq(TsEvent(1L, ts(30)), TsEvent(999L, ts(31)), TsEvent(1L, ts(35)))
+          .toDF(), 2000000L)
       writeInputFile(in, "e2.parquet",
-        Seq(Event(1L, 60L), Event(2L, 100L)).toDF(), 3000000L)
+        Seq(TsEvent(1L, ts(60)), TsEvent(2L, ts(100))).toDF(), 3000000L)
 
       val schema = StructType(Seq(StructField("key", LongType),
-        StructField("t", LongType)))
+        StructField("ts", TimestampType)))
       def startQuery(trigger: Option[Trigger]) = {
         val src = Streams.fileSource(spark, in.getAbsolutePath, schema,
-          maxFilesPerTrigger = 1).as[Event]
-        val sess = StatefulSessions.sessionize(
-          poisoned[Event](src, _.key == 999L, flag), gap = 10L)
+          maxFilesPerTrigger = 1).as[TsEvent]
+        val sess = StatefulSessions.sessionizeWithTimeout(
+          poisoned[TsEvent](src, _.key == 999L, flag),
+          gapSeconds = 10L, watermarkDelay = "365 days")
         val w = sess.writeStream.format("parquet")
           .option("path", sink).option("checkpointLocation", chk)
           .outputMode("append")
@@ -117,8 +123,8 @@ class StreamingRecoverySpec extends SparkTestBase {
       // exactly-once: no duplicates from the replayed batch
       assert(got.size == got.distinct.size,
         s"duplicate sessions after recovery: $got")
-      assert(got.toSet == Set((1L, 0L, 5L, 2L), (1L, 30L, 35L, 2L),
-        (2L, 0L, 0L, 1L)))
+      assert(got.toSet == Set((1L, 1000L, 1005L, 2L), (1L, 1030L, 1035L, 2L),
+        (2L, 1000L, 1000L, 1L)))
     }
   }
 

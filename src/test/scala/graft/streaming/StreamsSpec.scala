@@ -44,18 +44,26 @@ class StreamsSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  /** A watermark delay longer than every test's event-time span: the
+    * watermark stays at 0, so no event is dropped as late and no
+    * event-time timeout fires — sessions close only on a gap break.
+    */
+  private val noTimeout = "365 days"
+
   test("stateful sessionize: cross-batch state, emits on gap break") {
     implicit val sq = spark.sqlContext
     import StatefulSessions._
-    val in = MemoryStream[Event]
-    val out = StatefulSessions.sessionize(in.toDS(), gap = 30L)
+    val in = MemoryStream[TsEvent]
+    val out = StatefulSessions.sessionizeWithTimeout(in.toDS(),
+      gapSeconds = 30L, watermarkDelay = noTimeout)
     val q = out.writeStream.format("memory").queryName("statesess")
       .outputMode("append").start()
     try {
-      in.addData(Event(1L, 10L), Event(1L, 20L), Event(2L, 7L))
+      in.addData(TsEvent(1L, ts(10)), TsEvent(1L, ts(20)),
+        TsEvent(2L, ts(7)))
       q.processAllAvailable()
       assert(spark.table("statesess").count() == 0) // sessions still open
-      in.addData(Event(1L, 2000L)) // closes (10,20) across batches
+      in.addData(TsEvent(1L, ts(2000))) // closes (10,20) across batches
       q.processAllAvailable()
       val rows = spark.table("statesess")
         .as[Session].collect().toSet
@@ -66,20 +74,23 @@ class StreamsSpec extends SparkTestBase {
   test("stateful sessionize: too-late events become own sessions, not merged") {
     implicit val sq = spark.sqlContext
     import StatefulSessions._
-    val in = MemoryStream[Event]
-    val out = StatefulSessions.sessionize(in.toDS(), gap = 30L)
+    val in = MemoryStream[TsEvent]
+    val out = StatefulSessions.sessionizeWithTimeout(in.toDS(),
+      gapSeconds = 30L, watermarkDelay = noTimeout)
     val q = out.writeStream.format("memory").queryName("latesess")
       .outputMode("append").start()
     try {
-      in.addData(Event(1L, 10000L))
+      in.addData(TsEvent(1L, ts(10000)))
       q.processAllAvailable()
-      in.addData(Event(1L, 100L), Event(1L, 110L)) // far before open start
+      // far before open start
+      in.addData(TsEvent(1L, ts(100)), TsEvent(1L, ts(110)))
       q.processAllAvailable()
       val rows = spark.table("latesess").as[Session].collect().toSet
       // stragglers gap-merge together and emit immediately; the open
       // session (start 10000) must NOT absorb them
       assert(rows == Set(Session(1L, 100L, 110L, 2L)))
-      in.addData(Event(1L, 99999L)) // closes the open session untouched
+      // closes the open session untouched
+      in.addData(TsEvent(1L, ts(99999)))
       q.processAllAvailable()
       val rows2 = spark.table("latesess").as[Session].collect().toSet
       assert(rows2.contains(Session(1L, 10000L, 10000L, 1L)))
