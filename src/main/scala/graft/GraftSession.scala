@@ -141,6 +141,19 @@ object GraftSession {
       // sessions share one loader and one codegen cache.
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // the engine's own `file:` filesystem (LocalFs.scala). Without
+      // libhadoop, Hadoop's local filesystem starts a `chmod` process
+      // for every file and directory it creates and a `readlink`
+      // process inside every FileContext rename — the atomic commit of
+      // each streaming offset, commit and state-store changelog file:
+      // 1,878 processes over one iter_stream benchmark run, and traced
+      // `stream.state_commit_ms` 252 ms against 25 ms without them
+      // (4 vCPUs). NioLocalFileSystem makes both calls with java.nio,
+      // with Hadoop's results. Hadoop caches one `file:` filesystem per
+      // JVM: the first `FileSystem.get` for `file:` fixes its class, so
+      // one built from a plain Configuration before this session keeps
+      // Hadoop's.
+      .config(LocalFs.fileSystemConf.toMap)
 
   /** Read one of the driver-provided parquet tables from an sf directory,
     * with the event-time column normalized (see [[normalizeEventTime]]).

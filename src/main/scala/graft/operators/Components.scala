@@ -131,13 +131,14 @@ object Components {
     * truncated lineage cannot recompute freed blocks. Reliable-mode
     * rounds hold checkpoint FILES, not executor blocks — those stay
     * with the ContextCleaner (`cleanCheckpoints`, class doc), so this
-    * is a no-op for them.
+    * is a no-op for them. Quietly: a plain `RDD.unpersist` logs a
+    * lineage-truncated WARN for every released round.
     */
   private[graft] def releasePin(df: DataFrame, reliable: Boolean,
                                 blocking: Boolean = false): Unit =
     if (!reliable) df.queryExecution.analyzed.collectLeaves().foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking)
+        org.apache.spark.GraftCoreBridge.unpersistQuietly(lr.rdd, blocking)
       case _ => ()
     }
 

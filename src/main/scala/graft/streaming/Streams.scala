@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -196,10 +197,12 @@ object Streams {
     // RUNTIME session conf — copy it so the clone keeps the engine's
     // settings (state-store provider, join state format, shuffle width)
     // in every environment, including test suites that configure a
-    // session over an existing context. Static confs refuse runtime
-    // set — skip them (they are shared anyway).
+    // session over an existing context. Static and core keys refuse
+    // runtime set with an AnalysisException — skip them (they are
+    // shared anyway); any other failure propagates rather than leave a
+    // clone with silently different settings.
     s.conf.getAll.foreach { case (k, v) =>
-      try c.conf.set(k, v) catch { case _: Throwable => () }
+      try c.conf.set(k, v) catch { case _: AnalysisException => () }
     }
     c.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     c

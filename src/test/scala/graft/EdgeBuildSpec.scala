@@ -124,4 +124,22 @@ class EdgeBuildSpec extends SparkTestBase {
     assert(sd.conf.get("spark.sql.streaming.join.stateFormatVersion") ==
       spark.conf.get("spark.sql.streaming.join.stateFormatVersion"))
   }
+
+  test("noEvictionDrainSession carries every modifiable key of its " +
+    "parent") {
+    val sd = streaming.Streams.noEvictionDrainSession(spark)
+    val own = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val probe = spark.newSession()
+    def refused(k: String, v: String): Boolean =
+      try { probe.conf.set(k, v); false }
+      catch { case _: org.apache.spark.sql.AnalysisException => true }
+    val parent = spark.conf.getAll - own
+    val missing = parent.filter { case (k, v) =>
+      sd.conf.getOption(k) != Some(v) && !refused(k, v)
+    }
+    assert(missing.isEmpty, s"clone lost modifiable keys: $missing")
+    LocalFs.fileSystemConf.foreach { case (k, v) =>
+      assert(parent.get(k).contains(v) && sd.conf.get(k) == v, k)
+    }
+  }
 }

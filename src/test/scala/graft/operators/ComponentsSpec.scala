@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class ComponentsSpec extends SparkTestBase {
   import spark.implicits._
@@ -70,6 +71,59 @@ class ComponentsSpec extends SparkTestBase {
     assert(got.length == 120 && got.forall(_._2 == 0L))
     val delta = spark.sparkContext.getPersistentRDDs.size - before
     assert(delta <= 8, s"expected released rounds, $delta RDDs still cached")
+  }
+
+  /** WARN-or-worse messages logged on this thread while `f` runs. */
+  private def warnsDuring(f: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val thread = Thread.currentThread.getName
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("graft-warn-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN) &&
+            e.getThreadName == thread)
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(app)
+    try f finally { root.removeAppender(app); app.stop() }
+    seen.asScala.toSeq
+  }
+
+  test("releasing a pin frees its blocks and logs no WARN") {
+    def pinned() = Components.pin(
+      spark.range(100).toDF("a"), reliable = false)
+    def rdds(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectLeaves().collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      }
+    val released = pinned()
+    val ids = rdds(released).map(_.id)
+    assert(ids.nonEmpty &&
+      ids.forall(spark.sparkContext.getPersistentRDDs.contains))
+    val warns = warnsDuring(
+      Components.releasePin(released, reliable = false, blocking = true))
+    assert(warns.isEmpty, s"release logged: $warns")
+    assert(!ids.exists(spark.sparkContext.getPersistentRDDs.contains))
+    // unpersisted as RDD.unpersist leaves it, checkpoint state restored
+    assert(rdds(released).forall(r => r.isCheckpointed &&
+      r.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE))
+    // the control: RDD.unpersist on the same kind of pin does warn, so
+    // the capture sees Spark's lineage-truncated WARN when it happens
+    val control = pinned()
+    val controlWarns = warnsDuring(
+      control.queryExecution.analyzed.collectLeaves().foreach {
+        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          lr.rdd.unpersist(blocking = true)
+        case _ => ()
+      })
+    assert(controlWarns.exists(_.contains("locally checkpointed")),
+      s"capture saw: $controlWarns")
   }
 
   test("duplicateClusters keeps singletons and sizes the classes") {
