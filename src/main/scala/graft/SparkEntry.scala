@@ -4678,9 +4678,8 @@ object SparkEntry {
         .where(col("value") > 50)
         .select(col("event_id"), col("user_id"),
           round(col("value"), 6).as("value"))
-      val query = graft.streaming.Streams.drainToFiles(stream, out, ckpt)
-        .start()
-      try query.awaitTermination() finally query.stop()
+      graft.streaming.Streams.awaitDrain(
+        graft.streaming.Streams.drainToFiles(stream, out, ckpt).start())
       s.read.parquet(out).orderBy(col("event_id"))
     }),
 

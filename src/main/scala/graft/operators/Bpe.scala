@@ -37,26 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object Bpe {
 
-  /** Round pinning rides the [[Components]] machinery: `reliable =
-    * false` (default) uses executor-local checkpoints — fast, but a
-    * lost executor loses the run; `reliable = true` writes rounds to
-    * the context checkpoint directory (must be set), so a
-    * thousands-of-merges training job on a real cluster survives
-    * executor loss the same way the closure/pagerank loops do.
-    */
-  private def pin(df: DataFrame, reliable: Boolean): DataFrame =
-    Components.pin(df, reliable)
-
-  /** Superseded rounds' blocks are freed eagerly (the [[Components]]
-    * release discipline) — `nMerges` can be thousands and each round's
-    * dead symbol table would otherwise wait on the ContextCleaner's GC
-    * cadence. Only ever called on the PREVIOUS round's state after the
-    * next round's eager pin has materialized; the `best` frames stay
-    * cached (the final merge table unions them).
-    */
-  private def release(df: DataFrame, reliable: Boolean): Unit =
-    Components.releasePin(df, reliable)
-
   /** The word-frequency table BPE trains on: whitespace tokens of the
     * normalized text, counted corpus-wide (the one corpus-sized job).
     */
@@ -71,39 +51,48 @@ object Bpe {
     * table (pinned). The caller owns releasing whichever half its
     * output does not reference ([[bpeMerges]] keeps the winners,
     * [[encodedVocab]] keeps the state).
+    *
+    * Rounds pin through [[Components.pin]]: `reliable = false` uses
+    * executor-local checkpoints (a lost executor loses the run),
+    * `reliable = true` writes rounds to the context checkpoint
+    * directory (must be set). Each superseded symbol table is freed
+    * eagerly with [[Components.releasePin]] once the next round's pin
+    * has materialized — `nMerges` can be thousands, and dead tables
+    * would otherwise wait on the ContextCleaner's GC cadence.
     */
   private def trainLoop(words: DataFrame, wordCol: String, freqCol: String,
                         nMerges: Int, reliable: Boolean)
       : (Seq[DataFrame], DataFrame) = {
     require(nMerges >= 1, "need at least one merge round")
-    def pin2(df: DataFrame): DataFrame = pin(df, reliable)
-    def release2(df: DataFrame): Unit = release(df, reliable)
     // initial state: one row per (word, char position). The
     // length > 0 guard matters: Spark's sequence(start, stop) COUNTS
     // DOWN when start > stop, so an empty word would yield positions
     // [1, 0] — two phantom empty-string symbols whose ("","") pair
     // could win a merge round. The reference algorithm sees no pair
     // at all for an empty word.
-    var state = pin2(words
+    var state = Components.pin(words
       .select(col(wordCol).as("word"), col(freqCol).as("freq"))
       .where(length(col("word")) > 0)
       .select(col("word"), col("freq"),
         posexplode(transform(sequence(lit(1), length(col("word"))),
           i => col("word").substr(i, lit(1)))).as(Seq("_p", "sym")))
       .select(col("word"), col("freq"),
-        (col("_p") + 1).cast("int").as("pos"), col("sym")))
+        (col("_p") + 1).cast("int").as("pos"), col("sym")), reliable)
     val wWin = Window.partitionBy(col("word")).orderBy(col("pos"))
     val bests = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var round = 0
     var exhausted = false
     while (round < nMerges && !exhausted) {
       val withNext = state.withColumn("nxt", lead(col("sym"), 1).over(wWin))
-      val best = pin2(withNext.where(col("nxt").isNotNull)
+      val best = Components.pin(withNext.where(col("nxt").isNotNull)
         .groupBy(col("sym").as("a"), col("nxt").as("b"))
         .agg(sum(col("freq")).as("cnt"))
         .orderBy(desc("cnt"), asc("a"), asc("b"))
-        .limit(1))
-      if (best.isEmpty) { exhausted = true; release2(best) }
+        .limit(1), reliable)
+      if (best.isEmpty) {
+        exhausted = true
+        Components.releasePin(best, reliable)
+      }
       else {
         bests += best.select(lit(round + 1).as("merge_rank"),
           col("a").as("left_sym"), col("b").as("right_sym"),
@@ -125,7 +114,7 @@ object Bpe {
           (col("pos") + 1).as("pos"), lit(1).as("_drop"))
         val mergedSym = best.select(concat(col("a"), col("b")).as("_msym"))
         val prev = state
-        state = pin2(state
+        state = Components.pin(state
           .join(hit, Seq("word", "pos"), "left")
           .join(absorbed, Seq("word", "pos"), "left")
           .where(col("_drop").isNull)
@@ -134,8 +123,8 @@ object Bpe {
             when(col("_hit") === 1, col("_msym")).otherwise(col("sym")))
           .withColumn("_npos", row_number().over(wWin).cast("int"))
           .select(col("word"), col("freq"), col("_npos").as("pos"),
-            col("_sym2").as("sym")))
-        release2(prev) // next round's pin materialized; prev is dead
+            col("_sym2").as("sym")), reliable)
+        Components.releasePin(prev, reliable) // next pin materialized
       }
       round += 1
     }
@@ -152,7 +141,7 @@ object Bpe {
     val spark = words.sparkSession
     val (bests, state) = trainLoop(words, wordCol, freqCol, nMerges,
       reliable)
-    release(state, reliable) // the merge table unions `bests` only
+    Components.releasePin(state, reliable) // merge table unions bests
     if (bests.isEmpty) {
       import org.apache.spark.sql.types._
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -182,7 +171,7 @@ object Bpe {
                    nMerges: Int, reliable: Boolean = false): DataFrame = {
     val (bests, state) = trainLoop(words, wordCol, freqCol, nMerges,
       reliable)
-    bests.foreach(release(_, reliable)) // encoding references state only
+    bests.foreach(Components.releasePin(_, reliable)) // state suffices
     state.groupBy(col("word"))
       .agg(count(lit(1)).cast("long").as("n_syms"),
         array_join(

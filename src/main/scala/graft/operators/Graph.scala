@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -21,6 +22,9 @@ import org.apache.spark.storage.StorageLevel
   * job submission, no per-round AQE session. Lineage stays
   * O(iterations) by the fixed-count contract, and recovery rides
   * Spark's shuffle files (stage retry recomputes only the lost stage).
+  * The three PageRank forms share one round loop, [[walk]]; each keeps
+  * only its edge prep, its base table (uniform or seed restart) and the
+  * count that sizes it.
   * What pins: the multiply-scanned BASE tables (edge set / node
   * universe / restart vector) — pinned ONCE via [[Components.pin]]
   * (`reliable = true` for durable checkpoints), so the returned plan
@@ -66,7 +70,7 @@ object Graph {
     * Multi-edges collapse (simple graph); the node universe is every
     * id appearing as src or dst.
     *
-    * Scale design:
+    * Scale design (the rounds are [[walk]]'s):
     *  - The edge table is joined with out-degrees ONCE, pre-partitioned
     *    on src, and pinned — every round's contribution join reuses
     *    that partitioning; only the (small) rank table moves per round.
@@ -91,78 +95,22 @@ object Graph {
     // persisted: nodes, outdeg and linked all derive from the distinct
     // — uncached, each would re-pay the dedup shuffle. e itself is only
     // scanned at CONSTRUCTION (building nodes/linked/sinks), so a
-    // construction-scoped persist is the right lifetime.
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-              col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
+    // construction-scoped persist is the right lifetime ([[walk]]
+    // releases it).
+    val e = directed(edges, srcCol, dstCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // node universe in ONE scan of the pinned edge set via explode
-    // (q222's fusion, r18) — the two-scan union read the cached edges
-    // twice per materialization; same distinct id set either way.
-    // Pinned ONCE: every round's base join + the init rank table read
-    // it from the returned plan, after e is unpersisted
-    val nodes = Components.pin(
-      e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
-      reliable)
-    val n = nodes.count().toDouble // driver scalar, O(1) bytes
-    // outdeg attached by a count-over-window on the SAME src exchange
-    // that the pinned frame needs anyway (r18): the groupBy+join
-    // form exchanged the edge set once for the aggregate and once for
-    // the repartition (plus a broadcast build); the window form
-    // exchanges it ONCE and counts within the partition — identical
-    // rows, and the pinned partitioning (hash(src)) is unchanged,
-    // so every round's contribution join still moves only the ranks
-    val linked = Components.pin(e.repartition(col("src"))
-      .withColumn("outdeg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src")))),
-      reliable)
+    val (nodes, n, base) = uniformBase(e, damping, reliable)
+    val linked = outdegLinked(e, reliable)
     // sink ids (no out-edges) — only materialized when their mass is
     // redistributed; node-sized, one anti-join, reused every round
     val sinks =
       if (redistributeSinks)
         Some(Components.pin(nodes.join(
           e.select(col("src").as("id")).distinct(), Seq("id"), "left_anti"),
-          reliable))
+          reliable) -> n)
       else None
-
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("pr"))
-    for (r <- 1 to iterations) {
-      val contrib = linked
-        .join(ranks.select(col("id").as("src"), col("pr")), "src")
-        .select(col("dst").as("id"), (col("pr") / col("outdeg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("inmass"))
-      val base = nodes.join(contrib, Seq("id"), "left")
-      ranks = sinks match {
-        case None =>
-          base.select(col("id"),
-            (lit((1 - damping) / n) +
-             lit(damping) * coalesce(col("inmass"), lit(0.0))).as("pr"))
-        case Some(sk) =>
-          // dangling mass this round: one-row aggregate over the rank
-          // table, broadcast into every task. This is the recurrence's
-          // one DOUBLE reference to the previous round — both branches
-          // contain the identical subtree, so its exchanges collapse
-          // via ReuseExchange/AQE stage reuse and only the node-sized
-          // post-shuffle tail evaluates twice. The logical plan still
-          // doubles per round (2^iterations copies of round 1), so
-          // every SinkPinEvery-th round is pinned: the plan stays
-          // O(iterations) and short recurrences stay one lazy plan
-          val dm = ranks.join(sk, "id")
-            .agg(coalesce(sum(col("pr")), lit(0.0)).as("_dm"))
-          val stepped = base.crossJoin(broadcast(dm))
-            .select(col("id"),
-              (lit((1 - damping) / n) + lit(damping) *
-               (coalesce(col("inmass"), lit(0.0)) +
-                col("_dm") / lit(n))).as("pr"))
-          if (r % SinkPinEvery == 0 && r < iterations)
-            Components.pin(stepped, reliable)
-          else stepped
-      }
-    }
-    e.unpersist(false)
-    ranks
+    walk(e, linked, col("pr") / col("outdeg"), base, damping, iterations,
+      reliable, sinks)
   }
 
   /** WEIGHTED PageRank: each node splits its rank over out-edges
@@ -172,13 +120,10 @@ object Graph {
     * the unweighted walk ([[pageRank]]) flattens exactly the signal
     * the weights encode.
     *
-    * Same scale shape and lifecycle as [[pageRank]]: fixed rounds
-    * (oracle-unrollable), two O(|E|) shuffles per round, base tables
-    * (nodes, linked) pinned once via [[Components.pin]] and the rounds
-    * composed into one lazy plan, nothing collected but the node
-    * count. Weights must be positive integers
-    * (support counts); wout sums exactly, the ratio casts to double
-    * once per edge.
+    * Same scale shape and lifecycle as [[pageRank]] (the same
+    * [[walk]] over the same uniform base); only the edge prep
+    * differs. Weights must be positive integers (support counts); wout
+    * sums exactly, the ratio casts to double once per edge.
     */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                        weightCol: String, iterations: Int,
@@ -193,32 +138,105 @@ object Graph {
         col("w") > 0)
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // node universe in ONE scan of the pinned edge set via explode
-    // (q222's fusion, r18) — the two-scan union read the cached edges
-    // twice per materialization; same distinct id set either way
-    val nodes = Components.pin(
-      e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
-      reliable)
-    val n = nodes.count().toDouble // driver scalar, O(1) bytes
+    val (_, _, base) = uniformBase(e, damping, reliable)
     // wout via count-over-window on the one src exchange the pinned
-    // frame needs anyway — see [[pageRank]]'s linked build (r18)
+    // frame needs anyway — see [[outdegLinked]] (r18)
     val linked = Components.pin(e.repartition(col("src"))
-      .withColumn("wout", sum(col("w")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
+      .withColumn("wout", sum(col("w")).over(Window.partitionBy(col("src"))))
       .select(col("src"), col("dst"),
         (col("w").cast("double") / col("wout").cast("double"))
           .as("share")), reliable)
+    walk(e, linked, col("pr") * col("share"), base, damping, iterations,
+      reliable)
+  }
 
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("pr"))
-    for (_ <- 1 to iterations) {
+  /** The directed simple edge set (src, dst) of the unweighted walks
+    * and [[hits]]: long ids, null endpoints dropped, multi-edges
+    * collapsed. */
+  private def directed(edges: DataFrame, srcCol: String,
+                       dstCol: String): DataFrame =
+    edges
+      .select(col(srcCol).cast("long").as("src"),
+              col(dstCol).cast("long").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+      .distinct()
+
+  /** Node universe in ONE scan of an (src, dst) edge set via explode
+    * (q222's fusion, r18) — the two-scan union read the cached edges
+    * twice per materialization; same distinct id set either way. */
+  private def nodeIds(e: DataFrame): DataFrame =
+    e.select(explode(array(col("src"), col("dst"))).as("id")).distinct()
+
+  /** The uniform-restart walk base over `e`'s node universe: the pinned
+    * node table, N, and (id, rs = (1-d)/N, pr0 = 1/N). Nodes are
+    * pinned ONCE: every round's base join and the init rank table read
+    * them from the returned plan, after `e` is unpersisted. N is the
+    * walk family's one driver scalar for uniform restart. */
+  private def uniformBase(e: DataFrame, damping: Double, reliable: Boolean)
+      : (DataFrame, Double, DataFrame) = {
+    val nodes = Components.pin(nodeIds(e), reliable)
+    val n = nodes.count().toDouble // driver scalar, O(1) bytes
+    (nodes, n, nodes.select(col("id"), lit((1 - damping) / n).as("rs"),
+      lit(1.0 / n).as("pr0")))
+  }
+
+  /** (src, dst, outdeg), pinned. outdeg is attached by a count-over-
+    * window on the SAME src exchange that the pinned frame needs
+    * anyway (r18): the groupBy+join form exchanged the edge set once
+    * for the aggregate and once for the repartition (plus a broadcast
+    * build); the window form exchanges it ONCE and counts within the
+    * partition — identical rows, and the pinned partitioning
+    * (hash(src)) is unchanged, so every round's contribution join
+    * still moves only the ranks. */
+  private def outdegLinked(e: DataFrame, reliable: Boolean): DataFrame =
+    Components.pin(e.repartition(col("src"))
+      .withColumn("outdeg", count(lit(1)).over(
+        Window.partitionBy(col("src")))), reliable)
+
+  /** The PageRank family's one round loop:
+    * {{{ pr_{k+1}(v) = rs(v) + d * (Σ_{u→v} share_k(u→v) + dm_k/N) }}}
+    * over the pinned `linked` (src, dst, …) table and the base
+    * (id, rs, pr0), starting from pr0. `share` is one edge's part of
+    * its source's rank, over linked's columns and `pr`. The dm_k/N
+    * term exists only when `sinks` carries the pinned sink ids and N
+    * (see [[pageRank]]). `e`, the construction-scoped edge persist, is
+    * released once the bases are built. Returns (id, pr).
+    */
+  private def walk(e: DataFrame, linked: DataFrame, share: Column,
+                   base: DataFrame, damping: Double, iterations: Int,
+                   reliable: Boolean,
+                   sinks: Option[(DataFrame, Double)] = None): DataFrame = {
+    var ranks = base.select(col("id"), col("pr0").as("pr"))
+    for (r <- 1 to iterations) {
       val contrib = linked
         .join(ranks.select(col("id").as("src"), col("pr")), "src")
-        .select(col("dst").as("id"), (col("pr") * col("share")).as("c"))
+        .select(col("dst").as("id"), share.as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("inmass"))
-      ranks = nodes.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit((1 - damping) / n) +
-            lit(damping) * coalesce(col("inmass"), lit(0.0))).as("pr"))
+      val joined = base.join(contrib, Seq("id"), "left")
+      val inmass = coalesce(col("inmass"), lit(0.0))
+      ranks = sinks match {
+        case None =>
+          joined.select(col("id"),
+            (col("rs") + lit(damping) * inmass).as("pr"))
+        case Some((sk, n)) =>
+          // dangling mass this round: one-row aggregate over the rank
+          // table, broadcast into every task. This is the recurrence's
+          // one DOUBLE reference to the previous round — both branches
+          // contain the identical subtree, so its exchanges collapse
+          // via ReuseExchange/AQE stage reuse and only the node-sized
+          // post-shuffle tail evaluates twice. The logical plan still
+          // doubles per round (2^iterations copies of round 1), so
+          // every SinkPinEvery-th round is pinned: the plan stays
+          // O(iterations) and short recurrences stay one lazy plan
+          val dm = ranks.join(sk, "id")
+            .agg(coalesce(sum(col("pr")), lit(0.0)).as("_dm"))
+          val stepped = joined.crossJoin(broadcast(dm))
+            .select(col("id"), (col("rs") + lit(damping) *
+              (inmass + col("_dm") / lit(n))).as("pr"))
+          if (r % SinkPinEvery == 0 && r < iterations)
+            Components.pin(stepped, reliable)
+          else stepped
+      }
     }
     e.unpersist(false)
     ranks
@@ -248,18 +266,10 @@ object Graph {
                 k: Int, rounds: Int,
                 reliable: Boolean = false): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
-    val ec0 = edges
-      .select(col(srcCol).cast("long").as("s"),
-              col(dstCol).cast("long").as("d"))
-      .where(col("s").isNotNull && col("d").isNotNull &&
-             col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("u"),
-              greatest(col("s"), col("d")).as("v"))
-      .distinct()
     def degrees(e: DataFrame): DataFrame =
       e.select(explode(array(col("u"), col("v"))).as("id"))
         .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-    var cur = Components.pin(ec0, reliable)
+    var cur = Components.pin(undirected(edges, srcCol, dstCol), reliable)
     for (r <- 1 to rounds) {
       val keep = degrees(cur).where(col("deg") >= k).select(col("id"))
       val nextPlan = cur
@@ -302,19 +312,11 @@ object Graph {
     */
   def triangleCount(edges: DataFrame, srcCol: String, dstCol: String)
       : DataFrame = {
-    val ec = edges
-      .select(col(srcCol).cast("long").as("s"),
-              col(dstCol).cast("long").as("d"))
-      .where(col("s").isNotNull && col("d").isNotNull &&
-             col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("u"),
-              greatest(col("s"), col("d")).as("v"))
-      .distinct()
     // pinned (eager), NOT persist: a lazy persist here was a
     // session-lifetime CacheManager leak (nothing ever unpersisted it)
     // — the same class the r14 sweep closed elsewhere
     val out = triangleCountCanonical(
-      Components.pin(ec, reliable = false))
+      Components.pin(undirected(edges, srcCol, dstCol), reliable = false))
     out
   }
 
@@ -532,17 +534,8 @@ object Graph {
     // e is scanned TWICE PER ROUND (both half-steps) — pinned once so
     // the returned plan's rounds read checkpoint blocks, not a
     // recomputed dedup per scan
-    val e = Components.pin(edges
-      .select(col(srcCol).cast("long").as("src"),
-              col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct(), reliable)
-    // node universe in ONE scan of the pinned edge set via explode
-    // (q222's fusion, r18) — the two-scan union read the cached edges
-    // twice per materialization; same distinct id set either way
-    val nodes = Components.pin(
-      e.select(explode(array(col("src"), col("dst"))).as("id")).distinct(),
-      reliable)
+    val e = Components.pin(directed(edges, srcCol, dstCol), reliable)
+    val nodes = Components.pin(nodeIds(e), reliable)
     var hubs = nodes.select(col("id"), lit(1.0).as("hub"))
     var auths: DataFrame = null
     for (_ <- 1 to iterations) {
@@ -583,11 +576,11 @@ object Graph {
     * seeds). Sink mass leaves the system (pseudo-PPR), keeping the
     * recurrence oracle-unrollable.
     *
-    * SCALE SHAPE: identical to [[pageRank]] — pre-joined edge+outdeg
-    * table and restart vector pinned once, two shuffles per round, the
-    * rounds composed into one lazy plan; the seed indicator is a
-    * broadcast semi/left join, never a collect. Returns (id, ppr) over
-    * the node universe.
+    * SCALE SHAPE: [[pageRank]]'s [[walk]] with the restart vector as
+    * its base — pre-joined edge+outdeg table and restart vector pinned
+    * once, two shuffles per round, the rounds composed into one lazy
+    * plan; the seed indicator is a broadcast semi/left join, never a
+    * collect. Returns (id, ppr) over the node universe.
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
                            dstCol: String, seeds: DataFrame,
@@ -595,20 +588,11 @@ object Graph {
                            damping: Double = 0.85,
                            reliable: Boolean = false): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"),
-              col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
+    val e = directed(edges, srcCol, dstCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // node universe in ONE scan of the pinned edge set via explode
-    // (q222's fusion, r18) — the two-scan union read the cached edges
-    // twice per materialization; same distinct id set either way.
     // nodes feeds only the restart build, so a construction-scoped
     // persist suffices (the rounds reference restart)
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = nodeIds(e).persist(StorageLevel.MEMORY_AND_DISK)
     val seedIds = seeds.select(col(seedCol).cast("long").as("id"))
       .distinct()
     // restart vector: 1/|S| on seeds present in the graph, 0 elsewhere
@@ -616,33 +600,19 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nSeeds = s.count().toDouble // driver scalar, O(1) bytes
     require(nSeeds > 0, "no seed is a graph node")
-    // restart is read EVERY round (the base left-join) + as the init
-    // rank vector — pinned once
+    // the walk base (id, rs = (1-d)·s, pr0 = s) is read EVERY round
+    // (the base left-join) + as the init rank vector — pinned once
+    val sv = coalesce(col("_s"), lit(0.0))
     val restart = Components.pin(nodes
       .join(s.select(col("id"), lit(1.0 / nSeeds).as("_s")),
         Seq("id"), "left")
-      .select(col("id"), coalesce(col("_s"), lit(0.0)).as("s")), reliable)
-    // outdeg via count-over-window on the one src exchange the
-    // pinned frame needs anyway — see [[pageRank]]'s linked build
-    val linked = Components.pin(e.repartition(col("src"))
-      .withColumn("outdeg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src")))),
+      .select(col("id"), (lit(1 - damping) * sv).as("rs"), sv.as("pr0")),
       reliable)
-    var ranks = restart.select(col("id"), col("s").as("ppr"))
-    for (_ <- 1 to iterations) {
-      val contrib = linked
-        .join(ranks.select(col("id").as("src"), col("ppr")), "src")
-        .select(col("dst").as("id"), (col("ppr") / col("outdeg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("inmass"))
-      ranks = restart.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(1 - damping) * col("s") + lit(damping) *
-           coalesce(col("inmass"), lit(0.0))).as("ppr"))
-    }
-    e.unpersist(false)
     nodes.unpersist(false)
     s.unpersist(false)
-    ranks
+    walk(e, outdegLinked(e, reliable), col("pr") / col("outdeg"), restart,
+      damping, iterations, reliable)
+      .select(col("id"), col("pr").as("ppr"))
   }
 
   /** Adamic–Adar link prediction over an undirected simple graph:
@@ -667,18 +637,11 @@ object Graph {
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
                  maxDegree: Int): DataFrame = {
     require(maxDegree >= 2, "maxDegree must be >= 2")
-    val und0 = edges
-      .select(col(srcCol).cast("long").as("s"),
-              col(dstCol).cast("long").as("d"))
-      .where(col("s").isNotNull && col("d").isNotNull &&
-             col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("u"),
-              greatest(col("s"), col("d")).as("v"))
-      .distinct()
     // pinned (eager) — see clusteringCoefficient: the construction-time
     // persist/unpersist pair was a no-op; adjacency (x2), degrees, and
     // the known-edge anti-join each recomputed the dedup
-    val und = Components.pin(und0, reliable = false)
+    val und = Components.pin(undirected(edges, srcCol, dstCol),
+      reliable = false)
     // adjacency (both directions) + true degrees
     // both adjacency directions in ONE scan of the pinned edge set
     // (explode of the two orientations; was a two-scan union — r18)
@@ -703,7 +666,7 @@ object Graph {
   }
 
   /** Canonical undirected simple edges: (u < v), self-loops and
-    * duplicates dropped. Shared by the partition-quality metrics. */
+    * duplicates dropped. */
   private def undirected(edges: DataFrame, srcCol: String,
                          dstCol: String): DataFrame =
     edges.select(col(srcCol).cast("long").as("s"),

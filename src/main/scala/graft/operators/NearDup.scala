@@ -49,17 +49,6 @@ object NearDup {
       cached.foreach(Components.releasePin(_, reliable = false, blocking))
   }
 
-  /** Spread a (possibly few-partition) input across the cluster before
-    * CPU-heavy per-row derivation: a small parquet file arrives as ONE
-    * partition, which would serialize all hashing onto one core. The
-    * partition-count estimate comes from optimizer statistics (scan bytes
-    * / maxPartitionBytes) — NOT from `df.rdd.getNumPartitions`, which
-    * would force an RDD lineage conversion on the driver per call. Big
-    * inputs (est. splits ≥ shuffle partitions) pass through untouched, so
-    * at real scale this never shuffles.
-    */
-  private def spread(df: DataFrame): DataFrame = Spread(df)
-
   /** (id, fingerprint) → canonical id per duplicate class + class size.
     * Exact near-dup: identical *normalized* text collapses together.
     */
@@ -111,7 +100,7 @@ object NearDup {
   def shingleArrays(docs: DataFrame, idCol: String, extraCols: Seq[String],
                     textCol: String, n: Int): DataFrame = {
     val keep = col(idCol) +: extraCols.map(col)
-    spread(docs)
+    Spread(docs)
       .select(keep :+ tokens(col(textCol)).as("_toks"): _*)
       .select(keep :+
         array_distinct(call_function("graft_shingles", col("_toks"), lit(n)))
@@ -232,7 +221,7 @@ object NearDup {
     // come from exploding each kept shingle's sorted source set
     // directly (a < b by sort order) — the join-free form of the same
     // per-shingle df²/2 fan-in, output-bound exactly like the join.
-    val perShingle = spread(docs)
+    val perShingle = Spread(docs)
       .select(col(sourceCol).as("source"),
         explode(wordShingles(col(textCol), n)).as("shingle"))
       .groupBy(col("shingle"))
@@ -288,7 +277,7 @@ object NearDup {
                        maxDf: Int = 0): DataFrame = {
     // raw token rows, NOT shingleRows: shingle sets are per-doc
     // DISTINCT, which would erase the term-frequency half of TF-IDF
-    val tf = spread(docs)
+    val tf = Spread(docs)
       .select(col(idCol).as("id"), col(blockCol).as("blk"),
         explode(tokens(col(textCol))).as("token"))
       .where(col("token") =!= "")
@@ -458,7 +447,7 @@ object NearDup {
     val neighborhood =
       if (maxDist >= 2) array_union(array_union(array(s), del1), del2)
       else array_union(array(s), del1)
-    val keys = spread(df)
+    val keys = Spread(df)
       .select(col(blockCol).as("blk"), col(idCol).as("id"),
         col(strCol).as("_s"))
       .select(col("blk"), col("id"), col("_s"),
@@ -700,7 +689,7 @@ object NearDup {
     // native per-row call (graft.functions.WinnowKernel) — the
     // composable transform/array_min/slice form pays two interpreted
     // lambdas per element on the dedup hot path
-    spread(docs)
+    Spread(docs)
       .select(keep :+ tokens(col(textCol)).as("_toks"): _*)
       .select(keep :+
         call_function("graft_winnow", col("_toks"), lit(k), lit(w))
@@ -852,7 +841,7 @@ object NearDup {
     * reproduces them without 64-bit shifts.
     */
   def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val withSig = spread(docs).select(col(idCol),
+    val withSig = Spread(docs).select(col(idCol),
       call_function("graft_simhash", tokens(col(textCol))).as("_sig"))
     val bands = (0 to 3).map { j =>
       shiftright(col("_sig"), 16 * j).bitwiseAND(lit(0xffffL))
@@ -916,7 +905,7 @@ object NearDup {
   def repeatedSpans(docs: DataFrame, idCol: String, textCol: String,
                     n: Int, minDf: Long): DataFrame = {
     require(n >= 2 && minDf >= 2, "need n ≥ 2 and minDf ≥ 2")
-    val grams = spread(docs)
+    val grams = Spread(docs)
       .select(col(idCol), tokens(col(textCol)).as("_t"))
       .where(size(col("_t")) >= n) // guard: sequence(1, m≤0) counts DOWN
       .select(col(idCol),
@@ -1085,7 +1074,7 @@ object NearDup {
     // frame is dropped), not session-lifetime CacheManager entries
     // nothing ever releases.
     val idxSig = Components.pin(
-      spread(index)
+      Spread(index)
         .select(call_function("graft_simhash", tokens(col(textCol)))
           .as("_isig")),
       reliable = false)

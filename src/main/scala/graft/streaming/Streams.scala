@@ -4,7 +4,8 @@ import org.apache.spark.sql.{AnalysisException, Column, DataFrame,
   SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  Trigger}
 import org.apache.spark.sql.Row
 
 /** Structured-Streaming equivalents of the reference's micro-batch input
@@ -237,9 +238,20 @@ object Streams {
       .outputMode(outputMode)
       .trigger(Trigger.AvailableNow())
       .start()
-    try query.awaitTermination() finally query.stop()
+    awaitDrain(query)
     df.sparkSession.table(queryName)
   }
+
+  /** Waits for a started AvailableNow drain to end, then stops it only
+    * if it is still active (it is not after a normal end, but it is
+    * when the wait is interrupted). `awaitTermination` returns once the
+    * query is TERMINATED, possibly before its execution thread exits;
+    * `stop()` on such a query cancels its finished job group twice, and
+    * Spark logs a "Failed to cancel job group" WARN for each. A failed
+    * query's exception propagates.
+    */
+  def awaitDrain(query: StreamingQuery): Unit =
+    try query.awaitTermination() finally if (query.isActive) query.stop()
 
   /** Drain-then-stop FILE sink — the production output shape: parquet
     * part files plus a checkpoint directory, giving exactly-once output

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 class ComponentsSpec extends SparkTestBase {
   import spark.implicits._
@@ -71,28 +70,6 @@ class ComponentsSpec extends SparkTestBase {
     assert(got.length == 120 && got.forall(_._2 == 0L))
     val delta = spark.sparkContext.getPersistentRDDs.size - before
     assert(delta <= 8, s"expected released rounds, $delta RDDs still cached")
-  }
-
-  /** WARN-or-worse messages logged on this thread while `f` runs. */
-  private def warnsDuring(f: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val thread = Thread.currentThread.getName
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val app = new AbstractAppender("graft-warn-capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel.isMoreSpecificThan(Level.WARN) &&
-            e.getThreadName == thread)
-          seen.add(e.getMessage.getFormattedMessage)
-    }
-    app.start()
-    val root = LogManager.getRootLogger.asInstanceOf[Logger]
-    root.addAppender(app)
-    try f finally { root.removeAppender(app); app.stop() }
-    seen.asScala.toSeq
   }
 
   test("releasing a pin frees its blocks and logs no WARN") {

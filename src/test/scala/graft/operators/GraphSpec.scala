@@ -283,6 +283,29 @@ class GraphSpec extends SparkTestBase {
     assert(math.abs(two(2L) - 0.85) < 1e-12)
   }
 
+  test("personalizedPageRank with every node a seed equals pageRank") {
+    // s(v) = 1/N everywhere makes the restart uniform: the two forms
+    // differ only in rounding ((1-d)·(1/N) against (1-d)/N)
+    val edges = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L),
+      (3L, 4L), (5L, 4L)).toDF("src", "dst")
+    val pr = Graph.pageRank(edges, "src", "dst", 5)
+      .as[(Long, Double)].collect().toMap
+    val ppr = Graph.personalizedPageRank(edges, "src", "dst",
+        (1L to 5L).toDF("seed"), "seed", 5)
+      .as[(Long, Double)].collect().toMap
+    assert(ppr.keySet == pr.keySet && pr.size == 5)
+    pr.foreach { case (v, x) =>
+      assert(math.abs(ppr(v) - x) < 1e-12, s"node $v") }
+  }
+
+  test("personalizedPageRank: no seed in the graph fails by name") {
+    val err = intercept[IllegalArgumentException] {
+      Graph.personalizedPageRank(Seq((1L, 2L)).toDF("src", "dst"),
+        "src", "dst", Seq(7L, 8L).toDF("seed"), "seed", 2)
+    }
+    assert(err.getMessage.contains("no seed is a graph node"))
+  }
+
   test("adamicAdar: path scores the missing link, adjacents excluded") {
     // path 1–2–3 plus triangle 4–5, 5–6, 4–6:
     //  (1,3) share neighbor 2 (deg 2) → aa = 1/ln 2, NOT adjacent ✓

@@ -178,8 +178,7 @@ class StreamsSpec extends SparkTestBase {
       def drain(): Unit = {
         val stream = Streams.fileSource(spark, in, schema)
           .where($"v" % 2 === 0)
-        val q = Streams.drainToFiles(stream, out, ckpt).start()
-        try q.awaitTermination() finally q.stop()
+        Streams.awaitDrain(Streams.drainToFiles(stream, out, ckpt).start())
       }
       drain()
       val first = spark.read.parquet(out).as[Long].collect().sorted.toSeq
@@ -189,6 +188,30 @@ class StreamsSpec extends SparkTestBase {
       drain()
       val second = spark.read.parquet(out).as[Long].collect().sorted.toSeq
       assert(second == first, "restart re-emitted committed data")
+    }
+  }
+
+  test("memory and file drains log no job-group cancel WARN") {
+    // stop() on a drain that has already ended cancels its finished
+    // job group twice, and the DAGScheduler logs a WARN on its own
+    // event-loop thread for each — hence the all-threads capture
+    withTempDir("graft_drainwarn") { dir =>
+      val in = dir.getAbsolutePath + "/in"
+      (1L to 100L).toDF("v").coalesce(1).write.parquet(in)
+      val stream = Streams.fileSource(spark, in,
+          spark.read.parquet(in).schema)
+        .where($"v" % 2 === 0)
+      val warns = warnsDuring({
+        val mem = Streams.drainToMemory(stream, "drain_warn_mem", "append")
+        assert(mem.count() == 50L)
+        Streams.awaitDrain(Streams.drainToFiles(stream,
+          dir.getAbsolutePath + "/out", dir.getAbsolutePath + "/ckpt")
+          .start())
+        assert(spark.read.parquet(dir.getAbsolutePath + "/out").count()
+          == 50L)
+      }, allThreads = true)
+      val cancels = warns.filter(_.contains("Failed to cancel job group"))
+      assert(cancels.isEmpty, s"drains logged: $cancels")
     }
   }
 
